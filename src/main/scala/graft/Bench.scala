@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   // Digest sink so the JIT can never elide the timed loop. Atomic: the
   // multi-core witness runs cpuMicrobench from up to 16 threads at once,
@@ -55,7 +54,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Median-of-N per query (default 3): the r3 record was captured in a
     // noisy host window that inflated the long shuffle-heavy queries
     // 2-4x; a per-query median discards a one-off slow rep instead of
@@ -119,95 +117,9 @@ object Bench {
     val fullOut = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL_OUT",
         sys.props("user.dir") + "/scripts/bench_last.json"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // UTC pinned everywhere (Verify, tests, here): the events NTZ
-      // normalization and the DuckDB oracles both assume it.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Shuffle/blockmgr scratch on the fast local tier (r15, guide §6;
-      // Spark docs: local.dir "should be on a fast, local disk").
-      // Scratch resolves $SPARK_GRAFT_SCRATCH > /dev/shm > tmpdir — on
-      // this host /tmp is a co-tenant-contended virtual disk whose
-      // latency bursts were measured inflating stream rows 2-4x
-      // (Scratch.scala scaladoc). Production: point the env var at the
-      // executor-local NVMe volume.
-      .config("spark.local.dir",
-        graft.queries.Scratch.root.resolve("spark-local").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Fail fast and loud if the driver regenerated testdata with new
-    // column types (the round-4 events drift cost 35 queries).
-    graft.queries.Tables.check(spark, sfDir)
-    // Warm the session (executor threads, codegen compiler, shuffle
-    // machinery) so the first measured query isn't charged ~4s of JVM
-    // startup that every later query gets for free.
-    spark.range(2000000).selectExpr("sum(id)").collect()
-    spark.range(100000).selectExpr("id % 97 AS k", "id AS v")
-      .groupBy("k").count().count()
-    // Touch every input table once (footer reads, Hadoop FS init, OS
-    // page cache) so those one-time costs aren't charged to whichever
-    // query happens to run first — in earlier rounds that randomly
-    // inflated one query by ~6s when Map ordering shifted. nanosAsLong:
-    // events.ts is TIMESTAMP(NANOS), unreadable otherwise (see Tables).
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    java.nio.file.Files.list(java.nio.file.Paths.get(sfDir)).forEach { p =>
-      if (p.toString.endsWith(".parquet"))
-        spark.read.parquet(p.toString).count()
-    }
-    // Build the cross-query memoized tables (CC fixpoint assignments,
-    // co-purchase edge set, minhash LSH clusters) ONCE, timed as their
-    // own row: these are shared by several queries, so whichever ran
-    // first used to absorb the build cost — per-query rows were
-    // order-dependent (VERDICT r3 #7). The cost stays in the total
-    // under the `_shared_prewarm` key (underscore sorts first); every
-    // later row measures its OWN work and is stable across orderings
-    // and reps.
-    // Each memo gets its own timed row (VERDICT r4: the lumped 51.6s row
-    // hid which build grew round-over-round).
-    def timedBuild(name: String)(body: => Unit): (String, Double) = {
-      val t0 = System.nanoTime()
-      body
-      name -> (System.nanoTime() - t0) / 1e9
-    }
-    val prewarmRows = Seq(
-      timedBuild("_prewarm_cc_fixpoint") {
-        graft.queries.CCQueries.ccCopurchase(spark, sfDir).count() },
-      timedBuild("_prewarm_degree_memo") {
-        graft.queries.GraphQueries.all("graph_degree_hist")(spark, sfDir).count() },
-      timedBuild("_prewarm_minhash_clusters") {
-        graft.queries.DedupQueries.all("dedup_minhash_clusters")(spark, sfDir).count() },
-      timedBuild("_prewarm_cc_hq_base") {
-        graft.queries.GraphQueries.prewarmHqBases(spark, sfDir) },
-      timedBuild("_prewarm_graph_memos") {
-        graft.queries.GraphQueries.prewarmGraphMemos(spark, sfDir) },
-      timedBuild("_prewarm_percolation") {
-        graft.queries.CCQueries.prewarmPercolation(spark, sfDir) },
-      // r14: the dedup family's cross-query memo tables (token sets,
-      // trigram inverted index, minhash signatures, simhash
-      // fingerprints) — previously rebuilt inside every invocation of
-      // their ~7 reader queries; now one timed build, same accounting
-      // contract as the rows above (additive: no existing row renamed
-      // or removed).
-      // r14: the normalized embedding table (sim family + dedup ANN)
-      // and the geo point table — both byte-tiny single-task scans
-      // whose downstream vector/distance math serialized on one core;
-      // memoized core-spread checkpoints, timed here (additive rows).
-      // Ordered BEFORE the dedup row: the ANN pair memo built there
-      // reads the normalized table, so this keeps each row charged
-      // its own build.
-      timedBuild("_prewarm_sim_memos") {
-        graft.queries.SimilarityQueries.prewarmSimMemos(spark, sfDir) },
-      timedBuild("_prewarm_geo_memos") {
-        graft.queries.GeoQueries.prewarmGeoMemos(spark, sfDir) },
-      timedBuild("_prewarm_dedup_memos") {
-        graft.queries.DedupQueries.prewarmDedupMemos(spark, sfDir) },
-      // r15: the streaming rows' staged-replay input dirs (pure
-      // functions of (sf, tag), previously re-written per invocation by
-      // all nine staged queries). Additive row, same contract as above.
-      timedBuild("_prewarm_stream_stagings") {
-        graft.streaming.StreamingQueries.prewarmStagings(spark, sfDir) })
+    val spark = Harness.session(sfDir)
+    Harness.warmUp(spark, sfDir)
+    val prewarmRows = Harness.prewarm(spark, sfDir)
     // A failed query is recorded as -1 (visible in the JSON) and kept
     // out of the total — silently charging its elapsed time would make
     // a broken suite look fast.
@@ -271,7 +183,7 @@ object Bench {
     // truncation in the driver's parser.
     val fullJson =
       s"""{"metric":"bench_full","value":$total,"unit":"sec","reps":$reps,""" +
-      s""""n":${results.size},"failed":$nFailed,"cpus":"$cpus",""" +
+      s""""n":${results.size},"failed":$nFailed,"cpus":"${Harness.cpus}",""" +
       s""""wall_start":"$wallStart","wall_end":"${java.time.Instant.now().toString}",""" +
       s""""loadavg_start":"$loadStart","loadavg_end":"${loadavg()}",""" +
       f""""microbench_start_sec":$microStart%.4f,"microbench_end_sec":$microEnd%.4f,""" +

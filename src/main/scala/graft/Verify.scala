@@ -1,22 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Loud schema-drift guard: one actionable error naming table.column
-    // beats 35 queries failing with the same opaque analysis error.
-    graft.queries.Tables.check(spark, sfDir)
+    // The bench's session (Harness), so correctness is checked in the
+    // environment the bench times; it also fails loud on schema drift.
+    val spark = Harness.session(sfDir)
     new java.io.File(outDir).mkdirs()
     // Local-iteration filter: GRAFT_VERIFY_ONLY=name1,name2 restricts the
     // dump (and the oracle json) to those queries. Unset for driver runs.

@@ -33,20 +33,15 @@ object ConnectedComponents {
 
   final case class CCResult(assignments: DataFrame, converged: Boolean, iterations: Int)
 
-  /** The measured giant-run session preset ([[Tuning.recommended]]:
-    * rdd compression + zstd, ratio-derived AQE advisory size, frequent
-    * periodic GC), applied to a session BUILDER — two of the entries
-    * are SparkConf-level and silently ignore post-start changes.
-    * On the 10⁸-member single-component probe these settings were the
-    * difference between a 90 GB scratch-disk death and a ~34 GB pass,
-    * and between a 1 GB/core sort OOM and clean AQE coalescing
-    * (SCALE.md r11); see [[Tuning]] for the per-entry measurements.
+  /** The reference's stop rule (ConnectedComponent.scala:247-249): both
+    * change counts repeat the previous round's, or both are zero. With
+    * no previous round only the zero case can fire — the reference seeds
+    * `prev` with a 9999999 sentinel instead, so a first round whose
+    * counts both happened to equal it "converged" after one round.
     */
-  def configureForScale(
-      builder: org.apache.spark.sql.SparkSession.Builder): org.apache.spark.sql.SparkSession.Builder =
-    Tuning.configure(builder)
-
-  private val Sentinel = 9999999L // reference ConnectedComponent.scala:272
+  private[cc] def stopRule(prev: Option[(Long, Long)],
+                           large: Long, small: Long): Boolean =
+    prev.contains((large, small)) || (large == 0 && small == 0)
 
   /** The RDD behind a checkpointed Dataset (its analyzed plan is a
     * LogicalRDD leaf), so superseded round checkpoints can be freed
@@ -93,8 +88,7 @@ object ConnectedComponents {
     var pairs = edges.select(
       col("src").cast("bigint").as("src"),
       col("dst").cast("bigint").as("dst"))
-    var prevLarge = Sentinel
-    var prevSmall = Sentinel
+    var prev: Option[(Long, Long)] = None
     var converged = false
     var iter = 0
     // Handles persisted in iteration i stay alive until iteration i+1's
@@ -140,11 +134,8 @@ object ConnectedComponents {
       if (sys.env.contains("GRAFT_CC_VERBOSE"))
         System.err.println(f"[cc] iter=$iter large=$largeCount " +
           f"small=${ss.changeCount} ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      converged =
-        (largeCount == prevLarge && ss.changeCount == prevSmall) ||
-        (largeCount == 0 && ss.changeCount == 0)
-      prevLarge = largeCount
-      prevSmall = ss.changeCount
+      converged = stopRule(prev, largeCount, ss.changeCount)
+      prev = Some((largeCount, ss.changeCount))
       pairs = next
     }
     // Materialize the final checkpoint before releasing its inputs.
@@ -238,7 +229,7 @@ object ConnectedComponents {
       if (missing.nonEmpty)
         System.err.println(s"[cc] scale hint: $n edges but this session " +
           s"lacks the measured giant-run settings ${missing.mkString(", ")}" +
-          " — see graft.cc.Tuning / ConnectedComponents.configureForScale" +
+          " — see graft.cc.Tuning.configure" +
           " (apply on the SparkSession BUILDER; rdd compression and codec" +
           " cannot change after context start)")
     }

@@ -158,12 +158,6 @@ object StarOps {
       () => sumCnt(stats), Seq(dedup, stats))
   }
 
-  def largeStar(nodePairs: DataFrame): StarResult = {
-    val (dedup, stats) = persistBoth(symmetrize(nodePairs), largeStats)
-    StarResult(pairsOf(dedup, stats, largeKeep), sumCnt(stats),
-      Seq(dedup, stats))
-  }
-
   def smallStar(nodePairs: DataFrame): StarResult = {
     val oriented = nodePairs.select(
       greatest(col("src"), col("dst")).as("self"),

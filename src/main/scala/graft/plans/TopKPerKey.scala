@@ -28,8 +28,8 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
   * partitionBy(key).orderBy(...)) <= k`) plans a per-partition SORT
   * plus `WindowGroupLimit` pruning instead.
   *
-  * Measured domain of victory (tools.TopKProbe, 20M rows, k=3,
-  * local[32]): HOT KEYS. At 10 distinct keys the heap plan wins
+  * Measured domain of victory (SCALE.md "TopKPerKey vs the window
+  * idiom", 20M rows, k=3, local[32]): HOT KEYS. At 10 distinct keys the heap plan wins
   * 2.6-4.2x (0.8-0.96s vs 2.1-3.4s) — the window's local sort pays
   * O(n log n) on every partition while the heap scans in O(n log k)
   * and ships 960 rows. At 100k keys the two tie; at 2M keys
@@ -117,7 +117,8 @@ final case class TopKPerKeyExec(keys: Seq[Expression], order: Seq[SortOrder],
             throw new IllegalStateException(
               s"TopKPerKey: task saw more than $maxKeys distinct keys — " +
               "outside the operator's domain (few hot keys; see " +
-              "tools.TopKProbe). Use the window idiom " +
+              "SCALE.md \"TopKPerKey vs the window idiom\"). Use the " +
+              "window idiom " +
               "(row_number over partitionBy(key)) for high-cardinality " +
               s"keys, or raise ${TopKPerKey.MaxKeysConfKey}.")
           }

@@ -128,8 +128,9 @@ SELECT node, min(comp) AS component FROM walk GROUP BY node ORDER BY node
       // Weighted pairs via the streamed clique Generator instead of the
       // (o,p)⋈(o,p) self-join: one collect_set shuffle replaces the
       // join's shuffle of the full projection, and the O(k²) expansion
-      // runs inside codegen (GenProbe measured the Generator 3-4× the
-      // HOF form; the join form also re-shuffles every expanded row).
+      // runs inside codegen (the Generator measured 3-4× the HOF form,
+      // SCALE.md bench history round 3; the join form also re-shuffles
+      // every expanded row).
       // collect_set dedupes per order, so the per-order pair multiset —
       // and therefore w = #orders containing both parts — is identical
       // to the old distinct-then-join form.

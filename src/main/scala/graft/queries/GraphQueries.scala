@@ -38,7 +38,7 @@ object GraphQueries {
       val cliques = Tables.lineitem(s, d)
         .groupBy("l_orderkey")
         .agg(collect_set(col("l_partkey")).as("nodes"))
-      Pin(EdgeBuilder.cliqueEdgesGen(cliques) // streamed Generator: 3-4× the HOF form on this expansion (GenProbe)
+      Pin(EdgeBuilder.cliqueEdgesGen(cliques) // streamed Generator: 3-4× the HOF form on this expansion (SCALE.md bench history, round 3)
         .where(col("src") =!= col("dst"))
         .select(col("dst").as("u"), col("src").as("v")) // src>=dst ⇒ u<v
         .distinct())
@@ -806,7 +806,7 @@ ORDER BY node
     weightedMemo.computeIfAbsent((spark, sfDir), { case (s, d) =>
       // Streamed clique Generator instead of the self-join (same swap
       // as CCQueries.percWeighted — see its comment for the
-      // equivalence argument and the GenProbe measurement).
+      // equivalence argument and the Generator measurement).
       val cliques = Tables.lineitem(s, d)
         .groupBy("l_orderkey").agg(collect_set(col("l_partkey")).as("nodes"))
       Pin(EdgeBuilder.cliqueEdgesGen(cliques)
@@ -1427,8 +1427,8 @@ ORDER BY mass.p_brand
     affinityOn(undirectedEdges(spark, sfDir), allNodes(spark, sfDir))
 
   /** The affinity round over an explicit (u, v) edge table and node
-    * table — split from [[affinity]] so the scale probe
-    * (tools/BoruvkaProbe) can drive it on synthetic graphs.
+    * table — split from [[affinity]] so synthetic graphs can drive it
+    * (SCALE.md "mstOn / affinityOn at 10×").
     */
   private[graft] def affinityOn(e: DataFrame, nodesIn: DataFrame): DataFrame = {
     val w = (col("u") * 8191L + col("v") * 524287L) % 999983L
@@ -1710,8 +1710,8 @@ FROM m
     * Scale: every step is an equi-join keyed on (seed, node) — the
     * frontier is |seeds|·|reached| rows, so source count is the direct
     * cost/accuracy knob, and cost is LINEAR in it (Brandes is O(m) work
-    * per source — `tools.BetweennessProbe` measures 8/32/128 seeds →
-    * 7.3/21/~80s at sf0.1, per-seed marginal cost falling as the fixed
+    * per source — SCALE.md "betweenness seed scaling": 8/32/128 seeds
+    * → 7.3/21/~80s at sf0.1, per-seed marginal cost falling as the fixed
     * per-level scans amortize); the per-level anti-join and group-by
     * are map-side combinable. No driver state beyond the level counter.
     */
@@ -1719,7 +1719,8 @@ FROM m
     betweennessFrom(spark, sfDir, 8)
 
   /** Parametric core of [[betweenness]] — `nSeeds` is the cost/accuracy
-    * knob the scaladoc claims; `tools.BetweennessProbe` measures it.
+    * knob the scaladoc claims; SCALE.md "betweenness seed scaling"
+    * records its measured exchange rate.
     */
   private[graft] def betweennessFrom(spark: SparkSession, sfDir: String,
       nSeeds: Int): DataFrame = {
@@ -1764,8 +1765,8 @@ FROM m
     // level joins hand that bound to maybeBroadcast, so at the graded
     // seed count the (memoized, checkpointed) edge table never
     // reshuffles, while a large seeds·|V| product degrades to AQE-planned
-    // shuffle joins instead of a giant broadcast (BetweennessProbe
-    // measures the crossover). The level loop exits as soon as a BFS
+    // shuffle joins instead of a giant broadcast (SCALE.md
+    // "betweenness seed scaling"). The level loop exits as soon as a BFS
     // round adds nothing — an isEmpty probe on the just-checkpointed
     // frontier, so the radius bound (6) only caps the pathological case;
     // both engines apply the same bound.

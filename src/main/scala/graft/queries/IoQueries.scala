@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   */
 object IoQueries {
 
-  private def stageDir(sfDir: String, fmt: String): String =
+  private[graft] def stageDir(sfDir: String, fmt: String): String =
     java.nio.file.Paths.get(
       Scratch.root.toString, "graft_io",
       sfDir.replaceAll("[^A-Za-z0-9._-]", "_"), fmt).toString

@@ -47,22 +47,16 @@ private[queries] object Pin {
   * chains from driver threads lets the next build's tasks back-fill
   * executors freed by the current one's tail. FIFO scheduling keeps
   * the earlier chain ahead; at cluster scale the same overlap fills
-  * the same tails. Dependent builds stay ordered WITHIN a thread;
-  * cross-thread collisions on one memo key block in computeIfAbsent
+  * the same tails (same-window A/B against the sequential order:
+  * OPTIMIZATION_r14.md item 5, ≈6.9 s of prewarm). Dependent builds
+  * stay ordered WITHIN a thread; cross-thread collisions on one memo
+  * key block in computeIfAbsent
   * (one build, others wait) — never a duplicate or a wrong result.
   * The first failure is rethrown after all threads finish, so a broken
   * build fails the prewarm row exactly as the sequential form did.
   */
 private[graft] object Par {
-  /** `SPARK_GRAFT_SEQ_PREWARM=1` restores the old sequential order —
-    * the measurement A/B lever, and an escape hatch for a driver that
-    * must not submit concurrent jobs. */
-  private val sequential =
-    sys.env.get("SPARK_GRAFT_SEQ_PREWARM").contains("1")
-
-  def apply(thunks: (() => Unit)*): Unit = if (sequential) {
-    thunks.foreach(_())
-  } else {
+  def apply(thunks: (() => Unit)*): Unit = {
     val err = new java.util.concurrent.atomic.AtomicReference[Throwable]()
     val ts = thunks.map { t =>
       val th = new Thread(() =>

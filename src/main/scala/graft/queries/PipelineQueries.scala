@@ -1322,7 +1322,7 @@ FROM x GROUP BY lang ORDER BY lang
     * primitive "keep each source's k best documents", exercised in its
     * measured-winning shape: a HANDFUL of hot keys (20 sources) over
     * the whole corpus, where the bounded-heap partial/final plan beats
-    * the window idiom 2.6-4x (tools.TopKProbe: 0.8s vs 2.1s at 20M
+    * the window idiom 2.6-4x (SCALE.md: 0.8s vs 2.1s at 20M
     * rows x 10 keys) because nothing is sorted and the shuffle carries
     * ≤ k rows per source per map task. Score: n_chars (length as the
     * richer-context proxy), doc_id closes ties to a total order.

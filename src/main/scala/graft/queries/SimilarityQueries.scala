@@ -103,11 +103,12 @@ SELECT a, b, round(cos, 4) AS cos4 FROM pairs WHERE cos >= 0.4 ORDER BY a, b
     *
     * Ranking uses the custom [[graft.plans.TopKPerKey]] bounded-heap
     * operator, not the window idiom: ≤100 hot keys over |Q|·N scored
-    * rows is exactly the operator's measured domain (tools.TopKProbe —
+    * rows is exactly the operator's measured domain (SCALE.md
+    * "TopKPerKey vs the window idiom" —
     * few groups, huge corpus: the window's per-partition sort pays
     * O(n log n) on the full score table, the heap scans it in
     * O(n log k) and ships ≤ k·|Q| rows per task). Measured at sf0.1
-    * (QueryTimeProbe, local[32]): 1.21s → 1.04–1.14s median — a
+    * (single-query timing, local[32]): 1.21s → 1.04–1.14s median — a
     * modest win because the O(|Q|·N) dot-product join dominates this
     * query's cost, not the rank; the sort-elimination matters more as
     * N grows. The residual rank window runs over the ≤ 500-row top-k

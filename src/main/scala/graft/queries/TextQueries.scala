@@ -190,8 +190,8 @@ GROUP BY doc_id ORDER BY doc_id
     *
     * TopKPerKey adoption audit (r7 #5): KEEP the window. Keys here are
     * vocabulary terms — tens of thousands and growing with corpus —
-    * which is the high-cardinality regime where tools.TopKProbe
-    * measured the window's pruned sort tying or beating the bounded
+    * which is the high-cardinality regime where SCALE.md "TopKPerKey
+    * vs the window idiom" measured the window's pruned sort tying or beating the bounded
     * heap (the heap's per-task key map approaches the partition size).
     */
   def tfidfTopk(spark: SparkSession, sfDir: String): DataFrame = {

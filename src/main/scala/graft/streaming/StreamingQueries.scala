@@ -64,7 +64,13 @@ object StreamingQueries {
     graft.queries.Tables.normalizeTs(spark, reader.parquet(dir.toString))
   }
 
-  private val nameCounter = new java.util.concurrent.atomic.AtomicLong()
+  /** Query (and checkpoint dir) name unique across JVMs: the scratch
+    * root is shared by every JVM on the host and may hold a crashed
+    * run's leftovers, so a per-JVM counter let two runs pick the same
+    * checkpoint dir.
+    */
+  private def uniqueName(prefix: String): String =
+    prefix + "_" + java.util.UUID.randomUUID().toString.replace('-', '_')
 
   /** Run a finite streaming DataFrame to completion into a memory sink
     * and return the sink table.
@@ -78,23 +84,25 @@ object StreamingQueries {
     * machinery beat 32. An unbounded production deployment with large
     * state would keep the higher count instead.
     */
-  private def runToCompletion(spark: SparkSession,
-                              build: SparkSession => DataFrame,
-                              mode: String): DataFrame = {
-    val name = s"graft_stream_${nameCounter.incrementAndGet()}"
+  private[graft] def runToCompletion(spark: SparkSession,
+                                     build: SparkSession => DataFrame,
+                                     mode: String): DataFrame = {
+    val name = uniqueName("graft_stream")
     val sub = spark.newSession()
     sub.conf.set("spark.sql.shuffle.partitions", "8")
     // Explicit checkpoint under the scratch root (r15): without it Spark
     // creates the temporary checkpoint under java.io.tmpdir — the
     // contended block device the Scratch scaladoc measures. Deleted
-    // after termination exactly as Spark deletes its temp dir (the
-    // memory sink holds the result; the finite replay never resumes).
+    // after termination, failed or not, exactly as Spark deletes its
+    // temp dir (the memory sink holds the result; the finite replay
+    // never resumes).
     val ck = graft.queries.Scratch.root.resolve(s"ck_$name")
-    val q = build(sub).writeStream.format("memory").queryName(name)
-      .option("checkpointLocation", ck.toString)
-      .outputMode(mode).trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    graft.queries.Scratch.deleteRec(ck)
+    try {
+      build(sub).writeStream.format("memory").queryName(name)
+        .option("checkpointLocation", ck.toString)
+        .outputMode(mode).trigger(Trigger.AvailableNow()).start()
+        .awaitTermination()
+    } finally graft.queries.Scratch.deleteRec(ck)
     sub.table(name) // memory-sink temp view is session-scoped
   }
 
@@ -361,8 +369,8 @@ GROUP BY 1, 2 ORDER BY c_mktsegment, event_type
     *
     *  - batch 0 commits max event time; the watermark value
     *    `max(ts) − 1 min` becomes OPERATIVE one batch later (watermark
-    *    propagation is delayed by one micro-batch — measured with
-    *    [[graft.tools.LateDataProbe]]: without the spacer the late
+    *    propagation is delayed by one micro-batch — measured per
+    *    batch, SCALE.md "Retired probes": without the spacer the late
     *    batch still runs with an inactive watermark and NOTHING is
     *    dropped), which is what the spacer batch absorbs;
     *  - batch 2: every row belongs to an hourly window whose end is
@@ -599,7 +607,7 @@ ORDER BY window_start, event_type
     *
     * Replay is two controlled batches: all events, then an empty
     * spacer file — the spacer absorbs the one-micro-batch watermark
-    * propagation delay (measured with LateDataProbe, see [[lateData]]),
+    * propagation delay (measured, see [[lateData]]),
     * so the final watermark — `least(max click_ts, max buy_ts) − 1 min`,
     * the MIN across the two watermarked sources, because the slowest
     * stream gates eviction — is OPERATIVE in a batch that can evict.
@@ -1499,7 +1507,7 @@ ORDER BY window_start, event_type
     Files.move(fa, inDir.resolve("a.parquet"))
     val schema = raw.schema
     def runOnce(): (SparkSession, String) = {
-      val name = s"graft_ckpt_${nameCounter.incrementAndGet()}"
+      val name = uniqueName("graft_ckpt")
       val sub = spark.newSession()
       sub.conf.set("spark.sql.shuffle.partitions", "8")
       val q = sub.readStream.schema(schema).parquet(inDir.toString)
@@ -1562,7 +1570,7 @@ ORDER BY window_start, event_type
     Files.createDirectories(base)
     raw.coalesce(1).write.parquet(inDir.toString)
     val schema = raw.schema
-    val name = s"graft_state_${nameCounter.incrementAndGet()}"
+    val name = uniqueName("graft_state")
     val sub = spark.newSession()
     sub.conf.set("spark.sql.shuffle.partitions", "8")
     val q = sub.readStream.schema(schema).parquet(inDir.toString)
@@ -1613,7 +1621,7 @@ FROM events GROUP BY 1 ORDER BY event_type
     val raw = graft.queries.Tables.events(spark, sfDir)
     val stage = stageProgressMetrics(spark, sfDir)
     val schema = raw.schema
-    val name = s"graft_progress_${nameCounter.incrementAndGet()}"
+    val name = uniqueName("graft_progress")
     val sub = spark.newSession()
     sub.conf.set("spark.sql.shuffle.partitions", "8")
     val ck = graft.queries.Scratch.root.resolve(s"ck_$name")
@@ -1625,8 +1633,8 @@ FROM events GROUP BY 1 ORDER BY event_type
       .writeStream.format("memory").queryName(name)
       .option("checkpointLocation", ck.toString)
       .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    graft.queries.Scratch.deleteRec(ck)
+    try q.awaitTermination()
+    finally graft.queries.Scratch.deleteRec(ck)
     val progresses = q.recentProgress
     val totalRows = progresses.map(_.numInputRows).sum
     val wmUs = java.time.Instant

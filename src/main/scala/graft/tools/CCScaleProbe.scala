@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
-import graft.cc.{CliqueGen, ConnectedComponents, EdgeBuilder}
+import graft.cc.{CliqueGen, ConnectedComponents, EdgeBuilder, Tuning}
 
 /** Scale probe for the CC front door (VERDICT r3 #4): generates a
   * CliqueGen graph 10-100x the sf0.1 bench graph, runs BOTH
@@ -20,24 +20,24 @@ import graft.cc.{CliqueGen, ConnectedComponents, EdgeBuilder}
   *
   * `giant` (r10 verdict item 2) is the adversarial SINGLE-component
   * probe: args are
-  * `<nNodes> giant <legacy|new|contracted|incremental|reliable|ab|mix [nBlocks]>`
+  * `<nNodes> giant <new|contracted|incremental|reliable|ab|mix [nBlocks]>`
   * (`mix`, r11 verdict item 3, unions the tree with `nBlocks` CliqueGen
   * blocks offset above it — the mega-cluster-plus-long-tail shape real
   * dedup corpora have — and checks both populations' labels exactly)
-  * — the four shapes cover the frozen r10 star rounds (the A/B
-  * baseline), the min-join fixpoint, the two-phase contraction front
-  * door, and the label-maintenance front door (K=10⁶ new nodes
+  * — the shapes cover the min-join fixpoint, the two-phase contraction
+  * front door, and the label-maintenance front door (K=10⁶ new nodes
   * attached to the standing component via IncrementalCC.applyDelta,
   * with closed-form standing labels so the delta pass is measured
   * alone). The graph is the
   * binary tree `(i, i div 2)` for i in [1, nNodes) — one component of
   * nNodes members, nNodes-1 edges, deterministic, no RNG. Near
   * convergence every edge is `(n, 0)`, so the large star's group for
-  * node 0 holds the ENTIRE component: the round-10 collect_set shape
-  * ([[LegacyStarOps]]) concentrates O(component) aggregation state in
-  * one task there, while the min-join shape ([[graft.cc.StarOps]])
-  * keeps per-key state O(1) and lets AQE skew-split the join. This is
-  * the 100 TB boilerplate-mega-cluster case from the dedup pipelines.
+  * node 0 holds the ENTIRE component: the min-join shape
+  * ([[graft.cc.StarOps]]) keeps per-key state O(1) there and lets AQE
+  * skew-split the join, where the round-10 collect_set shape held
+  * O(component) state in one task (SCALE.md "giant component": OOM at
+  * 48g). This is the 100 TB boilerplate-mega-cluster case from the
+  * dedup pipelines.
   *
   * `incremental` (r5 verdict item 5) probes the label-MAINTENANCE path
   * at scale: base fixpoint on 90% of the blocks' star edges, then the
@@ -58,8 +58,8 @@ object CCScaleProbe {
     // ratio-derived AQE advisory size, frequent periodic GC) live in
     // graft.cc.Tuning with their measurements — the probes consume the
     // library preset so preset and probe cannot drift (VERDICT r11 #1).
-    val spark = ConnectedComponents.configureForScale(SparkSession.builder())
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
+    val spark = Tuning.configure(SparkSession.builder())
+      .master(s"local[${graft.Harness.cpus}]")
       .config("spark.sql.shuffle.partitions",
         sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
       .config("spark.driver.memory", "16g")
@@ -347,7 +347,6 @@ object CCScaleProbe {
       }
       val labels = time(s"giant fixpoint shape=$shape") {
         shape match {
-          case "legacy" => LegacyStarOps.runLegacy(tree)
           case "contracted" =>
             // The two-phase front door on the SAME adversarial graph:
             // range partitions hold contiguous id spans, so each task's
@@ -471,11 +470,12 @@ object CCScaleProbe {
               f"${(walls(1)._2 / localMean - 1.0) * 100}%.1f%% of the " +
               "same-window local wall")
             l3.assignments
-          case _ =>
+          case "new" =>
             val r = ConnectedComponents.run(tree)
             require(r.converged, "fixpoint did not converge")
             System.err.println(s"[probe] giant: iterations=${r.iterations}")
             r.assignments
+          case other => sys.error(s"unknown giant shape $other")
         }
       }
       if (shape == "mix") {

@@ -1,11 +1,10 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
-/** Round-14 optimization harness: reproduces the Bench environment
-  * (local[32] unless overridden, shuffle partitions = cpus, UTC, memo
-  * prewarm) and then either
+/** Round-14 optimization probe: builds the Bench environment
+  * ([[graft.Harness]]: session, warm-up, every `_prewarm_*` row) and
+  * then either
   *
   *   - `plan <outDir> <suffix> [names…|ALL]` — writes each query's
   *     `explain("formatted")` to `<outDir>/<name>_<suffix>.txt`
@@ -16,7 +15,9 @@ import org.apache.spark.sql.SparkSession
   *     SPARK_GRAFT_REPS (default 5) timed `.count()` reps with a
   *     listener counting jobs / stages / tasks and summing executor
   *     task time across the timed reps. Separates "many tiny jobs"
-  *     overhead from real compute (guide §1.1) without the Spark UI.
+  *     overhead from real compute (guide §1.1) without the Spark UI, or
+  *   - `stages [names…]` — one warmed execution per query with a
+  *     per-stage dump (run/CPU/GC ms, shuffle and input bytes).
   *
   * Measurement-only tool — never on a query path.
   */
@@ -37,50 +38,14 @@ object OptProbe {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Mirror Bench's scratch placement (r15) so probe A/Bs measure
-      // what the bench measures.
-      .config("spark.local.dir",
-        graft.queries.Scratch.root.resolve("spark-local").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    graft.queries.Tables.check(spark, sfDir)
-    // Bench-identical prewarm so per-query numbers measure the query,
-    // not the shared memo build it happens to trigger first.
-    spark.range(2000000).selectExpr("sum(id)").collect()
-    java.nio.file.Files.list(java.nio.file.Paths.get(sfDir)).forEach { p =>
-      if (p.toString.endsWith(".parquet"))
-        spark.read.parquet(p.toString).count()
+    // Bench's session, warm-up and prewarm rows, so per-query numbers
+    // measure the query, not the shared memo build it happens to
+    // trigger first; the timed rows mirror the bench's _prewarm_* rows.
+    val spark = graft.Harness.session(sfDir)
+    graft.Harness.warmUp(spark, sfDir)
+    graft.Harness.prewarm(spark, sfDir).foreach { case (name, s) =>
+      println(f"[prewarm] $name $s%.2f s")
     }
-    // Timed cold-build prints mirror the bench's _prewarm_* rows, so a
-    // prewarm-shape change (e.g. the r14 Par overlap) can be A/B'd here
-    // (SPARK_GRAFT_SEQ_PREWARM=1 restores the sequential order) without
-    // a full bench run.
-    def warm(name: String)(body: => Unit): Unit = {
-      val t0 = System.nanoTime()
-      body
-      println(f"[prewarm] $name ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    }
-    warm("cc_fixpoint") {
-      graft.queries.CCQueries.ccCopurchase(spark, sfDir).count() }
-    warm("degree_memo") {
-      graft.queries.GraphQueries.all("graph_degree_hist")(spark, sfDir).count() }
-    warm("minhash_clusters") {
-      graft.queries.DedupQueries.all("dedup_minhash_clusters")(spark, sfDir).count() }
-    warm("cc_hq_base") { graft.queries.GraphQueries.prewarmHqBases(spark, sfDir) }
-    warm("graph_memos") { graft.queries.GraphQueries.prewarmGraphMemos(spark, sfDir) }
-    warm("percolation") { graft.queries.CCQueries.prewarmPercolation(spark, sfDir) }
-    // sim before dedup: the dedup row's ANN pair memo reads the
-    // normalized table (same order as Bench).
-    warm("sim_memos") { graft.queries.SimilarityQueries.prewarmSimMemos(spark, sfDir) }
-    warm("geo_memos") { graft.queries.GeoQueries.prewarmGeoMemos(spark, sfDir) }
-    warm("dedup_memos") { graft.queries.DedupQueries.prewarmDedupMemos(spark, sfDir) }
 
     args.headOption match {
       case Some("plan") =>

@@ -71,14 +71,14 @@ class ConnectedComponentsSpec extends SparkSpec {
 
   test("largeStar matches the reference comment vector") {
     val s = spark; import s.implicits._
-    val r = StarOps.largeStar(edgesDf(Seq((1L, 4L), (6L, 1L), (3L, 2L), (6L, 5L))))
+    val r = StarOps.largeStarLazy(edgesDf(Seq((1L, 4L), (6L, 1L), (3L, 2L), (6L, 5L))))
     val got = r.pairs.as[(Long, Long)].collect().toSet
     // adjacency: (4,[1]) (1,[4,6]) (6,[1,5]) (3,[2]) (2,[3]) (5,[6])
     // emit n>=self -> (4,1); (1,1),(4,1),(6,1); (6,1); (3,2); (2,2),(3,2); (5,5),(6,5)
     assert(got === Set((4L, 1L), (1L, 1L), (6L, 1L), (3L, 2L), (2L, 2L),
                        (5L, 5L), (6L, 5L)))
     // per-group |new \ old|: (1,·)→3, (2,·)→2, (5,·)→2, rest 0
-    assert(r.changeCount === 7)
+    assert(r.changeCount() === 7)
     r.handles.foreach(_.unpersist())
   }
 
@@ -88,11 +88,14 @@ class ConnectedComponentsSpec extends SparkSpec {
     // entire membership in one aggregation buffer. The min-join form
     // must keep every aggregate O(1)-state (HashAggregate min/count/max)
     val edges = edgesDf(Seq((1L, 4L), (6L, 1L), (3L, 2L), (6L, 5L)))
-    for (r <- Seq(StarOps.largeStar(edges), StarOps.smallStar(edges))) {
-      val plan = r.pairs.queryExecution.sparkPlan.toString
+    val large = StarOps.largeStarLazy(edges)
+    val small = StarOps.smallStar(edges)
+    for ((pairs, handles) <- Seq(large.pairs -> large.handles,
+                                 small.pairs -> small.handles)) {
+      val plan = pairs.queryExecution.sparkPlan.toString
       assert(!plan.contains("collect_set"), plan)
       assert(!plan.contains("ObjectHashAggregate"), plan)
-      r.handles.foreach(_.unpersist())
+      handles.foreach(_.unpersist())
     }
   }
 
@@ -210,6 +213,15 @@ class ConnectedComponentsSpec extends SparkSpec {
 
     val non = ConnectedComponents.run(edgesDf(Seq((1L, 2L))), maxIterations = 0)
     assert(!non.converged && non.iterations === 0)
+  }
+
+  test("stop rule: a first round converges only on zero change counts") {
+    // the reference seeds prev with 9999999; counts that size are normal
+    // at scale and must not stop the first round
+    assert(!ConnectedComponents.stopRule(None, 9999999L, 9999999L))
+    assert(ConnectedComponents.stopRule(None, 0L, 0L))
+    assert(ConnectedComponents.stopRule(Some((9999999L, 9999999L)), 9999999L, 9999999L))
+    assert(!ConnectedComponents.stopRule(Some((5L, 3L)), 5L, 4L))
   }
 
   test("starEdges: duplicate-only cliques keep their node as a self-pair") {

@@ -4,7 +4,7 @@ import graft.SparkSpec
 
 /** Pins the giant-run preset to the probe-measured values (VERDICT r11
   * #1). `CCScaleProbe` consumes [[Tuning.recommended]] verbatim via
-  * `ConnectedComponents.configureForScale`, so this spec is what keeps
+  * `Tuning.configure`, so this spec is what keeps
   * "what the probes measured" and "what a library user gets" from
   * drifting apart — an edit to either side fails here until the
   * measurement story is updated with it.

@@ -61,14 +61,25 @@ class IoQueriesSpec extends SparkSpec {
   }
 
   test("compaction collapses the file count and range-clusters doc_id") {
+    // Drop any staged copy so both writes run here: the files inspected
+    // below must be this run's, not a previous run's leftovers.
+    // (File-system mtimes are compared at whole-second granularity.)
+    val testStart = System.currentTimeMillis() / 1000L * 1000L
+    Seq("frag", "compact").foreach { tag =>
+      graft.queries.Scratch.deleteRec(
+        java.nio.file.Paths.get(IoQueries.stageDir(sfDir, tag)))
+    }
     IoQueries.compaction(spark, sfDir).collect() // runs both writes
     def parquetFiles(tag: String) = {
-      val dir = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_io",
-        sfDir.replaceAll("[^A-Za-z0-9._-]", "_"), tag)
       import scala.jdk.CollectionConverters._
-      java.nio.file.Files.list(dir).iterator().asScala
-        .map(_.toString).filter(_.endsWith(".parquet")).toSeq
+      val ls = java.nio.file.Files.list(
+        java.nio.file.Paths.get(IoQueries.stageDir(sfDir, tag)))
+      val files = try ls.iterator().asScala.toList finally ls.close()
+      files.filter(_.toString.endsWith(".parquet")).map { f =>
+        val mtime = java.nio.file.Files.getLastModifiedTime(f).toMillis
+        assert(mtime >= testStart, s"$f predates the test ($mtime < $testStart)")
+        f.toString
+      }
     }
     val nFrag = parquetFiles("frag").size
     val compactFiles = parquetFiles("compact")

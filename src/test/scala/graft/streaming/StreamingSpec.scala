@@ -232,6 +232,28 @@ class StreamingSpec extends SparkSpec {
     assert(streamed.toSeq === closed.toSeq)
   }
 
+  test("a finite stream that fails mid-run leaves no checkpoint dir behind") {
+    import scala.jdk.CollectionConverters._
+    def ckDirs(): Set[String] = {
+      val ls = java.nio.file.Files.list(graft.queries.Scratch.root)
+      try ls.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("ck_")).toSet
+      finally ls.close()
+    }
+    val src = java.nio.file.Files.createTempDirectory("graft_failing_stream")
+    spark.range(10).write.mode("overwrite").parquet(src.toString)
+    val schema = spark.read.parquet(src.toString).schema
+    val before = ckDirs()
+    intercept[Exception] {
+      StreamingQueries.runToCompletion(spark,
+        sub => sub.readStream.schema(schema).parquet(src.toString)
+          .select(assert_true(col("id") < 0).as("never")),
+        "append")
+    }
+    assert(ckDirs().diff(before).isEmpty)
+    graft.queries.Scratch.deleteRec(src)
+  }
+
   test("transformWithState running counts reach the batch per-user totals") {
     val streamed = StreamingQueries.runningCount(spark, sfDir).collect()
     val batch = graft.queries.Tables.events(spark, sfDir)
