@@ -70,10 +70,9 @@ object Harness {
     import graft.queries._
     Seq(
       "_prewarm_cc_fixpoint" -> ((s, d) => CCQueries.ccCopurchase(s, d).count()),
-      "_prewarm_degree_memo" -> ((s, d) =>
-        GraphQueries.all("graph_degree_hist")(s, d).count()),
+      "_prewarm_degree_memo" -> ((s, d) => GraphQueries.degreeHist(s, d).count()),
       "_prewarm_minhash_clusters" -> ((s, d) =>
-        DedupQueries.all("dedup_minhash_clusters")(s, d).count()),
+        DedupQueries.dedupMinhashClusters(s, d).count()),
       "_prewarm_cc_hq_base" -> GraphQueries.prewarmHqBases,
       "_prewarm_graph_memos" -> GraphQueries.prewarmGraphMemos,
       "_prewarm_percolation" -> CCQueries.prewarmPercolation,

@@ -7,9 +7,10 @@ import graft.queries._
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
   * Every entry in [[queries]] is one operator/capability from
-  * SURVEY.md §2; entries with an exact ANSI-SQL equivalent also appear
-  * in [[oracleSql]] (DuckDB runs it on the same parquet tables and
-  * hash-compares). Column names are aliased identically on both sides —
+  * SURVEY.md §2, and [[oracleSql]] holds its ANSI-SQL equivalent
+  * (DuckDB runs it on the same parquet tables and hash-compares).
+  * Both come from one [[Query]] per name in [[registry]]. Column names
+  * are aliased identically on both sides —
   * the driver's compare sorts columns by name before hashing.
   */
 object SparkEntry {
@@ -18,48 +19,21 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     CCQueries.ccCopurchase(spark, "/root/testdata/sf0.001")
 
-  /** The per-module registries, named — [[queries]] is their union.
-    * Kept as a list so RegistrySpec can prove the union is disjoint:
-    * `++` silently shadows a duplicated query name (last module wins)
-    * and both maps would shadow consistently, which the two
-    * set-difference checks cannot see (ADVICE r5).
+  /** Every graded query, module by module. [[queries]] and
+    * [[oracleSql]] are two views of it; RegistrySpec proves no name is
+    * listed twice, since `toMap` would silently keep only the last.
     */
-  private[graft] val queryModules: Seq[(String, Map[String, (SparkSession, String) => DataFrame])] = Seq(
-    "cc" -> Map[String, (SparkSession, String) => DataFrame](
-      "cc_copurchase" -> (CCQueries.ccCopurchase _),
-      "cc_components" -> (CCQueries.ccCopurchaseComponents _),
-      "cc_graphx" -> (CCQueries.ccGraphx _),
-      "cc_percolation" -> (CCQueries.ccPercolation _),
-    ),
-    "relational" -> RelationalQueries.all,
-    "dedup" -> DedupQueries.all,
-    "similarity" -> SimilarityQueries.all,
-    "text" -> TextQueries.all,
-    "pipeline" -> PipelineQueries.all,
-    "io" -> IoQueries.all,
-    "graph" -> GraphQueries.all,
-    "stats" -> StatsQueries.all,
-    "sketch" -> SketchQueries.all,
-    "match" -> MatchQueries.all,
-    "event" -> EventQueries.all,
-    "geo" -> GeoQueries.all,
-    "streaming" -> graft.streaming.StreamingQueries.all,
-    "multimodal" -> graft.multimodal.MultimodalQueries.all,
-  )
+  private[graft] val registry: Seq[Query] =
+    CCQueries.all ++ RelationalQueries.all ++ DedupQueries.all ++
+      SimilarityQueries.all ++ TextQueries.all ++ PipelineQueries.all ++
+      IoQueries.all ++ GraphQueries.all ++ StatsQueries.all ++
+      SketchQueries.all ++ MatchQueries.all ++ EventQueries.all ++
+      GeoQueries.all ++ graft.streaming.StreamingQueries.all ++
+      graft.multimodal.MultimodalQueries.all
 
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    queryModules.map(_._2).reduce(_ ++ _)
+    registry.map(q => q.name -> q.build).toMap
 
-  def oracleSql: Map[String, String] = Map(
-    "cc_copurchase" -> CCQueries.copurchaseOracle,
-    "cc_components" -> CCQueries.copurchaseComponentsOracle,
-    "cc_graphx" -> CCQueries.copurchaseOracle,
-    "cc_percolation" -> CCQueries.ccPercolationOracle,
-  ) ++ RelationalQueries.oracles ++ DedupQueries.oracles ++
-    SimilarityQueries.oracles ++ TextQueries.oracles ++ PipelineQueries.oracles ++
-    IoQueries.oracles ++ GraphQueries.oracles ++ StatsQueries.oracles ++
-    SketchQueries.oracles ++ MatchQueries.oracles ++ EventQueries.oracles ++
-    GeoQueries.oracles ++
-    graft.streaming.StreamingQueries.oracles ++
-    graft.multimodal.MultimodalQueries.oracles
+  def oracleSql: Map[String, String] =
+    registry.map(q => q.name -> q.oracle).toMap
 }

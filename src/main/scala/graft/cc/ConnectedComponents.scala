@@ -31,7 +31,13 @@ import org.apache.spark.storage.StorageLevel
   */
 object ConnectedComponents {
 
-  final case class CCResult(assignments: DataFrame, converged: Boolean, iterations: Int)
+  /** `rounds` holds each fixpoint round's (large, small) change counts,
+    * in order — counts [[run]] already has on the driver, so reporting
+    * them runs no job. Empty when no star round ran (the driver
+    * union-find path).
+    */
+  final case class CCResult(assignments: DataFrame, converged: Boolean, iterations: Int,
+                            rounds: Seq[(Long, Long)] = Nil)
 
   /** The reference's stop rule (ConnectedComponent.scala:247-249): both
     * change counts repeat the previous round's, or both are zero. With
@@ -88,9 +94,8 @@ object ConnectedComponents {
     var pairs = edges.select(
       col("src").cast("bigint").as("src"),
       col("dst").cast("bigint").as("dst"))
-    var prev: Option[(Long, Long)] = None
+    var rounds = Vector.empty[(Long, Long)]
     var converged = false
-    var iter = 0
     // Handles persisted in iteration i stay alive until iteration i+1's
     // first action has materialized the (lazy) checkpoint that reads
     // them — eager checkpointing would cost a whole extra job per
@@ -101,8 +106,7 @@ object ConnectedComponents {
     // which point cp_{k-1}'s blocks feed nothing and are dropped.
     var materializedCp: Option[RDD[_]] = None
     var pendingCp: Option[RDD[_]] = None
-    while (!converged && iter < maxIterations) {
-      val t0 = System.nanoTime()
+    while (!converged && rounds.size < maxIterations) {
       // ONE edge-scale job per round: the large star defers its count
       // and streams into the small star, whose count action executes
       // the whole round — materializing all four star caches and last
@@ -110,7 +114,7 @@ object ConnectedComponents {
       // it are node-scale aggregations over cached stats.
       val ls = StarOps.largeStarLazy(pairs)
       val ss = StarOps.smallStar(ls.pairs)
-      val largeCount = ls.changeCount()
+      val large = ls.changeCount()
       // The large star's caches fed the small star's (now materialized)
       // caches; nothing downstream reads them again.
       ls.handles.foreach(_.unpersist(false))
@@ -130,17 +134,14 @@ object ConnectedComponents {
       materializedCp = pendingCp
       pendingCp = checkpointRdd(next)
       pendingUnpersist = ss.handles
-      iter += 1
-      if (sys.env.contains("GRAFT_CC_VERBOSE"))
-        System.err.println(f"[cc] iter=$iter large=$largeCount " +
-          f"small=${ss.changeCount} ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      converged = stopRule(prev, largeCount, ss.changeCount)
-      prev = Some((largeCount, ss.changeCount))
+      val small = ss.changeCount
+      converged = stopRule(rounds.lastOption, large, small)
+      rounds :+= ((large, small))
       pairs = next
     }
     // Materialize the final checkpoint before releasing its inputs.
     val out = pairs.toDF("node", "component")
-    if (iter > 0) {
+    if (rounds.nonEmpty) {
       out.count()
       pendingUnpersist.foreach(_.unpersist(false))
       // The final checkpoint (the result, owned by the caller — its
@@ -148,7 +149,7 @@ object ConnectedComponents {
       // materialized; its predecessor is dead.
       materializedCp.foreach(freeCheckpoint(_, reliableCheckpoint))
     }
-    CCResult(out, converged, iter)
+    CCResult(out, converged, rounds.size, rounds)
   }
 
   /** Adaptive variant — the CC analog of Spark's
@@ -294,8 +295,9 @@ object ConnectedComponents {
     * `spark.sql.files.maxPartitionBytes` down if a corpus approaches
     * the worst case.
     *
-    * `iterations` reports the inner solve's fixpoint rounds (0 on the
-    * driver path); `converged` is the inner solve's flag.
+    * `iterations` and `rounds` report the inner solve's fixpoint rounds
+    * (0 and empty on the driver path); `converged` is the inner solve's
+    * flag.
     *
     * Measured caveat (CCScaleProbe, SCALE.md round 4): contraction is a
     * data-LAYOUT bet. Edges grouped by origin (per-order clique
@@ -332,14 +334,6 @@ object ConnectedComponents {
     val mins = mapping.groupBy("node")
       .agg(min(col("rep")).as("rep"))
       .localCheckpoint(false, StorageLevel.MEMORY_AND_DISK_SER)
-    // Contraction diagnostics (scale probes): extra jobs, opt-in only.
-    if (sys.env.contains("GRAFT_CC_VERBOSE")) {
-      val row = mapping.agg(count(lit(1)), count_distinct(col("rep"))).head
-      val (nMapRows, nReps) = (row.getLong(0), row.getLong(1))
-      val nNodes = mins.count()
-      System.err.println(s"[cc] contracted: nodes=$nNodes mapRows=$nMapRows " +
-        f"repNodes=$nReps ratio=${nReps.toDouble / math.max(nNodes, 1)}%.4f")
-    }
     // Rep-clique star edges: (rep, min rep) per mapping row. Duplicates
     // are fine — runAuto dedups; a singleton node yields its (m, m)
     // self-pair, keeping isolated nodes visible, exactly as the set
@@ -364,7 +358,7 @@ object ConnectedComponents {
     // discipline as the fixpoint loop).
     mins.count()
     checkpointRdd(mapping).foreach(_.unpersist(false))
-    CCResult(labels, inner.converged, inner.iterations)
+    CCResult(labels, inner.converged, inner.iterations, inner.rounds)
   }
 
   /** Mutable long-keyed union-find (union-by-min roots + full path
@@ -399,9 +393,9 @@ object ConnectedComponents {
     * capacity, grow at 60% load) — the driver union-find's working set.
     * A boxed `Map[Long, Long]` costs ~100 bytes/entry; this costs 16
     * bytes/slot, which is what makes the 4M-edge threshold honest.
-    * `Long.MinValue` is reserved as the empty-slot sentinel (node ids
-    * are cast from data columns; MinValue cannot occur as a real key
-    * without 2⁶³-scale ids, and is rejected loudly if it does).
+    * `Long.MinValue` marks an empty slot, so that one key lives in a
+    * dedicated side slot instead: every path accepts every bigint id,
+    * as [[run]] does.
     */
   private final class LongLongMap(initialCapacity: Int) {
     private val Empty = Long.MinValue
@@ -412,9 +406,10 @@ object ConnectedComponents {
     private var keys = Array.fill(cap)(Empty)
     private var vals = new Array[Long](cap)
     private var n = 0
+    private var hasMinKey = false
+    private var minKeyVal = 0L
 
     private def idx(k: Long): Int = {
-      require(k != Empty, "Long.MinValue node id unsupported on the driver path")
       var i = (java.lang.Long.hashCode(k * 0x9e3779b97f4a7c15L)) & (cap - 1)
       while (keys(i) != Empty && keys(i) != k) i = (i + 1) & (cap - 1)
       i
@@ -433,25 +428,34 @@ object ConnectedComponents {
       }
     }
 
-    def put(k: Long, v: Long): Unit = {
-      val i = idx(k)
-      if (keys(i) == Empty) { keys(i) = k; n += 1 }
-      vals(i) = v
-      if (n * 5 > cap * 3) grow()
-    }
+    def put(k: Long, v: Long): Unit =
+      if (k == Empty) { hasMinKey = true; minKeyVal = v }
+      else {
+        val i = idx(k)
+        if (keys(i) == Empty) { keys(i) = k; n += 1 }
+        vals(i) = v
+        if (n * 5 > cap * 3) grow()
+      }
 
     /** value for k, inserting `default` first if absent. */
-    def getOrPut(k: Long, default: Long): Long = {
-      val i = idx(k)
-      if (keys(i) == Empty) { put(k, default); default } else vals(i)
-    }
+    def getOrPut(k: Long, default: Long): Long =
+      if (k == Empty) {
+        if (!hasMinKey) put(k, default)
+        minKeyVal
+      } else {
+        val i = idx(k)
+        if (keys(i) == Empty) { put(k, default); default } else vals(i)
+      }
 
-    def apply(k: Long): Long = vals(idx(k))
+    def apply(k: Long): Long = if (k == Empty) minKeyVal else vals(idx(k))
 
     /** Iterator over the key set as of the call; safe against value
       * rewrites (path compression) but not against growth.
       */
-    def keysIterator: Iterator[Long] = keys.iterator.filter(_ != Empty)
+    def keysIterator: Iterator[Long] = {
+      val slots = keys.iterator.filter(_ != Empty)
+      if (hasMinKey) Iterator.single(Empty) ++ slots else slots
+    }
   }
 
   /** Reference `run(cliques)` equivalent: cliques (array column) → CC. */

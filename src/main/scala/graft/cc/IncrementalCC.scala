@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 /** The incremental label-maintenance algebra, shared by the batch query
   * (`graph` family `cc_incremental`), both streaming maintenance sinks
   * (`stream_cc_incremental` / `stream_cc_decremental`), and the scale
-  * probes (`CCScaleProbe incremental`, `StreamCCProbe`) — one
-  * implementation, one set of invariants:
+  * probe (`CCScaleProbe incremental`) — one implementation, one set of
+  * invariants:
   *
   *   1. contract delta endpoints through the standing labels (unseen
   *      nodes map to themselves),

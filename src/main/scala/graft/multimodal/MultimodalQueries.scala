@@ -3,7 +3,7 @@ package graft.multimodal
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.queries.Tables
+import graft.queries.{Query, Tables}
 
 /** Multimodal-column plumbing: media as opaque `binary` payloads with a
   * typed metadata struct, decoded at an explicit codec boundary.
@@ -574,25 +574,14 @@ SELECT bucket, count(*) AS n_images,
 FROM b GROUP BY bucket ORDER BY bucket
 """
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "media_aspect_buckets" -> (mediaAspectBuckets _),
-    "media_silence_trim" -> (mediaSilenceTrim _),
-    "media_scene_cuts" -> (mediaSceneCuts _),
-    "media_audio_energy" -> (mediaAudioEnergy _),
-    "media_phash_clusters" -> (mediaPhashClusters _),
-    "media_features" -> (mediaFeatures _),
-    "media_frame_sample" -> (mediaFrameSample _),
-    "media_resize" -> (mediaResize _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "media_aspect_buckets" -> mediaAspectBucketsOracle,
-    "media_silence_trim" -> mediaSilenceTrimOracle,
-    "media_scene_cuts" -> mediaSceneCutsOracle,
-    "media_audio_energy" -> mediaAudioEnergyOracle,
-    "media_phash_clusters" -> mediaPhashClustersOracle,
-    "media_features" -> mediaFeaturesOracle,
-    "media_frame_sample" -> mediaFrameSampleOracle,
-    "media_resize" -> mediaResizeOracle,
+  val all: Seq[Query] = Seq(
+    Query("media_aspect_buckets", mediaAspectBuckets, mediaAspectBucketsOracle),
+    Query("media_silence_trim", mediaSilenceTrim, mediaSilenceTrimOracle),
+    Query("media_scene_cuts", mediaSceneCuts, mediaSceneCutsOracle),
+    Query("media_audio_energy", mediaAudioEnergy, mediaAudioEnergyOracle),
+    Query("media_phash_clusters", mediaPhashClusters, mediaPhashClustersOracle),
+    Query("media_features", mediaFeatures, mediaFeaturesOracle),
+    Query("media_frame_sample", mediaFrameSample, mediaFrameSampleOracle),
+    Query("media_resize", mediaResize, mediaResizeOracle),
   )
 }

@@ -241,4 +241,11 @@ SELECT component,
        array_to_string(list_sort(list(node)), ' ') AS members
 FROM assign GROUP BY component ORDER BY component
 """
+
+  val all: Seq[Query] = Seq(
+    Query("cc_copurchase", ccCopurchase, copurchaseOracle),
+    Query("cc_components", ccCopurchaseComponents, copurchaseComponentsOracle),
+    Query("cc_graphx", ccGraphx, copurchaseOracle),
+    Query("cc_percolation", ccPercolation, ccPercolationOracle),
+  )
 }

@@ -1127,33 +1127,18 @@ FROM newd
       () => embeddingAnnPairs(spark, sfDir).count())
   }
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dedup_incremental_batch" -> (incrementalBatch _),
-    "dedup_cdc_chunks" -> (cdcChunkPairs _),
-    "dedup_exact" -> (dedupExact _),
-    "dedup_minhash_est" -> (minhashEst _),
-    "dedup_minhash_clusters" -> (dedupMinhashClusters _),
-    "dedup_simhash" -> (dedupSimhash _),
-    "dedup_simhash_clusters" -> (dedupSimhashClusters _),
-    "dedup_ngram_jaccard" -> (ngramJaccardPairs _),
-    "dedup_containment" -> (containmentPairs _),
-    "dedup_embedding_clusters" -> (dedupEmbeddingClusters _),
-    "dedup_embedding_ann" -> (dedupEmbeddingAnn _),
-    "dedup_ann_recall" -> (dedupAnnRecall _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "dedup_incremental_batch" -> incrementalBatchOracle,
-    "dedup_cdc_chunks" -> cdcChunkPairsOracle,
-    "dedup_exact" -> dedupExactOracle,
-    "dedup_minhash_est" -> minhashEstOracle,
-    "dedup_minhash_clusters" -> dedupMinhashOracle,
-    "dedup_simhash" -> dedupSimhashOracle,
-    "dedup_simhash_clusters" -> dedupSimhashClustersOracle,
-    "dedup_ngram_jaccard" -> ngramJaccardOracle,
-    "dedup_containment" -> containmentOracle,
-    "dedup_embedding_clusters" -> dedupEmbeddingOracle,
-    "dedup_embedding_ann" -> dedupEmbeddingAnnOracle,
-    "dedup_ann_recall" -> dedupAnnRecallOracle,
+  val all: Seq[Query] = Seq(
+    Query("dedup_incremental_batch", incrementalBatch, incrementalBatchOracle),
+    Query("dedup_cdc_chunks", cdcChunkPairs, cdcChunkPairsOracle),
+    Query("dedup_exact", dedupExact, dedupExactOracle),
+    Query("dedup_minhash_est", minhashEst, minhashEstOracle),
+    Query("dedup_minhash_clusters", dedupMinhashClusters, dedupMinhashOracle),
+    Query("dedup_simhash", dedupSimhash, dedupSimhashOracle),
+    Query("dedup_simhash_clusters", dedupSimhashClusters, dedupSimhashClustersOracle),
+    Query("dedup_ngram_jaccard", ngramJaccardPairs, ngramJaccardOracle),
+    Query("dedup_containment", containmentPairs, containmentOracle),
+    Query("dedup_embedding_clusters", dedupEmbeddingClusters, dedupEmbeddingOracle),
+    Query("dedup_embedding_ann", dedupEmbeddingAnn, dedupEmbeddingAnnOracle),
+    Query("dedup_ann_recall", dedupAnnRecall, dedupAnnRecallOracle),
   )
 }

@@ -382,23 +382,13 @@ SELECT path, count(*) AS n_users
 FROM p GROUP BY 1 ORDER BY n_users DESC, path LIMIT 10
 """
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q72_user_paths" -> (userPaths _),
-    "q69_ohlc" -> (ohlc _),
-    "q55_sessionize" -> (sessionize _),
-    "q56_funnel" -> (funnel _),
-    "q57_retention" -> (retention _),
-    "q58_islands" -> (islands _),
-    "q59_ewma" -> (ewma _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q72_user_paths" -> userPathsOracle,
-    "q69_ohlc" -> ohlcOracle,
-    "q55_sessionize" -> sessionizeOracle,
-    "q56_funnel" -> funnelOracle,
-    "q57_retention" -> retentionOracle,
-    "q58_islands" -> islandsOracle,
-    "q59_ewma" -> ewmaOracle,
+  val all: Seq[Query] = Seq(
+    Query("q72_user_paths", userPaths, userPathsOracle),
+    Query("q69_ohlc", ohlc, ohlcOracle),
+    Query("q55_sessionize", sessionize, sessionizeOracle),
+    Query("q56_funnel", funnel, funnelOracle),
+    Query("q57_retention", retention, retentionOracle),
+    Query("q58_islands", islands, islandsOracle),
+    Query("q59_ewma", ewma, ewmaOracle),
   )
 }

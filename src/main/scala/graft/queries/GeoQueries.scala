@@ -486,15 +486,9 @@ UNION ALL SELECT cluster, n_core, n_border, n_noise FROM noise
 ORDER BY cluster
 """
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "geo_grid_join" -> (gridJoin _),
-    "geo_knn" -> (knn _),
-    "geo_dbscan" -> (dbscan _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "geo_grid_join" -> gridJoinOracle,
-    "geo_knn" -> knnOracle,
-    "geo_dbscan" -> dbscanOracle,
+  val all: Seq[Query] = Seq(
+    Query("geo_grid_join", gridJoin, gridJoinOracle),
+    Query("geo_knn", knn, knnOracle),
+    Query("geo_dbscan", dbscan, dbscanOracle),
   )
 }

@@ -1985,30 +1985,6 @@ FROM cl GROUP BY 1 ORDER BY 1
       () => allNodes(spark, sfDir).count())
   }
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "graph_modularity" -> (modularity _),
-    "graph_ppr" -> (pprTop _),
-    "graph_hits" -> (hitsTop _),
-    "graph_walk" -> (walk _),
-    "graph_assortativity" -> (assortativity _),
-    "graph_clustering_coeff" -> (clusteringCoeff _),
-    "graph_lpa" -> (lpa _),
-    "graph_link_prediction" -> (linkPrediction _),
-    "graph_weighted_projection" -> (weightedProjection _),
-    "graph_kcore" -> (kcore _),
-    "graph_degree_hist" -> (degreeHist _),
-    "graph_triangle_top" -> (triangleTop _),
-    "graph_pagerank_top" -> (pageRankTop _),
-    "graph_khop_hist" -> (khopHist _),
-    "graph_shortest_path" -> (shortestPath _),
-    "graph_affinity" -> (affinity _),
-    "graph_mst" -> (mst _),
-    "graph_betweenness" -> (betweenness _),
-    "cc_size_hist" -> (ccSizeHist _),
-    "cc_incremental" -> (ccIncremental _),
-    "cc_decremental" -> (ccDecremental _),
-  )
-
   // The incremental path must converge to the same labels as a
   // from-scratch solve — so its oracle re-solves the whole (sparse)
   // graph recursively.
@@ -2034,27 +2010,27 @@ walk(node, comp) AS (
 SELECT node, min(comp) AS component FROM walk GROUP BY node ORDER BY node
 """
 
-  val oracles: Map[String, String] = Map(
-    "graph_modularity" -> modularityOracle,
-    "graph_ppr" -> pprOracle,
-    "graph_hits" -> hitsOracle,
-    "graph_walk" -> walkOracle,
-    "graph_assortativity" -> assortativityOracle,
-    "graph_clustering_coeff" -> clusteringCoeffOracle,
-    "graph_lpa" -> lpaOracle,
-    "graph_link_prediction" -> linkPredictionOracle,
-    "graph_weighted_projection" -> weightedProjectionOracle,
-    "graph_kcore" -> kcoreOracle,
-    "graph_degree_hist" -> degreeHistOracle,
-    "graph_triangle_top" -> triangleTopOracle,
-    "graph_pagerank_top" -> pageRankOracle,
-    "graph_khop_hist" -> khopOracle,
-    "graph_shortest_path" -> shortestPathOracle,
-    "graph_affinity" -> affinityOracle,
-    "graph_mst" -> mstOracle,
-    "graph_betweenness" -> betweennessOracle,
-    "cc_size_hist" -> ccSizeHistOracle,
-    "cc_incremental" -> ccIncrementalOracle,
-    "cc_decremental" -> ccDecrementalOracle,
+  val all: Seq[Query] = Seq(
+    Query("graph_modularity", modularity, modularityOracle),
+    Query("graph_ppr", pprTop, pprOracle),
+    Query("graph_hits", hitsTop, hitsOracle),
+    Query("graph_walk", walk, walkOracle),
+    Query("graph_assortativity", assortativity, assortativityOracle),
+    Query("graph_clustering_coeff", clusteringCoeff, clusteringCoeffOracle),
+    Query("graph_lpa", lpa, lpaOracle),
+    Query("graph_link_prediction", linkPrediction, linkPredictionOracle),
+    Query("graph_weighted_projection", weightedProjection, weightedProjectionOracle),
+    Query("graph_kcore", kcore, kcoreOracle),
+    Query("graph_degree_hist", degreeHist, degreeHistOracle),
+    Query("graph_triangle_top", triangleTop, triangleTopOracle),
+    Query("graph_pagerank_top", pageRankTop, pageRankOracle),
+    Query("graph_khop_hist", khopHist, khopOracle),
+    Query("graph_shortest_path", shortestPath, shortestPathOracle),
+    Query("graph_affinity", affinity, affinityOracle),
+    Query("graph_mst", mst, mstOracle),
+    Query("graph_betweenness", betweenness, betweennessOracle),
+    Query("cc_size_hist", ccSizeHist, ccSizeHistOracle),
+    Query("cc_incremental", ccIncremental, ccIncrementalOracle),
+    Query("cc_decremental", ccDecremental, ccDecrementalOracle),
   )
 }

@@ -1370,73 +1370,38 @@ FROM orders JOIN ${graft.sources.SynthLogSource.oracleTable(5000000L)} s
 WHERE s.id < 2000 AND s.level = 3
 """
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "src_synthlog_pushdown" -> (synthlogPushdown _),
-    "src_synthlog_join" -> (synthlogJoin _),
-    "src_synthlog_limit" -> (synthlogLimit _),
-    "src_synthlog_topn" -> (synthlogTopn _),
-    "src_synthlog_offset" -> (synthlogOffset _),
-    "src_synthlog_agg" -> (synthlogAgg _),
-    "src_synthlog_groupagg" -> (synthlogGroupAgg _),
-    "src_synthlog_agg_limit" -> (synthlogAggLimit _),
-    "src_synthlog_spj" -> (synthlogSpj _),
-    "src_synthlog_runtime" -> (synthlogRuntime _),
-    "src_auditsink_roundtrip" -> (auditSinkRoundtrip _),
-    "src_auditsink_checksum" -> (auditSinkChecksum _),
-    "io_metadata_columns" -> (metadataColumns _),
-    "io_analyze_stats" -> (analyzeStats _),
-    "io_codec_roundtrip" -> (codecRoundtrip _),
-    "io_sql_catalog" -> (sqlCatalog _),
-    "io_csv_malformed" -> (csvMalformed _),
-    "io_partition_overwrite" -> (partitionOverwrite _),
-    "io_delete_vectors" -> (deleteVectors _),
-    "io_merge_upsert" -> (mergeUpsert _),
-    "io_time_travel" -> (timeTravel _),
-    "io_compaction" -> (compaction _),
-    "io_schema_evolution" -> (schemaEvolution _),
-    "io_table_checksum" -> (tableChecksum _),
-    "io_bucketed_join" -> (bucketedJoin _),
-    "io_zorder_pruning" -> (zorderPruning _),
-    "io_sorted_pruning" -> (sortedPruning _),
-    "io_json_roundtrip" -> (jsonRoundtrip _),
-    "io_csv_roundtrip" -> (csvRoundtrip _),
-    "io_orc_roundtrip" -> (orcRoundtrip _),
-    "io_dpp_pruning" -> (dppPruning _),
-    "io_partitioned_pruning" -> (partitionedPruning _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "src_synthlog_pushdown" -> synthlogPushdownOracle,
-    "src_synthlog_join" -> synthlogJoinOracle,
-    "src_synthlog_limit" -> synthlogLimitOracle,
-    "src_synthlog_topn" -> synthlogTopnOracle,
-    "src_synthlog_offset" -> synthlogOffsetOracle,
-    "src_synthlog_agg" -> synthlogAggOracle,
-    "src_synthlog_groupagg" -> synthlogGroupAggOracle,
-    "src_synthlog_agg_limit" -> synthlogAggLimitOracle,
-    "src_synthlog_spj" -> synthlogSpjOracle,
-    "src_synthlog_runtime" -> synthlogRuntimeOracle,
-    "src_auditsink_roundtrip" -> auditSinkOracle,
-    "src_auditsink_checksum" -> auditSinkChecksumOracle,
-    "io_metadata_columns" -> metadataColumnsOracle,
-    "io_analyze_stats" -> analyzeStatsOracle,
-    "io_codec_roundtrip" -> codecRoundtripOracle,
-    "io_sql_catalog" -> sqlCatalogOracle,
-    "io_csv_malformed" -> csvMalformedOracle,
-    "io_partition_overwrite" -> partitionOverwriteOracle,
-    "io_delete_vectors" -> deleteVectorsOracle,
-    "io_merge_upsert" -> mergeUpsertOracle,
-    "io_time_travel" -> timeTravelOracle,
-    "io_compaction" -> oracle,
-    "io_schema_evolution" -> schemaEvolutionOracle,
-    "io_table_checksum" -> checksumOracle,
-    "io_bucketed_join" -> bucketedOracle,
-    "io_zorder_pruning" -> zorderOracle,
-    "io_sorted_pruning" -> sortedOracle,
-    "io_json_roundtrip" -> oracle,
-    "io_csv_roundtrip" -> oracle,
-    "io_orc_roundtrip" -> oracle,
-    "io_dpp_pruning" -> dppOracle,
-    "io_partitioned_pruning" -> partitionedOracle,
+  val all: Seq[Query] = Seq(
+    Query("src_synthlog_pushdown", synthlogPushdown, synthlogPushdownOracle),
+    Query("src_synthlog_join", synthlogJoin, synthlogJoinOracle),
+    Query("src_synthlog_limit", synthlogLimit, synthlogLimitOracle),
+    Query("src_synthlog_topn", synthlogTopn, synthlogTopnOracle),
+    Query("src_synthlog_offset", synthlogOffset, synthlogOffsetOracle),
+    Query("src_synthlog_agg", synthlogAgg, synthlogAggOracle),
+    Query("src_synthlog_groupagg", synthlogGroupAgg, synthlogGroupAggOracle),
+    Query("src_synthlog_agg_limit", synthlogAggLimit, synthlogAggLimitOracle),
+    Query("src_synthlog_spj", synthlogSpj, synthlogSpjOracle),
+    Query("src_synthlog_runtime", synthlogRuntime, synthlogRuntimeOracle),
+    Query("src_auditsink_roundtrip", auditSinkRoundtrip, auditSinkOracle),
+    Query("src_auditsink_checksum", auditSinkChecksum, auditSinkChecksumOracle),
+    Query("io_metadata_columns", metadataColumns, metadataColumnsOracle),
+    Query("io_analyze_stats", analyzeStats, analyzeStatsOracle),
+    Query("io_codec_roundtrip", codecRoundtrip, codecRoundtripOracle),
+    Query("io_sql_catalog", sqlCatalog, sqlCatalogOracle),
+    Query("io_csv_malformed", csvMalformed, csvMalformedOracle),
+    Query("io_partition_overwrite", partitionOverwrite, partitionOverwriteOracle),
+    Query("io_delete_vectors", deleteVectors, deleteVectorsOracle),
+    Query("io_merge_upsert", mergeUpsert, mergeUpsertOracle),
+    Query("io_time_travel", timeTravel, timeTravelOracle),
+    Query("io_compaction", compaction, oracle),
+    Query("io_schema_evolution", schemaEvolution, schemaEvolutionOracle),
+    Query("io_table_checksum", tableChecksum, checksumOracle),
+    Query("io_bucketed_join", bucketedJoin, bucketedOracle),
+    Query("io_zorder_pruning", zorderPruning, zorderOracle),
+    Query("io_sorted_pruning", sortedPruning, sortedOracle),
+    Query("io_json_roundtrip", jsonRoundtrip, oracle),
+    Query("io_csv_roundtrip", csvRoundtrip, oracle),
+    Query("io_orc_roundtrip", orcRoundtrip, oracle),
+    Query("io_dpp_pruning", dppPruning, dppOracle),
+    Query("io_partitioned_pruning", partitionedPruning, partitionedOracle),
   )
 }

@@ -377,19 +377,11 @@ SELECT strategy, n_blocks, max_block,
 FROM u ORDER BY strategy
 """
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "er_blocking_audit" -> (blockingAudit _),
-    "er_fuzzy_pairs" -> (fuzzyPairs _),
-    "er_fuzzy_indel" -> (fuzzyIndelPairs _),
-    "er_entity_clusters" -> (entityClusters _),
-    "er_golden" -> (golden _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "er_blocking_audit" -> blockingAuditOracle,
-    "er_fuzzy_pairs" -> fuzzyPairsOracle,
-    "er_fuzzy_indel" -> fuzzyIndelOracle,
-    "er_entity_clusters" -> entityClustersOracle,
-    "er_golden" -> goldenOracle,
+  val all: Seq[Query] = Seq(
+    Query("er_blocking_audit", blockingAudit, blockingAuditOracle),
+    Query("er_fuzzy_pairs", fuzzyPairs, fuzzyPairsOracle),
+    Query("er_fuzzy_indel", fuzzyIndelPairs, fuzzyIndelOracle),
+    Query("er_entity_clusters", entityClusters, entityClustersOracle),
+    Query("er_golden", golden, goldenOracle),
   )
 }

@@ -2,17 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.SparkSession
 
-/** Per-(session, sfDir) memo for derived tables shared across queries —
-  * the pattern [[CCQueries]]'s ccMemo and [[GraphQueries]]'s edgeMemo
-  * established, factored out so new shared intermediates (the r5 verdict
-  * asked for the incremental-CC base fixpoint and the triangle adjacency)
-  * don't copy the boilerplate a fourth time.
-  *
-  * Bounded: a long-lived service cycling many (session, sf) pairs must
-  * not pin checkpointed DataFrames forever; harness runs touch <= 3 sf
-  * dirs, so the clear never fires there. Worst case under a race is a
-  * recompute, never a wrong result.
-  */
 /** Materialization for memoized derived tables (r14, guide §1.1/§5).
   *
   * Eager local checkpoint, factored out so the storage decision is in
@@ -76,6 +65,17 @@ private[graft] object Par {
   }
 }
 
+/** Per-(session, sfDir) memo for derived tables shared across queries —
+  * the pattern [[CCQueries]]'s ccMemo and [[GraphQueries]]'s edgeMemo
+  * established, factored out so new shared intermediates (the r5 verdict
+  * asked for the incremental-CC base fixpoint and the triangle adjacency)
+  * don't copy the boilerplate a fourth time.
+  *
+  * Bounded: a long-lived service cycling many (session, sf) pairs must
+  * not pin checkpointed DataFrames forever; harness runs touch <= 3 sf
+  * dirs, so the clear never fires there. Worst case under a race is a
+  * recompute, never a wrong result.
+  */
 private[queries] final class Memo[V] {
   private val cache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), V]()

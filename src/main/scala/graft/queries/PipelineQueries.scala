@@ -1474,67 +1474,35 @@ JOIN it3 ON it3.source = w.source
 ORDER BY w.source
 """
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "pipe_bradley_terry" -> (bradleyTerry _),
-    "pipe_topk_per_source" -> (topkPerSource _),
-    "pipe_oversample" -> (oversample _),
-    "pipe_dataset_diff" -> (datasetDiff _),
-    "pipe_token_budget" -> (tokenBudget _),
-    "pipe_calibration" -> (calibration _),
-    "pipe_fim" -> (fim _),
-    "pipe_kfold" -> (kfold _),
-    "pipe_span_masking" -> (spanMasking _),
-    "pipe_preference_pairs" -> (preferencePairs _),
-    "pipe_temperature_mix" -> (temperatureMix _),
-    "pipe_epoch_shuffle" -> (epochShuffle _),
-    "pipe_bpe_merges" -> (bpeMerges _),
-    "pipe_curriculum" -> (curriculum _),
-    "pipe_interleave" -> (interleave _),
-    "pipe_dataset_card" -> (datasetCard _),
-    "pipe_sorted_batches" -> (sortedBatches _),
-    "pipe_end_to_end" -> (endToEnd _),
-    "pipe_stratified_sample" -> (stratifiedSample _),
-    "pipe_train_split" -> (trainSplit _),
-    "pipe_quality_filter" -> (qualityFilter _),
-    "pipe_best_of_n" -> (bestOfN _),
-    "pipe_pii_redact" -> (piiRedact _),
-    "pipe_sample_mix" -> (sampleMix _),
-    "pipe_dedup_merge" -> (dedupMerge _),
-    "pipe_token_chunks" -> (tokenChunks _),
-    "pipe_pack_sequences" -> (packSequences _),
-    "pipe_vocab_topk" -> (vocabTopK _),
-    "pipe_decontaminate" -> (decontaminate _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "pipe_topk_per_source" -> topkPerSourceOracle,
-    "pipe_oversample" -> oversampleOracle,
-    "pipe_dataset_diff" -> datasetDiffOracle,
-    "pipe_token_budget" -> tokenBudgetOracle,
-    "pipe_calibration" -> calibrationOracle,
-    "pipe_fim" -> fimOracle,
-    "pipe_kfold" -> kfoldOracle,
-    "pipe_span_masking" -> spanMaskingOracle,
-    "pipe_preference_pairs" -> preferencePairsOracle,
-    "pipe_bradley_terry" -> bradleyTerryOracle,
-    "pipe_temperature_mix" -> temperatureMixOracle,
-    "pipe_epoch_shuffle" -> epochShuffleOracle,
-    "pipe_bpe_merges" -> bpeMergesOracle,
-    "pipe_curriculum" -> curriculumOracle,
-    "pipe_interleave" -> interleaveOracle,
-    "pipe_dataset_card" -> datasetCardOracle,
-    "pipe_sorted_batches" -> sortedBatchesOracle,
-    "pipe_end_to_end" -> endToEndOracle,
-    "pipe_stratified_sample" -> stratifiedSampleOracle,
-    "pipe_train_split" -> trainSplitOracle,
-    "pipe_quality_filter" -> qualityFilterOracle,
-    "pipe_best_of_n" -> bestOfNOracle,
-    "pipe_pii_redact" -> piiRedactOracle,
-    "pipe_sample_mix" -> sampleMixOracle,
-    "pipe_dedup_merge" -> dedupMergeOracle,
-    "pipe_token_chunks" -> tokenChunksOracle,
-    "pipe_pack_sequences" -> packSequencesOracle,
-    "pipe_vocab_topk" -> vocabTopKOracle,
-    "pipe_decontaminate" -> decontaminateOracle,
+  val all: Seq[Query] = Seq(
+    Query("pipe_bradley_terry", bradleyTerry, bradleyTerryOracle),
+    Query("pipe_topk_per_source", topkPerSource, topkPerSourceOracle),
+    Query("pipe_oversample", oversample, oversampleOracle),
+    Query("pipe_dataset_diff", datasetDiff, datasetDiffOracle),
+    Query("pipe_token_budget", tokenBudget, tokenBudgetOracle),
+    Query("pipe_calibration", calibration, calibrationOracle),
+    Query("pipe_fim", fim, fimOracle),
+    Query("pipe_kfold", kfold, kfoldOracle),
+    Query("pipe_span_masking", spanMasking, spanMaskingOracle),
+    Query("pipe_preference_pairs", preferencePairs, preferencePairsOracle),
+    Query("pipe_temperature_mix", temperatureMix, temperatureMixOracle),
+    Query("pipe_epoch_shuffle", epochShuffle, epochShuffleOracle),
+    Query("pipe_bpe_merges", bpeMerges, bpeMergesOracle),
+    Query("pipe_curriculum", curriculum, curriculumOracle),
+    Query("pipe_interleave", interleave, interleaveOracle),
+    Query("pipe_dataset_card", datasetCard, datasetCardOracle),
+    Query("pipe_sorted_batches", sortedBatches, sortedBatchesOracle),
+    Query("pipe_end_to_end", endToEnd, endToEndOracle),
+    Query("pipe_stratified_sample", stratifiedSample, stratifiedSampleOracle),
+    Query("pipe_train_split", trainSplit, trainSplitOracle),
+    Query("pipe_quality_filter", qualityFilter, qualityFilterOracle),
+    Query("pipe_best_of_n", bestOfN, bestOfNOracle),
+    Query("pipe_pii_redact", piiRedact, piiRedactOracle),
+    Query("pipe_sample_mix", sampleMix, sampleMixOracle),
+    Query("pipe_dedup_merge", dedupMerge, dedupMergeOracle),
+    Query("pipe_token_chunks", tokenChunks, tokenChunksOracle),
+    Query("pipe_pack_sequences", packSequences, packSequencesOracle),
+    Query("pipe_vocab_topk", vocabTopK, vocabTopKOracle),
+    Query("pipe_decontaminate", decontaminate, decontaminateOracle),
   )
 }

@@ -2188,129 +2188,66 @@ SELECT event_type, CAST(max(conc) AS BIGINT) AS max_concurrent,
 FROM run GROUP BY 1 ORDER BY 1
 """
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q75_three_valued_logic" -> (q75ThreeValuedLogic _),
-    "q76_interval_overlap" -> (q76IntervalOverlap _),
-    "q77_topk_per_key" -> (q77TopkPerKey _),
-    "q73_bitwise_agg" -> (q73BitwiseAgg _),
-    "q74_range_tvf" -> (q74RangeTvf _),
-    "q71_log_histogram" -> (q71LogHistogram _),
-    "q70_weighted_median" -> (q70WeightedMedian _),
-    "q67_generators" -> (q67Generators _),
-    "q68_timezone" -> (q68Timezone _),
-    "q66_pit_join" -> (q66PitJoin _),
-    "q65_pipe_syntax" -> (q65PipeSyntax _),
-    "q64_collation" -> (q64Collation _),
-    "q63_rfm" -> (q63Rfm _),
-    "q61_null_safe_join" -> (q61NullSafeJoin _),
-    "q62_try_arithmetic" -> (q62TryArithmetic _),
-    "q60_sql_udf" -> (q60SqlUdf _),
-    "q54_window_distinct" -> (q54WindowDistinct _),
-    "q53_rolling_slope" -> (q53RollingSlope _),
-    "q49_locf" -> (q49Locf _),
-    "q48_map_hofs" -> (q48MapHofs _),
-    "q46_bitmap_distinct" -> (q46BitmapDistinct _),
-    "q47_listagg" -> (q47Listagg _),
-    "q43_session_batch" -> (q43SessionBatch _),
-    "q42_unpivot" -> (q42Unpivot _),
-    "q41_topk_agg" -> (q41TopkAgg _),
-    "q40_subquery_family" -> (q40SubqueryFamily _),
-    "q39_array_funcs" -> (q39ArrayFuncs _),
-    "q38_variant" -> (q38Variant _),
-    "q36_recursive_reach" -> (q36Reach3 _),
-    "q37_bloom_join" -> (q37BloomJoin _),
-    "q35_lateral_topn" -> (q35LateralTopn _),
-    "q34_grouping_sets" -> (q34GroupingSets _),
-    "q28_salted_join" -> (q28SaltedJoin _),
-    "q26_gapfill" -> (q26GapFill _),
-    "q27_full_outer" -> (q27FullOuter _),
-    "q25_range_join_rule" -> (q25RangeJoinRule _),
-    "q24_window_suite" -> (q24WindowSuite _),
-    "q1_pricing_summary" -> (q1PricingSummary _),
-    "q2_revenue_by_nation" -> (q2RevenueByNation _),
-    "q3_top_orders" -> (q3TopOrders _),
-    "q4_semi_join" -> (q4SemiJoin _),
-    "q5_anti_join" -> (q5AntiJoin _),
-    "q6_forecast_revenue" -> (q6ForecastRevenue _),
-    "q7_running_qty" -> (q7RunningQty _),
-    "q8_rollup_revenue" -> (q8RollupRevenue _),
-    "q9_cube" -> (q9Cube _),
-    "q10_setops" -> (q10SetOps _),
-    "q11_supplier_stats" -> (q11SupplierStats _),
-    "q12_event_bursts" -> (q12EventBursts _),
-    "q13_asof_join" -> (q13AsofJoin _),
-    "q14_promo_share" -> (q14PromoShare _),
-    "q15_json" -> (q15Json _),
-    "q16_above_segment_avg" -> (q16AboveSegmentAvg _),
-    "q17_pivot" -> (q17Pivot _),
-    "q18_percentiles" -> (q18Percentiles _),
-    "q19_date_buckets" -> (q19DateBuckets _),
-    "q20_string_funcs" -> (q20StringFuncs _),
-    "q21_multiset_ops" -> (q21MultisetOps _),
-    "q22_range_frame" -> (q22RangeFrame _),
-    "q23_map_funcs" -> (q23MapFuncs _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q75_three_valued_logic" -> q75Oracle,
-    "q76_interval_overlap" -> q76Oracle,
-    "q77_topk_per_key" -> q77Oracle,
-    "q73_bitwise_agg" -> q73Oracle,
-    "q74_range_tvf" -> q74Oracle,
-    "q71_log_histogram" -> q71Oracle,
-    "q70_weighted_median" -> q70Oracle,
-    "q67_generators" -> q67Oracle,
-    "q68_timezone" -> q68Oracle,
-    "q66_pit_join" -> q66Oracle,
-    "q65_pipe_syntax" -> q65Oracle,
-    "q64_collation" -> q64Oracle,
-    "q63_rfm" -> q63Oracle,
-    "q61_null_safe_join" -> q61Oracle,
-    "q62_try_arithmetic" -> q62Oracle,
-    "q60_sql_udf" -> q60Oracle,
-    "q54_window_distinct" -> q54Oracle,
-    "q28_salted_join" -> q28Oracle,
-    "q34_grouping_sets" -> q34Oracle,
-    "q35_lateral_topn" -> q35Oracle,
-    "q36_recursive_reach" -> q36Oracle,
-    "q37_bloom_join" -> q37Oracle,
-    "q38_variant" -> q38Oracle,
-    "q39_array_funcs" -> q39Oracle,
-    "q40_subquery_family" -> q40Oracle,
-    "q41_topk_agg" -> q41Oracle,
-    "q42_unpivot" -> q42Oracle,
-    "q43_session_batch" -> q43Oracle,
-    "q46_bitmap_distinct" -> q46Oracle,
-    "q47_listagg" -> q47Oracle,
-    "q48_map_hofs" -> q48Oracle,
-    "q53_rolling_slope" -> q53Oracle,
-    "q49_locf" -> q49Oracle,
-    "q26_gapfill" -> q26Oracle,
-    "q27_full_outer" -> q27Oracle,
-    "q25_range_join_rule" -> q25Oracle,
-    "q24_window_suite" -> q24Oracle,
-    "q1_pricing_summary" -> q1Oracle,
-    "q2_revenue_by_nation" -> q2Oracle,
-    "q3_top_orders" -> q3Oracle,
-    "q4_semi_join" -> q4Oracle,
-    "q5_anti_join" -> q5Oracle,
-    "q6_forecast_revenue" -> q6Oracle,
-    "q7_running_qty" -> q7Oracle,
-    "q8_rollup_revenue" -> q8Oracle,
-    "q9_cube" -> q9Oracle,
-    "q10_setops" -> q10Oracle,
-    "q11_supplier_stats" -> q11Oracle,
-    "q12_event_bursts" -> q12Oracle,
-    "q13_asof_join" -> q13Oracle,
-    "q14_promo_share" -> q14Oracle,
-    "q15_json" -> q15Oracle,
-    "q16_above_segment_avg" -> q16Oracle,
-    "q17_pivot" -> q17Oracle,
-    "q18_percentiles" -> q18Oracle,
-    "q19_date_buckets" -> q19Oracle,
-    "q20_string_funcs" -> q20Oracle,
-    "q21_multiset_ops" -> q21Oracle,
-    "q22_range_frame" -> q22Oracle,
-    "q23_map_funcs" -> q23Oracle,
+  val all: Seq[Query] = Seq(
+    Query("q75_three_valued_logic", q75ThreeValuedLogic, q75Oracle),
+    Query("q76_interval_overlap", q76IntervalOverlap, q76Oracle),
+    Query("q77_topk_per_key", q77TopkPerKey, q77Oracle),
+    Query("q73_bitwise_agg", q73BitwiseAgg, q73Oracle),
+    Query("q74_range_tvf", q74RangeTvf, q74Oracle),
+    Query("q71_log_histogram", q71LogHistogram, q71Oracle),
+    Query("q70_weighted_median", q70WeightedMedian, q70Oracle),
+    Query("q67_generators", q67Generators, q67Oracle),
+    Query("q68_timezone", q68Timezone, q68Oracle),
+    Query("q66_pit_join", q66PitJoin, q66Oracle),
+    Query("q65_pipe_syntax", q65PipeSyntax, q65Oracle),
+    Query("q64_collation", q64Collation, q64Oracle),
+    Query("q63_rfm", q63Rfm, q63Oracle),
+    Query("q61_null_safe_join", q61NullSafeJoin, q61Oracle),
+    Query("q62_try_arithmetic", q62TryArithmetic, q62Oracle),
+    Query("q60_sql_udf", q60SqlUdf, q60Oracle),
+    Query("q54_window_distinct", q54WindowDistinct, q54Oracle),
+    Query("q53_rolling_slope", q53RollingSlope, q53Oracle),
+    Query("q49_locf", q49Locf, q49Oracle),
+    Query("q48_map_hofs", q48MapHofs, q48Oracle),
+    Query("q46_bitmap_distinct", q46BitmapDistinct, q46Oracle),
+    Query("q47_listagg", q47Listagg, q47Oracle),
+    Query("q43_session_batch", q43SessionBatch, q43Oracle),
+    Query("q42_unpivot", q42Unpivot, q42Oracle),
+    Query("q41_topk_agg", q41TopkAgg, q41Oracle),
+    Query("q40_subquery_family", q40SubqueryFamily, q40Oracle),
+    Query("q39_array_funcs", q39ArrayFuncs, q39Oracle),
+    Query("q38_variant", q38Variant, q38Oracle),
+    Query("q36_recursive_reach", q36Reach3, q36Oracle),
+    Query("q37_bloom_join", q37BloomJoin, q37Oracle),
+    Query("q35_lateral_topn", q35LateralTopn, q35Oracle),
+    Query("q34_grouping_sets", q34GroupingSets, q34Oracle),
+    Query("q28_salted_join", q28SaltedJoin, q28Oracle),
+    Query("q26_gapfill", q26GapFill, q26Oracle),
+    Query("q27_full_outer", q27FullOuter, q27Oracle),
+    Query("q25_range_join_rule", q25RangeJoinRule, q25Oracle),
+    Query("q24_window_suite", q24WindowSuite, q24Oracle),
+    Query("q1_pricing_summary", q1PricingSummary, q1Oracle),
+    Query("q2_revenue_by_nation", q2RevenueByNation, q2Oracle),
+    Query("q3_top_orders", q3TopOrders, q3Oracle),
+    Query("q4_semi_join", q4SemiJoin, q4Oracle),
+    Query("q5_anti_join", q5AntiJoin, q5Oracle),
+    Query("q6_forecast_revenue", q6ForecastRevenue, q6Oracle),
+    Query("q7_running_qty", q7RunningQty, q7Oracle),
+    Query("q8_rollup_revenue", q8RollupRevenue, q8Oracle),
+    Query("q9_cube", q9Cube, q9Oracle),
+    Query("q10_setops", q10SetOps, q10Oracle),
+    Query("q11_supplier_stats", q11SupplierStats, q11Oracle),
+    Query("q12_event_bursts", q12EventBursts, q12Oracle),
+    Query("q13_asof_join", q13AsofJoin, q13Oracle),
+    Query("q14_promo_share", q14PromoShare, q14Oracle),
+    Query("q15_json", q15Json, q15Oracle),
+    Query("q16_above_segment_avg", q16AboveSegmentAvg, q16Oracle),
+    Query("q17_pivot", q17Pivot, q17Oracle),
+    Query("q18_percentiles", q18Percentiles, q18Oracle),
+    Query("q19_date_buckets", q19DateBuckets, q19Oracle),
+    Query("q20_string_funcs", q20StringFuncs, q20Oracle),
+    Query("q21_multiset_ops", q21MultisetOps, q21Oracle),
+    Query("q22_range_frame", q22RangeFrame, q22Oracle),
+    Query("q23_map_funcs", q23MapFuncs, q23Oracle),
   )
 }

@@ -988,33 +988,18 @@ SELECT count(*) AS n_pairs,
 FROM p
 """
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sim_threshold_sweep" -> (thresholdSweep _),
-    "sim_matryoshka" -> (matryoshka _),
-    "sim_binary_sign_ann" -> (binarySignAnn _),
-    "sim_pq_assign" -> (pqAssign _),
-    "sim_mips_topk" -> (mipsTopk _),
-    "sim_quantize_int8" -> (quantizeInt8 _),
-    "sim_kmeans_step" -> (kmeansStep _),
-    "sim_cosine_pairs" -> (cosinePairs _),
-    "sim_topk_bruteforce" -> (topkBruteForce _),
-    "sim_mmr" -> (mmrRerank _),
-    "sim_ann_lsh" -> (annLsh _),
-    "sim_ann_ivf" -> (annIvf _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "sim_threshold_sweep" -> thresholdSweepOracle,
-    "sim_matryoshka" -> matryoshkaOracle,
-    "sim_binary_sign_ann" -> binarySignAnnOracle,
-    "sim_pq_assign" -> pqAssignOracle,
-    "sim_mips_topk" -> mipsTopkOracle,
-    "sim_quantize_int8" -> quantizeInt8Oracle,
-    "sim_kmeans_step" -> kmeansStepOracle,
-    "sim_cosine_pairs" -> cosinePairsOracle,
-    "sim_topk_bruteforce" -> topkOracle,
-    "sim_mmr" -> mmrOracle,
-    "sim_ann_lsh" -> annLshOracle,
-    "sim_ann_ivf" -> annIvfOracle,
+  val all: Seq[Query] = Seq(
+    Query("sim_threshold_sweep", thresholdSweep, thresholdSweepOracle),
+    Query("sim_matryoshka", matryoshka, matryoshkaOracle),
+    Query("sim_binary_sign_ann", binarySignAnn, binarySignAnnOracle),
+    Query("sim_pq_assign", pqAssign, pqAssignOracle),
+    Query("sim_mips_topk", mipsTopk, mipsTopkOracle),
+    Query("sim_quantize_int8", quantizeInt8, quantizeInt8Oracle),
+    Query("sim_kmeans_step", kmeansStep, kmeansStepOracle),
+    Query("sim_cosine_pairs", cosinePairs, cosinePairsOracle),
+    Query("sim_topk_bruteforce", topkBruteForce, topkOracle),
+    Query("sim_mmr", mmrRerank, mmrOracle),
+    Query("sim_ann_lsh", annLsh, annLshOracle),
+    Query("sim_ann_ivf", annIvf, annIvfOracle),
   )
 }

@@ -753,31 +753,17 @@ SELECT s.n_sample, t.theta,
 FROM sample s CROSS JOIN theta t CROSS JOIN exact e
 """
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sketch_theta_anotb" -> (thetaAnotB _),
-    "sketch_cms_merge" -> (cmsMerge _),
-    "sketch_ams_f2" -> (amsF2 _),
-    "sketch_bloom_fp" -> (bloomFp _),
-    "sketch_theta_intersect" -> (thetaIntersect _),
-    "sketch_hll_union" -> (hllUnion _),
-    "sketch_cms_topk" -> (cmsHeavyHitters _),
-    "sketch_kmv_distinct" -> (kmvDistinct _),
-    "sketch_hll_gate" -> (hllGate _),
-    "sketch_quantile_gate" -> (quantileGate _),
-    "sketch_qdigest_quantiles" -> (qdigestQuantiles _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "sketch_theta_anotb" -> thetaAnotBOracle,
-    "sketch_cms_merge" -> cmsMergeOracle,
-    "sketch_ams_f2" -> amsF2Oracle,
-    "sketch_bloom_fp" -> bloomFpOracle,
-    "sketch_theta_intersect" -> thetaIntersectOracle,
-    "sketch_hll_union" -> hllUnionOracle,
-    "sketch_cms_topk" -> cmsOracle,
-    "sketch_kmv_distinct" -> kmvOracle,
-    "sketch_hll_gate" -> hllGateOracle,
-    "sketch_quantile_gate" -> quantileGateOracle,
-    "sketch_qdigest_quantiles" -> qdigestOracle,
+  val all: Seq[Query] = Seq(
+    Query("sketch_theta_anotb", thetaAnotB, thetaAnotBOracle),
+    Query("sketch_cms_merge", cmsMerge, cmsMergeOracle),
+    Query("sketch_ams_f2", amsF2, amsF2Oracle),
+    Query("sketch_bloom_fp", bloomFp, bloomFpOracle),
+    Query("sketch_theta_intersect", thetaIntersect, thetaIntersectOracle),
+    Query("sketch_hll_union", hllUnion, hllUnionOracle),
+    Query("sketch_cms_topk", cmsHeavyHitters, cmsOracle),
+    Query("sketch_kmv_distinct", kmvDistinct, kmvOracle),
+    Query("sketch_hll_gate", hllGate, hllGateOracle),
+    Query("sketch_quantile_gate", quantileGate, quantileGateOracle),
+    Query("sketch_qdigest_quantiles", qdigestQuantiles, qdigestOracle),
   )
 }

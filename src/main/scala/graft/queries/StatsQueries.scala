@@ -2249,77 +2249,40 @@ SELECT g, n, cov_sign,
 FROM s ORDER BY g
 """
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "stats_simpson" -> (simpson _),
-    "stats_diff_in_diff" -> (diffInDiff _),
-    "stats_capture_recapture" -> (captureRecapture _),
-    "stats_ab_test" -> (abTest _),
-    "stats_anova" -> (anova _),
-    "stats_welch_ttest" -> (welchTtest _),
-    "stats_power_prop" -> (powerProp _),
-    "stats_logrank" -> (logrank _),
-    "stats_spearman" -> (spearman _),
-    "stats_theilsen" -> (theilSen _),
-    "stats_mann_kendall" -> (mannKendall _),
-    "stats_seasonality" -> (seasonality _),
-    "stats_pareto_front" -> (paretoFront _),
-    "stats_runs_test" -> (runsTest _),
-    "stats_bootstrap_ci" -> (bootstrapCi _),
-    "q52_attribution" -> (attribution _),
-    "stats_autocorr" -> (autocorr _),
-    "stats_winsorized" -> (winsorized _),
-    "stats_ks_test" -> (ksTest _),
-    "stats_mannwhitney" -> (mannWhitney _),
-    "stats_cusum" -> (cusum _),
-    "stats_benford" -> (benford _),
-    "stats_gini_concentration" -> (giniConcentration _),
-    "stats_markov_transitions" -> (markovTransitions _),
-    "stats_chi2" -> (chi2 _),
-    "q51_decile_profile" -> (decileProfile _),
-    "q50_mad_robust" -> (madRobust _),
-    "q45_anomaly" -> (anomaly _),
-    "q44_profile" -> (profile _),
-    "q29_stats_moments" -> (statsMoments _),
-    "q30_hist_equiwidth" -> (histEquiWidth _),
-    "q31_funnel" -> (funnel _),
-    "q32_retention" -> (retention _),
-    "q33_scd2" -> (scd2 _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "stats_simpson" -> simpsonOracle,
-    "stats_diff_in_diff" -> diffInDiffOracle,
-    "stats_capture_recapture" -> captureRecaptureOracle,
-    "stats_ab_test" -> abTestOracle,
-    "stats_anova" -> anovaOracle,
-    "stats_welch_ttest" -> welchTtestOracle,
-    "stats_power_prop" -> powerPropOracle,
-    "stats_logrank" -> logrankOracle,
-    "stats_spearman" -> spearmanOracle,
-    "q52_attribution" -> attributionOracle,
-    "stats_autocorr" -> autocorrOracle,
-    "stats_winsorized" -> winsorizedOracle,
-    "stats_ks_test" -> ksTestOracle,
-    "stats_mannwhitney" -> mannWhitneyOracle,
-    "stats_cusum" -> cusumOracle,
-    "stats_benford" -> benfordOracle,
-    "stats_gini_concentration" -> giniConcentrationOracle,
-    "stats_markov_transitions" -> markovTransitionsOracle,
-    "stats_theilsen" -> theilSenOracle,
-    "stats_mann_kendall" -> mannKendallOracle,
-    "stats_seasonality" -> seasonalityOracle,
-    "stats_pareto_front" -> paretoFrontOracle,
-    "stats_runs_test" -> runsTestOracle,
-    "stats_bootstrap_ci" -> bootstrapCiOracle,
-    "stats_chi2" -> chi2Oracle,
-    "q51_decile_profile" -> decileProfileOracle,
-    "q50_mad_robust" -> madRobustOracle,
-    "q45_anomaly" -> anomalyOracle,
-    "q44_profile" -> profileOracle,
-    "q29_stats_moments" -> statsMomentsOracle,
-    "q30_hist_equiwidth" -> histEquiWidthOracle,
-    "q31_funnel" -> funnelOracle,
-    "q32_retention" -> retentionOracle,
-    "q33_scd2" -> scd2Oracle,
+  val all: Seq[Query] = Seq(
+    Query("stats_simpson", simpson, simpsonOracle),
+    Query("stats_diff_in_diff", diffInDiff, diffInDiffOracle),
+    Query("stats_capture_recapture", captureRecapture, captureRecaptureOracle),
+    Query("stats_ab_test", abTest, abTestOracle),
+    Query("stats_anova", anova, anovaOracle),
+    Query("stats_welch_ttest", welchTtest, welchTtestOracle),
+    Query("stats_power_prop", powerProp, powerPropOracle),
+    Query("stats_logrank", logrank, logrankOracle),
+    Query("stats_spearman", spearman, spearmanOracle),
+    Query("stats_theilsen", theilSen, theilSenOracle),
+    Query("stats_mann_kendall", mannKendall, mannKendallOracle),
+    Query("stats_seasonality", seasonality, seasonalityOracle),
+    Query("stats_pareto_front", paretoFront, paretoFrontOracle),
+    Query("stats_runs_test", runsTest, runsTestOracle),
+    Query("stats_bootstrap_ci", bootstrapCi, bootstrapCiOracle),
+    Query("q52_attribution", attribution, attributionOracle),
+    Query("stats_autocorr", autocorr, autocorrOracle),
+    Query("stats_winsorized", winsorized, winsorizedOracle),
+    Query("stats_ks_test", ksTest, ksTestOracle),
+    Query("stats_mannwhitney", mannWhitney, mannWhitneyOracle),
+    Query("stats_cusum", cusum, cusumOracle),
+    Query("stats_benford", benford, benfordOracle),
+    Query("stats_gini_concentration", giniConcentration, giniConcentrationOracle),
+    Query("stats_markov_transitions", markovTransitions, markovTransitionsOracle),
+    Query("stats_chi2", chi2, chi2Oracle),
+    Query("q51_decile_profile", decileProfile, decileProfileOracle),
+    Query("q50_mad_robust", madRobust, madRobustOracle),
+    Query("q45_anomaly", anomaly, anomalyOracle),
+    Query("q44_profile", profile, profileOracle),
+    Query("q29_stats_moments", statsMoments, statsMomentsOracle),
+    Query("q30_hist_equiwidth", histEquiWidth, histEquiWidthOracle),
+    Query("q31_funnel", funnel, funnelOracle),
+    Query("q32_retention", retention, retentionOracle),
+    Query("q33_scd2", scd2, scd2Oracle),
   )
 }

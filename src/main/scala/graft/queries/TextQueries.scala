@@ -896,26 +896,6 @@ FROM pairs p JOIN marg ma ON ma.w = p.a JOIN marg mb ON mb.w = p.b
 ORDER BY pmi_ratio_ppm DESC, c_ab DESC, a, b LIMIT 20
 """
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "text_collocation_pmi" -> (collocationPmi _),
-    "text_rake_keywords" -> (rakeKeywords _),
-    "text_hapax" -> (hapax _),
-    "text_boilerplate" -> (boilerplate _),
-    "text_novelty" -> (novelty _),
-    "text_source_drift" -> (sourceDrift _),
-    "text_char_gini" -> (charGini _),
-    "text_zipf" -> (zipf _),
-    "text_lm_quality" -> (lmQuality _),
-    "text_bigram_lm" -> (bigramLm _),
-    "text_bm25_topk" -> (bm25Topk _),
-    "text_tfidf_topk" -> (tfidfTopk _),
-    "text_repetition" -> (repetition _),
-    "text_stats" -> (textStats _),
-    "text_langid" -> (langId _),
-    "text_token_counts" -> (tokenCounts _),
-    "text_fingerprint" -> (fingerprint _),
-  )
-
   // Same (count desc, bigram asc) winner, picked via a rank window —
   // method differs from the Spark min(struct) but the total order is
   // identical, so the values hash-match.
@@ -940,23 +920,23 @@ SELECT doc_id, n_bigrams, n_distinct_bigrams, c AS top_count,
 FROM ranked WHERE rn = 1 ORDER BY doc_id
 """
 
-  val oracles: Map[String, String] = Map(
-    "text_collocation_pmi" -> collocationPmiOracle,
-    "text_rake_keywords" -> rakeOracle,
-    "text_hapax" -> hapaxOracle,
-    "text_boilerplate" -> boilerplateOracle,
-    "text_novelty" -> noveltyOracle,
-    "text_source_drift" -> sourceDriftOracle,
-    "text_char_gini" -> charGiniOracle,
-    "text_zipf" -> zipfOracle,
-    "text_tfidf_topk" -> tfidfTopkOracle,
-    "text_bm25_topk" -> bm25TopkOracle,
-    "text_bigram_lm" -> bigramLmOracle,
-    "text_lm_quality" -> lmQualityOracle,
-    "text_repetition" -> repetitionOracle,
-    "text_stats" -> textStatsOracle,
-    "text_langid" -> langIdOracle,
-    "text_token_counts" -> tokenCountsOracle,
-    "text_fingerprint" -> fingerprintOracle,
+  val all: Seq[Query] = Seq(
+    Query("text_collocation_pmi", collocationPmi, collocationPmiOracle),
+    Query("text_rake_keywords", rakeKeywords, rakeOracle),
+    Query("text_hapax", hapax, hapaxOracle),
+    Query("text_boilerplate", boilerplate, boilerplateOracle),
+    Query("text_novelty", novelty, noveltyOracle),
+    Query("text_source_drift", sourceDrift, sourceDriftOracle),
+    Query("text_char_gini", charGini, charGiniOracle),
+    Query("text_zipf", zipf, zipfOracle),
+    Query("text_lm_quality", lmQuality, lmQualityOracle),
+    Query("text_bigram_lm", bigramLm, bigramLmOracle),
+    Query("text_bm25_topk", bm25Topk, bm25TopkOracle),
+    Query("text_tfidf_topk", tfidfTopk, tfidfTopkOracle),
+    Query("text_repetition", repetition, repetitionOracle),
+    Query("text_stats", textStats, textStatsOracle),
+    Query("text_langid", langId, langIdOracle),
+    Query("text_token_counts", tokenCounts, tokenCountsOracle),
+    Query("text_fingerprint", fingerprint, fingerprintOracle),
   )
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.queries.Query
+
 /** Structured Streaming over the `events` table: the same parquet data
   * replayed through `readStream` (file source), windowed/sessionized
   * with streaming state, run to completion with `Trigger.AvailableNow`
@@ -1691,56 +1693,30 @@ GROUP BY ROLLUP(CAST(ts AS DATE), event_type)
 ORDER BY day ASC NULLS FIRST, event_type ASC NULLS FIRST
 """
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "stream_progress_metrics" -> (progressMetrics _),
-    "stream_state_reader" -> (stateReader _),
-    "stream_checkpoint_recovery" -> (checkpointRecovery _),
-    "stream_chained_windows" -> (chainedWindows _),
-    "stream_session_timers" -> (sessionTimers _),
-    "stream_foreachbatch_upsert" -> (foreachBatchUpsert _),
-    "stream_cc_incremental" -> (ccIncrementalStream _),
-    "stream_cc_decremental" -> (ccDecrementalStream _),
-    "stream_dedup_watermark" -> (dedupWatermark _),
-    "stream_running_count" -> (runningCount _),
-    "stream_mapstate_modes" -> (mapStateModes _),
-    "stream_liststate_median" -> (listStateMedian _),
-    "stream_update_mode" -> (updateMode _),
-    "stream_outer_join" -> (outerJoin _),
-    "stream_late_data" -> (lateData _),
-    "stream_static_join" -> (staticJoin _),
-    "stream_interval_join" -> (intervalJoin _),
-    "stream_dedup" -> (dedupCounts _),
-    "stream_windowed_counts" -> (windowedCounts _),
-    "stream_sessions" -> (sessions _),
-    "stream_stateful_agg" -> (statefulUserAgg _),
-    "stream_file_sink" -> (fileSinkEtl _),
-    "stream_rollup_reagg" -> (rollupReagg _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "stream_progress_metrics" -> progressMetricsOracle,
-    "stream_state_reader" -> stateReaderOracle,
-    "stream_checkpoint_recovery" -> checkpointRecoveryOracle,
-    "stream_chained_windows" -> chainedWindowsOracle,
-    "stream_session_timers" -> sessionTimersOracle,
-    "stream_foreachbatch_upsert" -> foreachBatchUpsertOracle,
-    "stream_cc_incremental" -> ccIncrementalStreamOracle,
-    "stream_cc_decremental" -> ccDecrementalStreamOracle,
-    "stream_dedup_watermark" -> dedupWatermarkOracle,
-    "stream_running_count" -> runningCountOracle,
-    "stream_mapstate_modes" -> mapStateModesOracle,
-    "stream_liststate_median" -> listStateMedianOracle,
-    "stream_update_mode" -> updateModeOracle,
-    "stream_outer_join" -> outerJoinOracle,
-    "stream_late_data" -> lateDataOracle,
-    "stream_static_join" -> staticJoinOracle,
-    "stream_interval_join" -> intervalJoinOracle,
-    "stream_dedup" -> dedupCountsOracle,
-    "stream_windowed_counts" -> windowedCountsOracle,
-    "stream_sessions" -> sessionsOracle,
-    "stream_stateful_agg" -> statefulUserAggOracle,
-    "stream_file_sink" -> fileSinkEtlOracle,
-    "stream_rollup_reagg" -> rollupReaggOracle,
+  val all: Seq[Query] = Seq(
+    Query("stream_progress_metrics", progressMetrics, progressMetricsOracle),
+    Query("stream_state_reader", stateReader, stateReaderOracle),
+    Query("stream_checkpoint_recovery", checkpointRecovery, checkpointRecoveryOracle),
+    Query("stream_chained_windows", chainedWindows, chainedWindowsOracle),
+    Query("stream_session_timers", sessionTimers, sessionTimersOracle),
+    Query("stream_foreachbatch_upsert", foreachBatchUpsert, foreachBatchUpsertOracle),
+    Query("stream_cc_incremental", ccIncrementalStream, ccIncrementalStreamOracle),
+    Query("stream_cc_decremental", ccDecrementalStream, ccDecrementalStreamOracle),
+    Query("stream_dedup_watermark", dedupWatermark, dedupWatermarkOracle),
+    Query("stream_running_count", runningCount, runningCountOracle),
+    Query("stream_mapstate_modes", mapStateModes, mapStateModesOracle),
+    Query("stream_liststate_median", listStateMedian, listStateMedianOracle),
+    Query("stream_update_mode", updateMode, updateModeOracle),
+    Query("stream_outer_join", outerJoin, outerJoinOracle),
+    Query("stream_late_data", lateData, lateDataOracle),
+    Query("stream_static_join", staticJoin, staticJoinOracle),
+    Query("stream_interval_join", intervalJoin, intervalJoinOracle),
+    Query("stream_dedup", dedupCounts, dedupCountsOracle),
+    Query("stream_windowed_counts", windowedCounts, windowedCountsOracle),
+    Query("stream_sessions", sessions, sessionsOracle),
+    Query("stream_stateful_agg", statefulUserAgg, statefulUserAggOracle),
+    Query("stream_file_sink", fileSinkEtl, fileSinkEtlOracle),
+    Query("stream_rollup_reagg", rollupReagg, rollupReaggOracle),
   )
 }
 

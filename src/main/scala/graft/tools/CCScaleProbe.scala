@@ -10,17 +10,17 @@ import graft.cc.{CliqueGen, ConnectedComponents, EdgeBuilder, Tuning}
   * CliqueGen graph 10-100x the sf0.1 bench graph, runs BOTH
   * `runContracted` (the 100 TB path) and the plain alternating fixpoint
   * on the same edges, and validates labels against CliqueGen's ground
-  * truth. With GRAFT_CC_VERBOSE set, runContracted also prints the
-  * contraction ratio and the fixpoint prints per-round times.
+  * truth. The `contracted`, `plain` and `giant` runs also print each
+  * fixpoint round's (large, small) change counts (`CCResult.rounds`).
   *
-  * Usage: GRAFT_CC_VERBOSE=1 runMain graft.tools.CCScaleProbe [nBlocks] [mode]
+  * Usage: runMain graft.tools.CCScaleProbe [nBlocks] [mode]
   * (nBlocks=1000 ~ 4M edges, 5000 ~ 20M, 25000 ~ 100M;
   * mode = all | contracted | plain | incremental | giant — split the
   * biggest runs).
   *
   * `giant` (r10 verdict item 2) is the adversarial SINGLE-component
   * probe: args are
-  * `<nNodes> giant <new|contracted|incremental|reliable|ab|mix [nBlocks]>`
+  * `<nNodes> giant <new|contracted|incremental|reliable|mix [nBlocks]>`
   * (`mix`, r11 verdict item 3, unions the tree with `nBlocks` CliqueGen
   * blocks offset above it — the mega-cluster-plus-long-tail shape real
   * dedup corpora have — and checks both populations' labels exactly)
@@ -226,7 +226,7 @@ object CCScaleProbe {
         r
       }
       System.err.println(s"[probe] contracted: converged=${contracted.converged} " +
-        s"innerIterations=${contracted.iterations}")
+        s"innerIterations=${contracted.iterations} rounds=${contracted.rounds}")
       mismatches("contracted", contracted.assignments)
     }
 
@@ -240,7 +240,7 @@ object CCScaleProbe {
         r
       }
       System.err.println(s"[probe] plain: converged=${plain.converged} " +
-        s"iterations=${plain.iterations}")
+        s"iterations=${plain.iterations} rounds=${plain.rounds}")
       mismatches("plain", plain.assignments)
     }
     if (mode == "preview") {
@@ -305,8 +305,8 @@ object CCScaleProbe {
       // part of the delta to missing nodes and failed the closed-form
       // check spuriously).
       val deltaK = math.min(1000000L, nNodes / 2)
-      // Reliable-checkpoint dir prep, shared by the `reliable` and `ab`
-      // shapes: wipe (guarded), register with the context, watch it.
+      // Reliable-checkpoint dir prep for the `reliable` shape: wipe
+      // (guarded), register with the context, watch it.
       def prepReliableCkptDir(): Unit = {
         val dir = sys.env.getOrElse("SPARK_GRAFT_CKPT_DIR",
           "/tmp/graft_probe_ckpt")
@@ -356,7 +356,7 @@ object CCScaleProbe {
               smallGraphThreshold = 0)
             require(r.converged, "contracted inner solve did not converge")
             System.err.println(
-              s"[probe] giant contracted: innerIterations=${r.iterations}")
+              s"[probe] giant contracted: innerIterations=${r.iterations} rounds=${r.rounds}")
             r.assignments
           case "incremental" =>
             // The MAINTENANCE front door against a standing 10⁸-member
@@ -390,7 +390,8 @@ object CCScaleProbe {
               ConnectedComponents.run(mixed)
             }
             require(r.converged, "mixed fixpoint did not converge")
-            System.err.println(s"[probe] giant mix: iterations=${r.iterations}")
+            System.err.println(
+              s"[probe] giant mix: iterations=${r.iterations} rounds=${r.rounds}")
             r.assignments
           case "reliable" =>
             // VERDICT r12 #4: the configuration a real multi-hour
@@ -404,76 +405,13 @@ object CCScaleProbe {
             val r = ConnectedComponents.run(tree, reliableCheckpoint = true)
             require(r.converged, "reliable fixpoint did not converge")
             System.err.println(
-              s"[probe] giant reliable: iterations=${r.iterations}")
+              s"[probe] giant reliable: iterations=${r.iterations} rounds=${r.rounds}")
             r.assignments
-          case "ab" =>
-            // VERDICT r13 #4: SAME-WINDOW reliable-vs-local A/B. The
-            // r13 claim ("not measurably slower at 5×10⁷": 829.9s
-            // reliable vs 994.5s local) compared two windows on a host
-            // whose per-core wall drifts ±15% between windows — so it
-            // could only say "within the envelope". Interleaving the
-            // legs local → reliable → local in ONE invocation cancels
-            // the clock: the reliable overhead is reported against the
-            // MEAN of the two bracketing local legs, and the pinned
-            // single-thread microbench (graft.Bench.cpuMicrobench)
-            // brackets every leg as the drift witness.
-            prepReliableCkptDir()
-            // Untimed warm-up fixpoint on a small tree: the FIRST
-            // fixpoint in a session pays one-time costs (codegen
-            // compilation for the round's plan shapes, shuffle
-            // machinery init) that the smoke run measured at +40s on
-            // leg 1 vs an identical leg 3 — charged to neither door.
-            locally {
-              val wuTree = spark.range(1L, 200000L)
-                .select(col("id").as("src"), shiftright(col("id"), 1).as("dst"))
-              val wu = ConnectedComponents.run(wuTree)
-              require(wu.converged, "ab warm-up did not converge")
-              spark.sparkContext.getPersistentRDDs.values
-                .foreach(_.unpersist(false))
-            }
-            var walls = Vector.empty[(String, Double)]
-            def leg(tag: String, reliable: Boolean) = {
-              System.err.println(
-                f"[probe] microbench before $tag: ${graft.Bench.cpuMicrobench()}%.3fs")
-              val t0 = System.nanoTime()
-              val r = ConnectedComponents.run(tree,
-                reliableCheckpoint = reliable)
-              val w = (System.nanoTime() - t0) / 1e9
-              require(r.converged, s"ab $tag fixpoint did not converge")
-              val bad = r.assignments
-                .where(col("component") =!= 0L).count()
-              val n = r.assignments.count()
-              require(bad == 0 && n == nNodes,
-                s"ab $tag labels diverged: wrong=$bad rows=$n")
-              walls :+= (tag, w)
-              System.err.println(
-                f"[probe] ab $tag: ${w}%.1fs iterations=${r.iterations}")
-              r
-            }
-            leg("local-1", reliable = false)
-            // free leg state so legs never share cached blocks; the
-            // tree is closed-form and regenerates for free
-            spark.sparkContext.getPersistentRDDs.values
-              .foreach(_.unpersist(false))
-            leg("reliable", reliable = true)
-            spark.sparkContext.getPersistentRDDs.values
-              .foreach(_.unpersist(false))
-            val l3 = leg("local-2", reliable = false)
-            System.err.println(
-              f"[probe] microbench after local-2: ${graft.Bench.cpuMicrobench()}%.3fs")
-            val localMean =
-              (walls(0)._2 + walls(2)._2) / 2.0
-            System.err.println(
-              f"[probe] ab summary: local ${walls(0)._2}%.1fs / " +
-              f"${walls(2)._2}%.1fs (mean $localMean%.1fs), reliable " +
-              f"${walls(1)._2}%.1fs — checkpoint-write overhead " +
-              f"${(walls(1)._2 / localMean - 1.0) * 100}%.1f%% of the " +
-              "same-window local wall")
-            l3.assignments
           case "new" =>
             val r = ConnectedComponents.run(tree)
             require(r.converged, "fixpoint did not converge")
-            System.err.println(s"[probe] giant: iterations=${r.iterations}")
+            System.err.println(
+              s"[probe] giant: iterations=${r.iterations} rounds=${r.rounds}")
             r.assignments
           case other => sys.error(s"unknown giant shape $other")
         }

@@ -2,40 +2,17 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Registry consistency: a query registered in `queries` but missing
-  * from `oracleSql` silently skips the driver's correctness gate (the
-  * checker iterates oracles) — it LOOKS graded while verifying
-  * nothing. The contract allows deliberately oracle-less queries, so
-  * they must be waived HERE by name, not by omission.
+/** Registry consistency. Each [[graft.queries.Query]] carries its own
+  * oracle, so a query without an oracle (or an oracle without a query)
+  * cannot be written. What the type cannot rule out is one name listed
+  * twice: `toMap` keeps only the last entry, and the shadowed
+  * implementation would silently never be graded.
   */
 class RegistrySpec extends AnyFunSuite {
 
-  private val waived = Set.empty[String]
-
-  test("every registered query has an oracle, or a named waiver") {
-    val q = SparkEntry.queries.keySet
-    val o = SparkEntry.oracleSql.keySet
-    val unoracled = q -- o -- waived
-    assert(unoracled.isEmpty,
-      s"queries with no oracle and no waiver: ${unoracled.toSeq.sorted}")
-  }
-
-  test("no oracle points at an unregistered query") {
-    val dangling = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(dangling.isEmpty,
-      s"oracles without a query: ${dangling.toSeq.sorted}")
-  }
-
   test("no query name is registered by two modules") {
-    // `++` over the module maps silently shadows a duplicated name
-    // (last module wins), and because queries and oracleSql would
-    // shadow CONSISTENTLY the set-difference checks above can't see
-    // it — the shadowed implementation would just never be graded.
-    val collisions = SparkEntry.queryModules
-      .flatMap { case (mod, m) => m.keys.map(_ -> mod) }
-      .groupBy(_._1).filter(_._2.size > 1)
-      .map { case (q, ms) => s"$q <- ${ms.map(_._2).mkString(", ")}" }
+    val collisions = SparkEntry.registry.groupBy(_.name).filter(_._2.size > 1)
     assert(collisions.isEmpty,
-      s"query names registered by multiple modules: ${collisions.toSeq.sorted}")
+      s"query names registered more than once: ${collisions.keys.toSeq.sorted}")
   }
 }

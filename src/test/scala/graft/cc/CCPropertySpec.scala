@@ -106,6 +106,21 @@ class CCPropertySpec extends SparkSpec {
     assert(auto.assignments.as[(Long, Long)].collect().toMap === unionFind(edges))
   }
 
+  test("Long.MinValue and Long.MaxValue ids label identically on every CC path") {
+    val s = spark
+    import s.implicits._
+    val edges = List((Long.MinValue, 3L), (42L, 3L), (Long.MinValue, Long.MinValue),
+      (Long.MaxValue, 7L), (Long.MaxValue, Long.MaxValue - 1), (-1L, -1L))
+    val oracle = unionFind(edges)
+    val df = edges.toDF("src", "dst")
+    def labels(r: ConnectedComponents.CCResult) = r.assignments.as[(Long, Long)].collect().toMap
+    assert(labels(ConnectedComponents.run(df, maxIterations = 50)) === oracle)
+    val driver = ConnectedComponents.runAuto(df)
+    assert(driver.iterations === 0 && labels(driver) === oracle)
+    assert(labels(ConnectedComponents.runAuto(df, smallGraphThreshold = 0)) === oracle)
+    assert(labels(ConnectedComponents.runContracted(df.repartition(3))) === oracle)
+  }
+
   test("runContracted matches the fixpoint under every partitioning") {
     val s = spark
     import s.implicits._

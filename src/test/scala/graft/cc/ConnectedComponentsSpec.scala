@@ -224,6 +224,16 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(!ConnectedComponents.stopRule(Some((5L, 3L)), 5L, 4L))
   }
 
+  test("rounds: one (large, small) entry per round; the stop rule fires only on the last") {
+    val res = ConnectedComponents.run(edgesDf((0L until 199L).map(i => (i, i + 1))))
+    assert(res.converged && res.iterations >= 2)
+    assert(res.rounds.size === res.iterations)
+    val prevs = None +: res.rounds.init.map(Some(_))
+    val fired = prevs.zip(res.rounds).map { case (p, (l, sm)) =>
+      ConnectedComponents.stopRule(p, l, sm) }
+    assert(fired === Seq.fill(res.iterations - 1)(false) :+ true)
+  }
+
   test("starEdges: duplicate-only cliques keep their node as a self-pair") {
     val s = spark; import s.implicits._
     val got = EdgeBuilder.starEdges(cliquesDf(Seq(Seq(5L, 5L), Seq(7L, 7L, 8L))))

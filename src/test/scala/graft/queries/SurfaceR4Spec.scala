@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 import org.apache.spark.sql.functions._
 
 /** Invariants of the round-4 surface additions that the hash gate
@@ -12,8 +12,8 @@ class SurfaceR4Spec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   test("graph_lpa is deterministic and covers every node exactly once") {
-    val a = GraphQueries.all("graph_lpa")(spark, sf).collect()
-    val b = GraphQueries.all("graph_lpa")(spark, sf).collect()
+    val a = SparkEntry.queries("graph_lpa")(spark, sf).collect()
+    val b = SparkEntry.queries("graph_lpa")(spark, sf).collect()
     assert(a.toSeq == b.toSeq, "two runs disagree — tie-break is not total")
     val nNodes = Tables.lineitem(spark, sf)
       .select(col("l_partkey")).distinct().count()
@@ -24,7 +24,7 @@ class SurfaceR4Spec extends SparkSpec {
   }
 
   test("sketch_theta_intersect estimate is within 25% of exact truth") {
-    val row = SketchQueries.all("sketch_theta_intersect")(spark, sf).head()
+    val row = SparkEntry.queries("sketch_theta_intersect")(spark, sf).head()
     val est = row.getAs[Long]("est_intersect").toDouble
     val exact = row.getAs[Long]("n_exact").toDouble
     assert(exact > 0, "fixture lost its click∩view overlap")
@@ -35,7 +35,7 @@ class SurfaceR4Spec extends SparkSpec {
   }
 
   test("stats_chi2 cells reconstruct the marginals exactly") {
-    val rows = StatsQueries.all("stats_chi2")(spark, sf).collect()
+    val rows = SparkEntry.queries("stats_chi2")(spark, sf).collect()
     val n = rows.map(_.getAs[Long]("obs")).sum
     val nOrders = Tables.orders(spark, sf).count()
     assert(n == nOrders, "contingency cells must partition the table")
@@ -45,7 +45,7 @@ class SurfaceR4Spec extends SparkSpec {
   }
 
   test("stats_markov transition probabilities sum to ~1 per from-state") {
-    val rows = StatsQueries.all("stats_markov_transitions")(spark, sf).collect()
+    val rows = SparkEntry.queries("stats_markov_transitions")(spark, sf).collect()
     rows.groupBy(_.getAs[String]("from_type")).foreach { case (from, grp) =>
       val pSum = grp.map(_.getAs[Long]("p_micros")).sum
       // Integer division floors each term: sum ∈ (1e6 - |targets|, 1e6].
@@ -62,19 +62,19 @@ class SurfaceR4Spec extends SparkSpec {
     Seq((1L, "aaaa", "en", "s", 4L), (2L, "abcd", "en", "s", 4L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val r = TextQueries.all("text_char_gini")(spark, dir)
+    val r = SparkEntry.queries("text_char_gini")(spark, dir)
       .collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("gini_ppm"))
       .toMap
     assert(r(1L) == 0L, "single-char doc must have zero impurity")
     assert(r(2L) == 750000L, "uniform 4-char doc must be 1 - 4/16 = 750000 ppm")
-    val real = TextQueries.all("text_char_gini")(spark, sf).collect()
+    val real = SparkEntry.queries("text_char_gini")(spark, sf).collect()
     assert(real.forall { x =>
       val g = x.getAs[Long]("gini_ppm"); g >= 0L && g < 1000000L
     })
   }
 
   test("pipe_bpe_merges rank 1 really is the corpus argmax pair") {
-    val top = PipelineQueries.all("pipe_bpe_merges")(spark, sf).collect()
+    val top = SparkEntry.queries("pipe_bpe_merges")(spark, sf).collect()
     assert(top.length == 20 && top.head.getAs[Int]("rank") == 1)
     val counts = top.map(_.getAs[Long]("n"))
     assert(counts.zip(counts.tail).forall { case (a, b) => a >= b },
@@ -82,7 +82,7 @@ class SurfaceR4Spec extends SparkSpec {
   }
 
   test("graph_clustering_coeff bands bound the coefficient domain") {
-    val rows = GraphQueries.all("graph_clustering_coeff")(spark, sf).collect()
+    val rows = SparkEntry.queries("graph_clustering_coeff")(spark, sf).collect()
     assert(rows.length > 1, "degree-band curve collapsed to one band")
     assert(rows.forall { r =>
       val c = r.getAs[Long]("mean_coeff_ppm"); c >= 0L && c <= 1000000L
@@ -94,7 +94,7 @@ class SurfaceR4Spec extends SparkSpec {
   }
 
   test("sim_mips_topk ranking is by raw inner product, not cosine") {
-    val rows = SimilarityQueries.all("sim_mips_topk")(spark, sf).collect()
+    val rows = SparkEntry.queries("sim_mips_topk")(spark, sf).collect()
     val byQuery = rows.groupBy(_.getAs[Long]("query_id"))
     byQuery.foreach { case (_, grp) =>
       val ips = grp.sortBy(_.getAs[Int]("rank")).map(_.getAs[Double]("ip4"))
@@ -113,7 +113,7 @@ class SurfaceR4Spec extends SparkSpec {
     def cum(xs: Array[Long], v: Long): Long = xs.count(_ <= v).toLong
     val grid = (a ++ b).distinct
     val dNum = grid.map(v => math.abs(b.length * cum(a, v) - a.length * cum(b, v))).max
-    val row = StatsQueries.all("stats_ks_test")(spark, sf).head()
+    val row = SparkEntry.queries("stats_ks_test")(spark, sf).head()
     assert(row.getAs[Long]("na") == a.length.toLong)
     assert(row.getAs[Long]("nb") == b.length.toLong)
     assert(row.getAs[Long]("d_num") == dNum,
@@ -126,7 +126,7 @@ class SurfaceR4Spec extends SparkSpec {
     val a = e.filter(_.getString(0) == "purchase").map(r => cents(r.getDouble(1)))
     val b = e.filter(_.getString(0) == "click").map(r => cents(r.getDouble(1)))
     val u2 = a.map(x => 2L * b.count(_ < x) + b.count(_ == x)).sum
-    val row = StatsQueries.all("stats_mannwhitney")(spark, sf).head()
+    val row = SparkEntry.queries("stats_mannwhitney")(spark, sf).head()
     assert(row.getAs[Long]("u2_a") == u2,
       s"2U ${row.getAs[Long]("u2_a")} != brute-force $u2")
     assert(row.getAs[Long]("u2_a") + row.getAs[Long]("u2_b") ==
@@ -134,7 +134,7 @@ class SurfaceR4Spec extends SparkSpec {
   }
 
   test("q52_attribution partitions every purchase and conserves revenue") {
-    val rows = StatsQueries.all("q52_attribution")(spark, sf).collect()
+    val rows = SparkEntry.queries("q52_attribution")(spark, sf).collect()
     val purchases = Tables.events(spark, sf)
       .where(col("event_type") === "purchase")
       .select(col("value")).collect().map(r => cents(r.getDouble(0)))
@@ -147,7 +147,7 @@ class SurfaceR4Spec extends SparkSpec {
   }
 
   test("graph_walk steps traverse real edges from the top-degree starts") {
-    val rows = GraphQueries.all("graph_walk")(spark, sf).collect()
+    val rows = SparkEntry.queries("graph_walk")(spark, sf).collect()
       .map(r => (r.getAs[Long]("walk_id"), r.getAs[Int]("step"),
                  r.getAs[Long]("node")))
     assert(rows.count(_._2 == 0) == 20, "expected 20 walk starts")
@@ -166,7 +166,7 @@ class SurfaceR4Spec extends SparkSpec {
   }
 
   test("sim_pq_assign occupancies partition the corpus in every subspace") {
-    val rows = SimilarityQueries.all("sim_pq_assign")(spark, sf).collect()
+    val rows = SparkEntry.queries("sim_pq_assign")(spark, sf).collect()
     val n = Tables.embeddings(spark, sf).count()
     rows.groupBy(_.getAs[Long]("sub")).foreach { case (sub, grp) =>
       assert(grp.map(_.getAs[Long]("n_vecs")).sum == n,
@@ -180,8 +180,7 @@ class SurfaceR4Spec extends SparkSpec {
   }
 
   test("stream_outer_join pair count equals the batch interval join's") {
-    val rows = graft.streaming.StreamingQueries
-      .all("stream_outer_join")(spark, sf).collect()
+    val rows = SparkEntry.queries("stream_outer_join")(spark, sf).collect()
     val ev = Tables.events(spark, sf)
       .select(col("user_id"), col("event_type"), expr("unix_micros(ts)").as("us"))
     val c = ev.where(col("event_type") === "click")
@@ -200,7 +199,7 @@ class SurfaceR4Spec extends SparkSpec {
   }
 
   test("text_novelty: every distinct gram is novel exactly once") {
-    val rows = TextQueries.all("text_novelty")(spark, sf).collect()
+    val rows = SparkEntry.queries("text_novelty")(spark, sf).collect()
     val nDistinct = Tables.documents(spark, sf)
       .select(explode(graft.functions.TrigramHashes(
         split(col("text"), " "))).as("g"))
@@ -215,7 +214,7 @@ class SurfaceR4Spec extends SparkSpec {
   test("sketch_bloom_fp has zero false negatives on the build keys") {
     // Re-probe the filter with the BUILD keyspace: every key must hit
     // all 3 positions (the Bloom contract the FP audit presumes).
-    val row = SketchQueries.all("sketch_bloom_fp")(spark, sf).head()
+    val row = SparkEntry.queries("sketch_bloom_fp")(spark, sf).head()
     assert(row.getAs[Long]("n_fp") * 100L <= row.getAs[Long]("n_probes"),
       "false-positive rate implausibly high for m=65536, k=3")
     val p = 2147483647L
@@ -238,7 +237,7 @@ class SurfaceR4Spec extends SparkSpec {
         .as("y"))
       .collect().map(r => (r.getAs[Any]("d").toString, r.getAs[Long]("y")))
       .sortBy(_._1)
-    val got = RelationalQueries.all("q53_rolling_slope")(spark, sf)
+    val got = SparkEntry.queries("q53_rolling_slope")(spark, sf)
       .collect()
       .map(r => r.getAs[Any]("d").toString ->
         r.getAs[Long]("slope_cents_per_day"))
@@ -254,7 +253,7 @@ class SurfaceR4Spec extends SparkSpec {
   }
 
   test("stats_autocorr stays in [-1, 1] and matches brute force") {
-    val row = StatsQueries.all("stats_autocorr")(spark, sf).head()
+    val row = SparkEntry.queries("stats_autocorr")(spark, sf).head()
     val r1 = row.getAs[Long]("r1_micros")
     assert(r1 >= -1000000L && r1 <= 1000000L)
     val daily = Tables.orders(spark, sf)
@@ -271,7 +270,7 @@ class SurfaceR4Spec extends SparkSpec {
   }
 
   test("er_blocking_audit pair counts are consistent with block sizes") {
-    val rows = MatchQueries.all("er_blocking_audit")(spark, sf).collect()
+    val rows = SparkEntry.queries("er_blocking_audit")(spark, sf).collect()
     assert(rows.length == 2)
     rows.foreach { r =>
       val mx = r.getAs[Long]("max_block")
@@ -282,8 +281,8 @@ class SurfaceR4Spec extends SparkSpec {
   }
 
   test("pipe_epoch_shuffle epochs are deterministic and distinct") {
-    val a = PipelineQueries.all("pipe_epoch_shuffle")(spark, sf).collect()
-    val b = PipelineQueries.all("pipe_epoch_shuffle")(spark, sf).collect()
+    val a = SparkEntry.queries("pipe_epoch_shuffle")(spark, sf).collect()
+    val b = SparkEntry.queries("pipe_epoch_shuffle")(spark, sf).collect()
     assert(a.toSeq == b.toSeq, "reshuffle must be reproducible")
     val byEpoch = a.groupBy(_.getAs[Long]("epoch"))
       .map { case (e, g) => e -> g.sortBy(_.getAs[Long]("rank"))
@@ -306,7 +305,7 @@ class SurfaceR4Spec extends SparkSpec {
       cum += x; (day, n * cum - (i + 1) * total)
     }
     val best = s.maxBy { case (day, v) => (math.abs(v), -day) }
-    val rows = StatsQueries.all("stats_cusum")(spark, sf).collect()
+    val rows = SparkEntry.queries("stats_cusum")(spark, sf).collect()
     assert(rows.length == 5)
     assert(rows.head.getAs[Long]("day") == best._1)
     assert(rows.head.getAs[Long]("s_scaled") == best._2)
@@ -316,7 +315,7 @@ class SurfaceR4Spec extends SparkSpec {
   }
 
   test("graph_shortest_path histogram: sources at 0, bounded by 6 max-weight hops") {
-    val rows = GraphQueries.all("graph_shortest_path")(spark, sf).collect()
+    val rows = SparkEntry.queries("graph_shortest_path")(spark, sf).collect()
     val hist = rows.map(r => (r.getAs[Long]("d"), r.getAs[Long]("n_nodes"))).toMap
     // Every source (graph node with id % 97 == 0) must sit at distance 0.
     val nSources = Tables.lineitem(spark, sf)
@@ -334,8 +333,8 @@ class SurfaceR4Spec extends SparkSpec {
   }
 
   test("media_scene_cuts rows are video-only, self-consistent, deterministic") {
-    val a = graft.multimodal.MultimodalQueries.all("media_scene_cuts")(spark, sf).collect()
-    val b = graft.multimodal.MultimodalQueries.all("media_scene_cuts")(spark, sf).collect()
+    val a = SparkEntry.queries("media_scene_cuts")(spark, sf).collect()
+    val b = SparkEntry.queries("media_scene_cuts")(spark, sf).collect()
     assert(a.toSeq == b.toSeq, "scene cuts must be deterministic")
     assert(a.nonEmpty, "threshold stopped firing — corpus or codec drifted")
     a.foreach { r =>
@@ -348,7 +347,7 @@ class SurfaceR4Spec extends SparkSpec {
   }
 
   test("q54_window_distinct counts stay within the event-type alphabet") {
-    val rows = RelationalQueries.all("q54_window_distinct")(spark, sf).collect()
+    val rows = SparkEntry.queries("q54_window_distinct")(spark, sf).collect()
     val nTypes = Tables.events(spark, sf)
       .select(col("event_type")).distinct().count()
     rows.foreach { r =>
@@ -364,7 +363,7 @@ class SurfaceR4Spec extends SparkSpec {
   }
 
   test("text_boilerplate fractions are consistent with the 5-gram census") {
-    val rows = TextQueries.all("text_boilerplate")(spark, sf).collect()
+    val rows = SparkEntry.queries("text_boilerplate")(spark, sf).collect()
     rows.foreach { r =>
       val n = r.getAs[Long]("n_grams"); val b = r.getAs[Long]("n_boiler")
       assert(b >= 0 && b <= n, "boiler occurrences must be a subset")
@@ -378,7 +377,7 @@ class SurfaceR4Spec extends SparkSpec {
   }
 
   test("er_golden survivors are real records carrying the cluster max price") {
-    val rows = MatchQueries.all("er_golden")(spark, sf).collect()
+    val rows = SparkEntry.queries("er_golden")(spark, sf).collect()
     assert(rows.nonEmpty, "fixture lost its multi-name entities")
     val parts = Tables.part(spark, sf)
       .select(col("p_partkey").cast("long").as("pk"),
@@ -395,7 +394,7 @@ class SurfaceR4Spec extends SparkSpec {
 
   test("cc_decremental equals a from-scratch solve of the surviving graph") {
     import graft.cc.{ConnectedComponents, EdgeBuilder}
-    val maintained = GraphQueries.all("cc_decremental")(spark, sf).collect()
+    val maintained = SparkEntry.queries("cc_decremental")(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap
     val li = Tables.lineitem(spark, sf).where(col("l_quantity") >= 45)
       .where(col("l_orderkey") % 10 =!= 3)
@@ -413,7 +412,7 @@ class SurfaceR4Spec extends SparkSpec {
   }
 
   test("sketch_ams_f2 estimate is within its asserted 25% of exact truth") {
-    val row = SketchQueries.all("sketch_ams_f2")(spark, sf).head()
+    val row = SparkEntry.queries("sketch_ams_f2")(spark, sf).head()
     assert(row.getAs[Long]("f2_exact") > 0)
     assert(row.getAs[Long]("f2_est") > 0, "sign sums degenerated to zero")
     assert(row.getAs[Boolean]("ams_within_25pct"),
@@ -422,7 +421,7 @@ class SurfaceR4Spec extends SparkSpec {
   }
 
   test("pipe_temperature_mix flattens shares toward uniform, budget conserved") {
-    val rows = PipelineQueries.all("pipe_temperature_mix")(spark, sf).collect()
+    val rows = SparkEntry.queries("pipe_temperature_mix")(spark, sf).collect()
     assert(rows.length >= 2, "need a multilingual fixture")
     val maxRow = rows.maxBy(_.getAs[Long]("n_docs"))
     val minRow = rows.minBy(_.getAs[Long]("n_docs"))
@@ -439,7 +438,7 @@ class SurfaceR4Spec extends SparkSpec {
   }
 
   test("stats_bootstrap_ci interval is ordered and brackets the point estimate") {
-    val row = StatsQueries.all("stats_bootstrap_ci")(spark, sf).head()
+    val row = SparkEntry.queries("stats_bootstrap_ci")(spark, sf).head()
     val lo = row.getAs[Long]("ci_lo"); val hi = row.getAs[Long]("ci_hi")
     val mean = row.getAs[Long]("mean_all")
     assert(lo < hi, "degenerate interval")
@@ -448,7 +447,7 @@ class SurfaceR4Spec extends SparkSpec {
   }
 
   test("dedup_containment is genuinely asymmetric and within bounds") {
-    val rows = DedupQueries.all("dedup_containment")(spark, sf).collect()
+    val rows = SparkEntry.queries("dedup_containment")(spark, sf).collect()
     assert(rows.nonEmpty, "fixture lost its subset documents")
     rows.foreach { r =>
       val ppm = r.getAs[Long]("containment_ppm")
@@ -469,7 +468,7 @@ class SurfaceR4Spec extends SparkSpec {
   }
 
   test("stats_theilsen pair count is exactly C(days, 2) per priority") {
-    val rows = StatsQueries.all("stats_theilsen")(spark, sf).collect()
+    val rows = SparkEntry.queries("stats_theilsen")(spark, sf).collect()
     assert(rows.length == 5, "one row per order priority")
     val days = Tables.orders(spark, sf)
       .groupBy("o_orderpriority")

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 import org.apache.spark.sql.functions._
 
 /** Invariants of the round-5 surface additions that the hash gate
@@ -33,7 +33,7 @@ class SurfaceR5Spec extends SparkSpec {
 
   test("q60_sql_udf: the SQL UDF inlines — same optimized plan and " +
        "values as the hand-written expression") {
-    val viaUdf = RelationalQueries.all("q60_sql_udf")(spark, sf)
+    val viaUdf = SparkEntry.queries("q60_sql_udf")(spark, sf)
     val inlined = Tables.lineitem(spark, sf)
       .groupBy("l_returnflag", "l_linestatus")
       .agg(count(lit(1)).as("n"),
@@ -49,7 +49,7 @@ class SurfaceR5Spec extends SparkSpec {
 
   test("stats_seasonality: seven weekday rows, day counts partition the " +
        "calendar, ppm indexes straddle parity") {
-    val rows = StatsQueries.all("stats_seasonality")(spark, sf).collect()
+    val rows = SparkEntry.queries("stats_seasonality")(spark, sf).collect()
     assert(rows.map(_.getAs[Long]("wd")).toSeq === (0L to 6L))
     val nDays = Tables.orders(spark, sf).select("o_orderdate").distinct().count()
     assert(rows.map(_.getAs[Long]("n_days")).sum === nDays)
@@ -60,7 +60,7 @@ class SurfaceR5Spec extends SparkSpec {
 
   test("pipe_preference_pairs: chosen strictly outscores rejected and " +
        "both docs belong to the pair's group") {
-    val pairs = PipelineQueries.all("pipe_preference_pairs")(spark, sf).collect()
+    val pairs = SparkEntry.queries("pipe_preference_pairs")(spark, sf).collect()
     assert(pairs.nonEmpty)
     val groupOf = Tables.documents(spark, sf)
       .select("doc_id", "source", "lang").collect()
@@ -79,7 +79,7 @@ class SurfaceR5Spec extends SparkSpec {
 
   test("q61_null_safe_join: the NULL bucket survives with both sides' " +
        "counts; a plain = join drops it") {
-    val rows = RelationalQueries.all("q61_null_safe_join")(spark, sf).collect()
+    val rows = SparkEntry.queries("q61_null_safe_join")(spark, sf).collect()
     val nullRow = rows.filter(_.isNullAt(0))
     assert(nullRow.length === 1, "exactly one NULL-key row must match")
     val nCust7 = Tables.customer(spark, sf)
@@ -91,7 +91,7 @@ class SurfaceR5Spec extends SparkSpec {
   }
 
   test("q62_try_arithmetic: null counts identify the failure rows exactly") {
-    val rows = RelationalQueries.all("q62_try_arithmetic")(spark, sf).collect()
+    val rows = SparkEntry.queries("q62_try_arithmetic")(spark, sf).collect()
     val li = Tables.lineitem(spark, sf)
     rows.foreach { r =>
       val flag = r.getAs[String]("l_returnflag")
@@ -108,8 +108,7 @@ class SurfaceR5Spec extends SparkSpec {
 
   test("stream_foreachbatch_upsert: merged table equals the batch rollup " +
        "with no duplicate keys") {
-    val got = graft.streaming.StreamingQueries.all(
-      "stream_foreachbatch_upsert")(spark, sf).collect()
+    val got = SparkEntry.queries("stream_foreachbatch_upsert")(spark, sf).collect()
     assert(got.map(r => (r.getLong(0), r.getString(1))).distinct.length
       === got.length, "upsert must leave one row per key")
     val batch = Tables.events(spark, sf)
@@ -123,7 +122,7 @@ class SurfaceR5Spec extends SparkSpec {
 
   test("pipe_span_masking: matches a brute-force mask simulation and " +
        "span runs are maximal") {
-    val got = PipelineQueries.all("pipe_span_masking")(spark, sf).collect()
+    val got = SparkEntry.queries("pipe_span_masking")(spark, sf).collect()
     val docs = Tables.documents(spark, sf)
       .select("doc_id", "text").collect()
       .map(r => r.getAs[Long]("doc_id") ->
@@ -145,7 +144,7 @@ class SurfaceR5Spec extends SparkSpec {
 
   test("sketch_cms_merge: cell-wise addition is lossless and neither " +
        "path's estimate undercounts") {
-    val r = SketchQueries.all("sketch_cms_merge")(spark, sf).head()
+    val r = SparkEntry.queries("sketch_cms_merge")(spark, sf).head()
     assert(r.getAs[Long]("mismatch_cells") === 0L,
       "CMS linearity: merged cells must equal the whole-table sketch")
     assert(r.getAs[Long]("est_whole") === r.getAs[Long]("est_merged"),
@@ -156,8 +155,8 @@ class SurfaceR5Spec extends SparkSpec {
 
   test("graph_hits: L-inf normalization pins the top authority at 1e6, " +
        "scores bounded, deterministic") {
-    val a = GraphQueries.all("graph_hits")(spark, sf).collect()
-    val b = GraphQueries.all("graph_hits")(spark, sf).collect()
+    val a = SparkEntry.queries("graph_hits")(spark, sf).collect()
+    val b = SparkEntry.queries("graph_hits")(spark, sf).collect()
     assert(a.toSeq === b.toSeq, "two runs disagree")
     assert(a.nonEmpty && a.head.getAs[Long]("authority_fp") === 1000000L,
       "max-normalization must pin the top score")
@@ -167,7 +166,7 @@ class SurfaceR5Spec extends SparkSpec {
 
   test("stats_pareto_front: no emitted point dominates another within " +
        "its brand; each brand's cheapest point survives") {
-    val rows = StatsQueries.all("stats_pareto_front")(spark, sf).collect()
+    val rows = SparkEntry.queries("stats_pareto_front")(spark, sf).collect()
       .map(r => (r.getAs[String]("p_brand"), r.getAs[Int]("p_size"),
         r.getAs[Long]("price_cents")))
     assert(rows.nonEmpty)
@@ -188,7 +187,7 @@ class SurfaceR5Spec extends SparkSpec {
   test("media_silence_trim: trim arithmetic is consistent and the peak " +
        "window is never trimmed") {
     import graft.multimodal.MultimodalQueries
-    val trims = MultimodalQueries.all("media_silence_trim")(spark, sf)
+    val trims = SparkEntry.queries("media_silence_trim")(spark, sf)
       .collect().map(r => r.getAs[Long]("doc_id") ->
         (r.getAs[Int]("n_windows"), r.getAs[Int]("lead_trim"),
          r.getAs[Int]("tail_trim"), r.getAs[Int]("kept_windows"))).toMap
@@ -197,7 +196,7 @@ class SurfaceR5Spec extends SparkSpec {
       assert(lead + tail + kept === nw)
       assert(kept >= 1, "at least the peak window is active")
     }
-    MultimodalQueries.all("media_audio_energy")(spark, sf).collect()
+    SparkEntry.queries("media_audio_energy")(spark, sf).collect()
       .foreach { r =>
         val (nw, lead, tail, _) = trims(r.getAs[Long]("doc_id"))
         val peak = r.getAs[Int]("peak_idx")
@@ -208,7 +207,7 @@ class SurfaceR5Spec extends SparkSpec {
 
   test("sim_binary_sign_ann: hamming matches a brute-force sign-bit " +
        "recompute and halves stay in 32-bit range") {
-    val got = SimilarityQueries.all("sim_binary_sign_ann")(spark, sf).collect()
+    val got = SparkEntry.queries("sim_binary_sign_ann")(spark, sf).collect()
     assert(got.nonEmpty)
     val sigs = Tables.embeddings(spark, sf)
       .select("vec_id", "embedding").collect()
@@ -245,7 +244,7 @@ class SurfaceR5Spec extends SparkSpec {
       .collect()
       .map(r => (r.getAs[String]("g"), r.getAs[Long]("x"), r.getAs[Long]("y")))
       .groupBy(_._1)
-    val got = StatsQueries.all("stats_runs_test")(spark, sf).collect()
+    val got = SparkEntry.queries("stats_runs_test")(spark, sf).collect()
     got.foreach { r =>
       val g = r.getAs[String]("o_orderpriority")
       val series = daily(g).sortBy(_._2)
@@ -261,7 +260,7 @@ class SurfaceR5Spec extends SparkSpec {
 
   test("io_partition_overwrite: dynamic mode preserves untouched " +
        "partitions and redacts exactly the en partition") {
-    val rows = IoQueries.all("io_partition_overwrite")(spark, sf).collect()
+    val rows = SparkEntry.queries("io_partition_overwrite")(spark, sf).collect()
     val before = Tables.documents(spark, sf)
       .groupBy("lang").agg(count(lit(1)).as("n"), sum("n_chars").as("tc"))
       .collect().map(r => r.getAs[String]("lang") ->

@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 
 /** Streaming semantics:
   *  - the finite-replay queries equal their batch equivalents;
@@ -205,7 +205,7 @@ class StreamingSpec extends SparkSpec {
   test("session timers close exactly the gap sessions plus watermark-" +
        "expired finals") {
     import org.apache.spark.sql.expressions.Window
-    val streamed = StreamingQueries.all("stream_session_timers")(spark, sfDir)
+    val streamed = SparkEntry.queries("stream_session_timers")(spark, sfDir)
       .collect()
     val ev = graft.queries.Tables.events(spark, sfDir)
       .select(col("user_id"), unix_micros(col("ts")).as("us"))
