@@ -152,29 +152,6 @@ object ConnectedComponents {
     CCResult(out, converged, rounds.size, rounds)
   }
 
-  /** Adaptive variant — the CC analog of Spark's
-    * `autoBroadcastJoinThreshold`: count the (distinct) edges first; at
-    * or below `smallGraphThreshold` solve with a driver-side union-find
-    * (one collect, exact same min-labels), otherwise run the
-    * distributed alternating fixpoint. Rationale: a fixpoint iteration
-    * costs 2 shuffles + 2 actions of fixed latency, so a converged
-    * 6-round run on a few thousand edges spends seconds of pure
-    * scheduling — while a sub-million-edge graph union-finds in
-    * milliseconds in the driver (exactly the regime where AQE would
-    * broadcast a join side). Threshold is edge COUNT. On the
-    * distributed branch the already-counted edges also size the input
-    * partitions against heap-per-core (see inline comment) — the
-    * round-10 probe lesson that map-side state per task, not total
-    * heap, is what OOMs a halved-memory run. Driver memory at
-    * the default 4M edges: the union-find map is compact (~16 bytes per
-    * node slot, open addressing), but the `collect()` itself transits
-    * up to 4M boxed tuples — budget ~1 GB of driver heap at the
-    * default, dominated by the collect, and raise the threshold only
-    * with a matching driver-memory setting.
-    *
-    * `iterations` is 0 on the driver path; `converged` is always true
-    * there (union-find is exact).
-    */
   /** Input-partition count for the distributed fixpoint given the edge
     * count and the executor's memory-per-core. Exposed (and spec-pinned
     * against the round-10 probe configs, SCALE.md) so the sizing rule
@@ -211,6 +188,29 @@ object ConnectedComponents {
         .forall(!Tuning.sameSetting(k, _, v)) => k
     }.toSeq.sorted
 
+  /** Adaptive variant — the CC analog of Spark's
+    * `autoBroadcastJoinThreshold`: count the (distinct) edges first; at
+    * or below `smallGraphThreshold` solve with a driver-side union-find
+    * (one collect, exact same min-labels), otherwise run the
+    * distributed alternating fixpoint. Rationale: a fixpoint iteration
+    * costs 2 shuffles + 2 actions of fixed latency, so a converged
+    * 6-round run on a few thousand edges spends seconds of pure
+    * scheduling — while a sub-million-edge graph union-finds in
+    * milliseconds in the driver (exactly the regime where AQE would
+    * broadcast a join side). Threshold is edge COUNT. On the
+    * distributed branch the already-counted edges also size the input
+    * partitions against heap-per-core (see inline comment) — the
+    * round-10 probe lesson that map-side state per task, not total
+    * heap, is what OOMs a halved-memory run. Driver memory at
+    * the default 4M edges: the union-find map is compact (~16 bytes per
+    * node slot, open addressing), but the `collect()` itself transits
+    * up to 4M boxed tuples — budget ~1 GB of driver heap at the
+    * default, dominated by the collect, and raise the threshold only
+    * with a matching driver-memory setting.
+    *
+    * `iterations` is 0 on the driver path; `converged` is always true
+    * there (union-find is exact).
+    */
   def runAuto(edges: DataFrame, maxIterations: Int = 20,
               smallGraphThreshold: Long = 4L << 20): CCResult = {
     val spark = edges.sparkSession

@@ -339,50 +339,28 @@ FROM coeff GROUP BY deg_band ORDER BY deg_band
 
   /** cc_decremental: label maintenance under EDGE DELETION — the other
     * half of the daily-ingest story ([[ccIncremental]] handles adds;
-    * retention/GDPR deletes need this). Deletions can SPLIT components,
-    * so unlike the additive case no label-graph shortcut exists — but
-    * the damage is contained: an order's clique lies inside ONE base
-    * component, so only components touching a deleted order can change.
-    * Strategy: identify affected base components, keep every other
-    * label untouched (zero recompute for the typically-vast unaffected
-    * region), re-solve ONLY the affected components' surviving
-    * subgraph, and compose. Because [[graft.cc.ConnectedComponents]]
-    * labels by component minimum, the composed result is bit-identical
-    * to a from-scratch solve of the surviving graph — which is exactly
-    * what the oracle computes (recursive min-label closure on the
-    * filtered graph).
+    * retention/GDPR deletes need this). The shared deletion algebra
+    * ([[graft.cc.IncrementalCC.applyDeletion]]) re-solves only the base
+    * components that held a deleted order and keeps every other label
+    * untouched. Because labels are component minima, the result is
+    * bit-identical to a from-scratch solve of the surviving graph —
+    * which is exactly what the oracle computes (recursive min-label
+    * closure on the filtered graph).
     *
     * Runs on the high-quantity subgraph (hundreds of components, see
     * [[ccSizeHist]]) with orders `l_orderkey % 10 == 3` deleted, so
     * deletions really do fragment clusters. Nodes whose every order
     * was deleted leave the result entirely — the membership contract
     * a deletion pipeline must honor.
-    *
-    * Scale: the affected-component set is two hash joins (deleted
-    * nodes → components → surviving edges); the re-solve input is the
-    * affected slice only. Worst case (every component touched)
-    * degrades to a full re-solve — never worse than not maintaining.
     */
   def ccDecremental(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = hqBaseAssignments(spark, sfDir)
     val deletedNodes = Tables.lineitem(spark, sfDir)
       .where(col("l_quantity") >= 45 && col("l_orderkey") % 10 === 3)
       .select(col("l_partkey").as("node")).distinct()
-    val affected = base.join(deletedNodes, Seq("node"))
-      .select("component").distinct()
-    // Surviving edges, split by whether their (single) base component
-    // was touched: starEdges' src is a member of the order's clique, so
-    // one endpoint lookup decides for the whole order.
     val survEdges = EdgeBuilder.starEdges(
       hqCliques(spark, sfDir, col("l_orderkey") % 10 =!= 3))
-    val srcComp = base.toDF("src", "component")
-    val affectedEdges = survEdges.join(srcComp, Seq("src"))
-      .join(affected, Seq("component"), "left_semi")
-      .select("src", "dst")
-    val resolved = ConnectedComponents.runAuto(affectedEdges).assignments
-    val untouched = base.join(affected, Seq("component"), "left_anti")
-      .select(col("node"), col("component"))
-    untouched.unionAll(resolved).orderBy("node")
+    graft.cc.IncrementalCC.applyDeletion(
+      hqBaseAssignments(spark, sfDir), deletedNodes, survEdges).orderBy("node")
   }
 
   /** Oracle for [[ccDecremental]]: from-scratch recursive min-label
@@ -1754,12 +1732,19 @@ FROM m
     // multiplicity (two seeds sharing a component need its size twice).
     // The 6-hop radius bound is untouched: saturation only fires when
     // the BFS is already complete, where both engines emit nothing new.
-    val totalTarget = seeds
+    // The target holds only if every seed has a component: a seed the
+    // inner join drops would lower it and fire the exit early, so the
+    // same aggregate counts the matched seeds and a shortfall fails.
+    val target = seeds
       .join(CCQueries.copurchaseAssignments(spark, sfDir)
         .withColumnRenamed("node", "seed"), "seed")
       .join(CCQueries.copurchaseAssignments(spark, sfDir)
         .groupBy("component").agg(count(lit(1)).as("sz")), "component")
-      .agg(coalesce(sum(col("sz")), lit(0L))).head.getLong(0)
+      .agg(coalesce(sum(col("sz")), lit(0L)), count(lit(1))).head
+    val totalTarget = target.getLong(0)
+    require(target.getLong(1) == frontierN,
+      s"${target.getLong(1)} of $frontierN betweenness seeds have a CC " +
+        "assignment; the saturation target needs all of them")
     var visitedN = frontierN
     // The frontier/visited/dependency tables are ≤ |seeds|·|V| rows; the
     // level joins hand that bound to maybeBroadcast, so at the graded

@@ -738,13 +738,7 @@ FROM orders
     val dir = stageDir(sfDir, "sql_catalog")
     val tbl = "graft_cat_nation_" + sfDir.replaceAll("[^A-Za-z0-9]", "_")
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    val p = java.nio.file.Paths.get(dir)
-    if (java.nio.file.Files.exists(p)) {
-      val walk = java.nio.file.Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(x => java.nio.file.Files.delete(x))
-      finally walk.close()
-    }
+    Scratch.wipe(java.nio.file.Paths.get(dir))
     spark.sql(s"CREATE TABLE $tbl USING PARQUET LOCATION '$dir' AS " +
       s"SELECT n_nationkey, n_name, n_regionkey " +
       s"FROM parquet.`$sfDir/nation.parquet`")
@@ -826,13 +820,7 @@ ORDER BY c.codec, a.lang
     val dir = stageDir(sfDir, "analyze")
     val tbl = "graft_stats_orders_" + sfDir.replaceAll("[^A-Za-z0-9]", "_")
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    val p = java.nio.file.Paths.get(dir)
-    if (java.nio.file.Files.exists(p)) {
-      val walk = java.nio.file.Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(x => java.nio.file.Files.delete(x))
-      finally walk.close()
-    }
+    Scratch.wipe(java.nio.file.Paths.get(dir))
     spark.sql(s"CREATE TABLE $tbl USING PARQUET LOCATION '$dir' AS " +
       s"SELECT o_orderkey, o_orderstatus, o_orderpriority " +
       s"FROM parquet.`$sfDir/orders.parquet`")

@@ -50,6 +50,19 @@ object Scratch {
     r
   }
 
+  /** Recursive delete that throws on failure: for dirs whose leftovers
+    * would change a result (a stream must not resume from a stale
+    * checkpoint, a table must not keep a stale version). A missing dir
+    * is already wiped.
+    */
+  def wipe(p: java.nio.file.Path): Unit =
+    if (java.nio.file.Files.exists(p)) {
+      val walk = java.nio.file.Files.walk(p)
+      try walk.sorted(java.util.Comparator.reverseOrder())
+        .forEach(f => java.nio.file.Files.delete(f))
+      finally walk.close()
+    }
+
   /** Recursive delete; silent on races (scratch hygiene, not a gate). */
   def deleteRec(p: java.nio.file.Path): Unit =
     if (java.nio.file.Files.exists(p)) {

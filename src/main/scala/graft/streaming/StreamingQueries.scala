@@ -230,14 +230,8 @@ FROM events GROUP BY user_id ORDER BY user_id
     val base = java.nio.file.Paths.get(
       graft.queries.Scratch.root.toString, "graft_stream_sink",
       sfDir.replaceAll("[^A-Za-z0-9._-]", "_"))
-    def wipe(p: java.nio.file.Path): Unit =
-      if (java.nio.file.Files.exists(p)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.delete)
-      }
     val sink = base.resolve("data"); val ck = base.resolve("checkpoint")
-    wipe(sink); wipe(ck)
+    graft.queries.Scratch.wipe(sink); graft.queries.Scratch.wipe(ck)
     val sub = spark.newSession()
     sub.conf.set("spark.sql.shuffle.partitions", "8")
     val q = eventsStream(sub, sfDir)
@@ -537,12 +531,7 @@ GROUP BY 1, 2 ORDER BY c_mktsegment, event_type
     val dir = java.nio.file.Paths.get(
       graft.queries.Scratch.root.toString, "graft_stream",
       sfDir.replaceAll("[^A-Za-z0-9._-]", "_"), tag)
-    if (java.nio.file.Files.exists(dir)) {
-      val walk = java.nio.file.Files.walk(dir)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => java.nio.file.Files.delete(p))
-      finally walk.close()
-    }
+    graft.queries.Scratch.wipe(dir)
     val stage = dir.resolve("in")
     val now = System.currentTimeMillis()
     parts.zipWithIndex.foreach { case ((pred, name), i) =>
@@ -958,6 +947,65 @@ SELECT user_id, CAST(n AS BIGINT) AS n_events, vus AS median_us,
 FROM r WHERE rn = (n + 1) // 2 ORDER BY user_id
 """
 
+  /** The (node bigint, component bigint) schema of a maintained CC
+    * label table; the empty table is where maintenance starts. */
+  private val LabelsDdl = "node bigint, component bigint"
+
+  /** The versioned-table protocol of the `foreachBatch` maintenance
+    * sinks. `tables` names each maintained parquet table and the schema
+    * of its empty first version. The staged files replay one per
+    * trigger (`maxFilesPerTrigger=1`, `AvailableNow`) through `source`
+    * on an 8-partition sub-session; per trigger, `step` maps the batch
+    * and the current tables (in `tables` order) to the next ones. Each
+    * next table is written (`coalesce(1)`) to a `<name>_v<batchId>` dir,
+    * then every current dir is swapped for its next version and the
+    * old copy deleted. Triggers run strictly sequentially, so the
+    * read-modify-write is race-free by construction. The table root
+    * (a `table` dir next to the stage) is wiped first: each call
+    * starts from empty tables. Returns the final tables' paths.
+    */
+  private def maintainTables(spark: SparkSession, stage: String,
+      schema: org.apache.spark.sql.types.StructType, outputMode: String,
+      tables: Seq[(String, String)])(source: DataFrame => DataFrame)(
+      step: (DataFrame, Seq[DataFrame]) => Seq[DataFrame]): Seq[String] = {
+    import java.nio.file.Files
+    val root = java.nio.file.Paths.get(stage).getParent.resolve("table")
+    graft.queries.Scratch.wipe(root)
+    val current = tables.map { case (name, _) => root.resolve(name) }
+    val sub = spark.newSession()
+    sub.conf.set("spark.sql.shuffle.partitions", "8")
+    source(sub.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(stage))
+      .writeStream
+      .option("checkpointLocation", root.resolve("ckpt").toString)
+      .outputMode(outputMode)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val s = batch.sparkSession
+        val cur = current.zip(tables).map { case (p, (_, ddl)) =>
+          if (Files.exists(p)) s.read.parquet(p.toString)
+          else s.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](),
+            org.apache.spark.sql.types.StructType.fromDDL(ddl))
+        }
+        val next = step(batch, cur)
+        val versions = current.map(p =>
+          root.resolve(s"${p.getFileName}_v$batchId"))
+        next.zip(versions).foreach { case (df, v) =>
+          df.coalesce(1).write.mode("overwrite").parquet(v.toString)
+        }
+        current.zip(versions).foreach { case (p, v) =>
+          val old = root.resolve(s"${p.getFileName}.swap")
+          if (Files.exists(p)) Files.move(p, old)
+          Files.move(v, p)
+          graft.queries.Scratch.wipe(old)
+        }
+      }
+      .start()
+      .awaitTermination()
+    current.map(_.toString)
+  }
+
   /** stream_cc_incremental: the flagship operator composed with the
     * `foreachBatch` MERGE-sink pattern — connected-component labels
     * MAINTAINED by a streaming sink as edge deltas arrive, never
@@ -965,12 +1013,12 @@ FROM r WHERE rn = (n + 1) // 2 ORDER BY user_id
     * shape of the reference's operator (ConnectedComponent.scala:42-103
     * run once nightly) turned into continuous maintenance: batch 1
     * (high-quantity co-purchase orders with `l_orderkey % 10 != 7`)
-    * bootstraps the label table with a full solve; batch 2 (the
-    * remaining orders) runs the incremental algebra of
-    * [[graft.queries.GraphQueries.ccIncremental]] against the STORED
-    * table — delta endpoints contract through current labels, the
-    * fixpoint runs on the label-level graph only (orders of magnitude
-    * smaller than the corpus), and the result rebases the table.
+    * and batch 2 (the remaining orders) both run the incremental
+    * algebra of [[graft.cc.IncrementalCC.applyDelta]] against the
+    * STORED table, which starts empty — delta endpoints contract
+    * through current labels, the fixpoint runs on the label-level
+    * graph only (orders of magnitude smaller than the corpus), and the
+    * result rebases the table.
     * Because labels are component minima, the two-batch composition is
     * bit-identical to a from-scratch solve of the full graph — exactly
     * what the oracle computes, so the hash gate proves the streaming
@@ -980,62 +1028,21 @@ FROM r WHERE rn = (n + 1) // 2 ORDER BY user_id
     * against the label table (the delta side is the small one and
     * broadcasts) plus the label-graph fixpoint; the unaffected region
     * is rewritten but never recomputed — swap the versioned-parquet
-    * swap for a Delta/Iceberg MERGE and the rewrite disappears too.
-    * Triggers run strictly sequentially, so the read-modify-write on
-    * the table is race-free by construction.
+    * swap ([[maintainTables]]) for a Delta/Iceberg MERGE and the
+    * rewrite disappears too.
     */
   def ccIncrementalStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val li = graft.queries.Tables.lineitem(spark, sfDir)
-      .where(col("l_quantity") >= 45)
-      .select(col("l_orderkey"), col("l_partkey"))
-    val stage = stageCcInc(spark, sfDir)
-    val schema = li.schema
-    val tableRoot = java.nio.file.Paths.get(stage).getParent.resolve("table")
-    if (java.nio.file.Files.exists(tableRoot)) {
-      val walk = java.nio.file.Files.walk(tableRoot)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => java.nio.file.Files.delete(p))
-      finally walk.close()
-    }
-    val current = tableRoot.resolve("current")
-    val sub = spark.newSession()
-    sub.conf.set("spark.sql.shuffle.partitions", "8")
-    val q = sub.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stage)
-      .writeStream
-      .option("checkpointLocation", tableRoot.resolve("ckpt").toString)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
+    val schema = graft.queries.Tables.lineitem(spark, sfDir)
+      .select(col("l_orderkey"), col("l_partkey")).schema
+    val Seq(labels) = maintainTables(spark, stageCcInc(spark, sfDir), schema,
+        "append", Seq("labels" -> LabelsDdl))(identity) {
+      case (batch, Seq(cur)) =>
         val cliques = batch.groupBy("l_orderkey")
           .agg(collect_set(col("l_partkey")).as("nodes"))
         val delta = graft.cc.EdgeBuilder.starEdges(cliques).localCheckpoint()
-        val labels =
-          if (!java.nio.file.Files.exists(current)) {
-            graft.cc.ConnectedComponents.runAuto(delta).assignments
-          } else {
-            // the shared maintenance algebra (graft.cc.IncrementalCC)
-            graft.cc.IncrementalCC.applyDelta(
-              s.read.parquet(current.toString), delta)
-          }
-        val next = tableRoot.resolve(s"v$batchId")
-        labels.coalesce(1).write.mode("overwrite").parquet(next.toString)
-        val tmp = tableRoot.resolve("swap")
-        if (java.nio.file.Files.exists(current))
-          java.nio.file.Files.move(current, tmp)
-        java.nio.file.Files.move(next, current)
-        if (java.nio.file.Files.exists(tmp)) {
-          val w = java.nio.file.Files.walk(tmp)
-          try w.sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => java.nio.file.Files.delete(p))
-          finally w.close()
-        }
-      }
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(current.toString).orderBy("node")
+        Seq(graft.cc.IncrementalCC.applyDelta(cur, delta))
+    }
+    spark.read.parquet(labels).orderBy("node")
   }
 
   /** The maintained table equals the from-scratch min-label closure of
@@ -1069,13 +1076,12 @@ SELECT node, min(comp) AS component FROM walk GROUP BY node ORDER BY node
     * this is the retention/GDPR stream, driven by a CDC-shaped feed
     * (`op ∈ {add, delete}`). The sink maintains TWO tables: the CLIQUE
     * store (order → member set, the operand deletes are expressed
-    * against) and the label table. Per trigger, adds run the
-    * incremental label-graph algebra; deletes run the decremental
-    * algebra of [[graft.queries.GraphQueries.ccDecremental]] against
-    * the STORED state: deleted nodes → affected components → re-solve
-    * ONLY the affected components' surviving subgraph (rebuilt from
-    * the updated clique store), every other label untouched. Because
-    * labels are component minima, the maintained table is bit-identical
+    * against) and the label table. Per trigger, adds run
+    * [[graft.cc.IncrementalCC.applyDelta]] and deletes run
+    * [[graft.cc.IncrementalCC.applyDeletion]] against the STORED state,
+    * re-solving only the affected components' surviving subgraph
+    * (rebuilt from the updated clique store). Because labels are
+    * component minima, the maintained table is bit-identical
     * to a from-scratch solve of the surviving graph — which is what
     * the oracle computes: after batch 1 (all high-quantity orders as
     * adds) and batch 2 (orders `%10 == 3` as deletes), the result must
@@ -1083,55 +1089,18 @@ SELECT node, min(comp) AS component FROM walk GROUP BY node ORDER BY node
     * Nodes whose every order was deleted leave the table entirely —
     * the membership contract a deletion pipeline must honor.
     *
-    * Scale: the delete pass is two hash joins against the label table
-    * plus a re-solve of the affected slice only; worst case (every
-    * component touched) degrades to a full re-solve — never worse
-    * than not maintaining. The clique-store rewrite is the MERGE a
-    * lakehouse table would absorb.
+    * Scale: see [[graft.cc.IncrementalCC]]; the clique-store rewrite
+    * is the MERGE a lakehouse table would absorb.
     */
   def ccDecrementalStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val hq = graft.queries.Tables.lineitem(spark, sfDir)
-      .where(col("l_quantity") >= 45)
+    val schema = graft.queries.Tables.lineitem(spark, sfDir)
       .select(col("l_orderkey"), col("l_partkey"))
-    val raw = hq.withColumn("op", lit("add")).withColumn("tag", lit(1))
-      .unionAll(hq.where(col("l_orderkey") % 10 === 3)
-        .withColumn("op", lit("delete")).withColumn("tag", lit(2)))
-    val stage = stageCcDec(spark, sfDir)
-    val schema = raw.schema
-    val tableRoot = java.nio.file.Paths.get(stage).getParent.resolve("table")
-    if (java.nio.file.Files.exists(tableRoot)) {
-      val walk = java.nio.file.Files.walk(tableRoot)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => java.nio.file.Files.delete(p))
-      finally walk.close()
-    }
-    val curCliques = tableRoot.resolve("cliques")
-    val curLabels = tableRoot.resolve("labels")
-    def readOr(p: java.nio.file.Path, s: org.apache.spark.sql.SparkSession,
-        orElse: => DataFrame): DataFrame =
-      if (java.nio.file.Files.exists(p)) s.read.parquet(p.toString) else orElse
-    def swap(next: java.nio.file.Path, cur: java.nio.file.Path): Unit = {
-      val tmp = cur.getParent.resolve(cur.getFileName.toString + ".swap")
-      if (java.nio.file.Files.exists(cur)) java.nio.file.Files.move(cur, tmp)
-      java.nio.file.Files.move(next, cur)
-      if (java.nio.file.Files.exists(tmp)) {
-        val w = java.nio.file.Files.walk(tmp)
-        try w.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => java.nio.file.Files.delete(p))
-        finally w.close()
-      }
-    }
-    val sub = spark.newSession()
-    sub.conf.set("spark.sql.shuffle.partitions", "8")
-    val q = sub.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stage)
-      .writeStream
-      .option("checkpointLocation", tableRoot.resolve("ckpt").toString)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-        val s = batch0.sparkSession
+      .withColumn("op", lit("add")).withColumn("tag", lit(1)).schema
+    val Seq(_, labels) = maintainTables(spark, stageCcDec(spark, sfDir),
+        schema, "append", Seq(
+          "cliques" -> "l_orderkey bigint, nodes array<bigint>",
+          "labels" -> LabelsDdl))(identity) {
+      case (batch0, Seq(curCliques, curLabels)) =>
         val batch = batch0.localCheckpoint()
         val adds = batch.where(col("op") === "add")
         val dels = batch.where(col("op") === "delete")
@@ -1139,56 +1108,25 @@ SELECT node, min(comp) AS component FROM walk GROUP BY node ORDER BY node
         val addCliques = adds.groupBy("l_orderkey")
           .agg(collect_set(col("l_partkey")).as("nodes"))
         val delOrders = dels.select("l_orderkey").distinct()
-        val prevCliques = readOr(curCliques, s,
-          addCliques.limit(0))
-        val nextCliques = prevCliques
+        val nextCliques = curCliques
           .join(addCliques.select("l_orderkey"), Seq("l_orderkey"), "left_anti")
           .join(delOrders, Seq("l_orderkey"), "left_anti")
           .unionByName(
             addCliques.join(delOrders, Seq("l_orderkey"), "left_anti"))
           .localCheckpoint()
-        // 2. labels: adds via the incremental algebra...
-        val afterAdds: DataFrame =
-          if (adds.isEmpty) readOr(curLabels, s, sys.error("no label table"))
-          else if (!java.nio.file.Files.exists(curLabels)) {
-            graft.cc.ConnectedComponents.runAuto(
-              graft.cc.EdgeBuilder.starEdges(addCliques)).assignments
-          } else {
-            // the shared maintenance algebra (graft.cc.IncrementalCC)
-            graft.cc.IncrementalCC.applyDelta(
-              s.read.parquet(curLabels.toString),
-              graft.cc.EdgeBuilder.starEdges(addCliques))
-          }
-        // 3. ...then deletes via the decremental algebra on the store
+        // 2. labels: adds, then deletes against the updated store
+        val afterAdds =
+          if (adds.isEmpty) curLabels
+          else graft.cc.IncrementalCC.applyDelta(curLabels,
+            graft.cc.EdgeBuilder.starEdges(addCliques))
         val nextLabels =
           if (dels.isEmpty) afterAdds
-          else {
-            val labels = afterAdds.localCheckpoint()
-            val deletedNodes = dels.select(col("l_partkey").as("node"))
-              .distinct()
-            val affected = labels.join(deletedNodes, Seq("node"))
-              .select("component").distinct()
-            val survEdges = graft.cc.EdgeBuilder.starEdges(nextCliques)
-            val affectedEdges = survEdges
-              .join(labels.toDF("src", "component"), Seq("src"))
-              .join(affected, Seq("component"), "left_semi")
-              .select("src", "dst")
-            val resolved = graft.cc.ConnectedComponents
-              .runAuto(affectedEdges).assignments
-            val untouched = labels.join(affected, Seq("component"), "left_anti")
-              .select(col("node"), col("component"))
-            untouched.unionAll(resolved)
-          }
-        val nc = tableRoot.resolve(s"cliques_v$batchId")
-        nextCliques.coalesce(1).write.mode("overwrite").parquet(nc.toString)
-        val nl = tableRoot.resolve(s"labels_v$batchId")
-        nextLabels.coalesce(1).write.mode("overwrite").parquet(nl.toString)
-        swap(nc, curCliques)
-        swap(nl, curLabels)
-      }
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(curLabels.toString).orderBy("node")
+          else graft.cc.IncrementalCC.applyDeletion(afterAdds.localCheckpoint(),
+            dels.select(col("l_partkey").as("node")).distinct(),
+            graft.cc.EdgeBuilder.starEdges(nextCliques))
+        Seq(nextCliques, nextLabels)
+    }
+    spark.read.parquet(labels).orderBy("node")
   }
 
   /** The maintained table equals the from-scratch min-label closure of
@@ -1239,58 +1177,20 @@ SELECT node, min(comp) AS component FROM walk GROUP BY node ORDER BY node
     * production without touching the streaming side.
     */
   def foreachBatchUpsert(spark: SparkSession, sfDir: String): DataFrame = {
-    val raw = graft.queries.Tables.events(spark, sfDir)
-    val stage = stageFebUpsert(spark, sfDir)
-    val schema = raw.schema
-    val tableRoot = java.nio.file.Paths.get(stage).getParent.resolve("table")
-    // fresh target per invocation — the merge result is the graded value
-    if (java.nio.file.Files.exists(tableRoot)) {
-      val walk = java.nio.file.Files.walk(tableRoot)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => java.nio.file.Files.delete(p))
-      finally walk.close()
+    val schema = graft.queries.Tables.events(spark, sfDir).schema
+    val Seq(table) = maintainTables(spark, stageFebUpsert(spark, sfDir),
+        schema, "update",
+        Seq("counts" -> "window_start bigint, event_type string, n bigint")) {
+      _.groupBy(window(col("ts"), "1 hour"), col("event_type"))
+        .agg(count(lit(1)).as("n"))
+        .select(unix_timestamp(col("window.start")).as("window_start"),
+                col("event_type"), col("n"))
+    } { case (batch, Seq(cur)) =>
+      val delta = batch.localCheckpoint() // decouple from the running query
+      Seq(cur.join(delta, Seq("window_start", "event_type"), "left_anti")
+        .unionByName(delta))
     }
-    val current = tableRoot.resolve("current")
-    val sub = spark.newSession()
-    sub.conf.set("spark.sql.shuffle.partitions", "8")
-    val q = sub.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stage)
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(unix_timestamp(col("window.start")).as("window_start"),
-              col("event_type"), col("n"))
-      .writeStream
-      .option("checkpointLocation", tableRoot.resolve("ckpt").toString)
-      .outputMode("update")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val delta = batch.localCheckpoint() // decouple from the running query
-        val merged =
-          if (java.nio.file.Files.exists(current)) {
-            val cur = s.read.parquet(current.toString)
-            cur.join(delta, Seq("window_start", "event_type"), "left_anti")
-              .unionByName(delta)
-          } else delta
-        val next = tableRoot.resolve(s"v$batchId")
-        merged.coalesce(1).write.mode("overwrite").parquet(next.toString)
-        // atomic-enough swap: triggers run strictly sequentially
-        val tmp = tableRoot.resolve("swap")
-        if (java.nio.file.Files.exists(current))
-          java.nio.file.Files.move(current, tmp)
-        java.nio.file.Files.move(next, current)
-        if (java.nio.file.Files.exists(tmp)) {
-          val w = java.nio.file.Files.walk(tmp)
-          try w.sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => java.nio.file.Files.delete(p))
-          finally w.close()
-        }
-      }
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(current.toString)
-      .orderBy("window_start", "event_type")
+    spark.read.parquet(table).orderBy("window_start", "event_type")
   }
 
   /** The final upsert table equals the plain batch rollup — every
@@ -1489,12 +1389,7 @@ ORDER BY window_start, event_type
     val base = Paths.get(graft.queries.Scratch.root.toString,
       "graft_stream", sfDir.replaceAll("[^A-Za-z0-9._-]", "_"),
       "ckpt_recovery")
-    if (Files.exists(base)) {
-      val walk = Files.walk(base)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-      finally walk.close()
-    }
+    graft.queries.Scratch.wipe(base)
     val inDir = base.resolve("in")
     val ckpt = base.resolve("ckpt")
     Files.createDirectories(inDir)
@@ -1561,12 +1456,7 @@ ORDER BY window_start, event_type
     val base = Paths.get(graft.queries.Scratch.root.toString,
       "graft_stream", sfDir.replaceAll("[^A-Za-z0-9._-]", "_"),
       "state_reader")
-    if (Files.exists(base)) {
-      val walk = Files.walk(base)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-      finally walk.close()
-    }
+    graft.queries.Scratch.wipe(base)
     val inDir = base.resolve("in")
     val ckpt = base.resolve("ckpt")
     Files.createDirectories(base)

@@ -76,6 +76,47 @@ class CCPropertySpec extends SparkSpec {
     }
   }
 
+  test("applyDeletion equals the union-find oracle of the surviving graph") {
+    val s = spark
+    import s.implicits._
+    def check(edges: Seq[(Long, Long)], deleted: Seq[(Long, Long)]): Map[Long, Long] = {
+      val surviving = edges.diff(deleted)
+      val got = IncrementalCC.applyDeletion(
+        unionFind(edges).toSeq.toDF("node", "component"),
+        deleted.flatMap(e => Seq(e._1, e._2)).distinct.toDF("node"),
+        surviving.toDF("src", "dst")).as[(Long, Long)].collect()
+      assert(got.map(_._1).distinct.length === got.length, "a node labeled twice")
+      assert(got.toMap === unionFind(surviving))
+      got.toMap
+    }
+    // Fixed case: deleting (2,3) splits {1..4}; deleting (10,11) strips
+    // node 10 of its only edge; {20,21} is untouched.
+    val fixed = check(
+      Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (11L, 12L), (20L, 21L)),
+      Seq((2L, 3L), (10L, 11L)))
+    assert(fixed(1L) === 1L && fixed(3L) === 3L && fixed(4L) === 3L)
+    assert(!fixed.contains(10L) && fixed(12L) === 11L && fixed(21L) === 20L)
+    val rnd = new scala.util.Random(31)
+    for (trial <- 1 to 4) {
+      val edges = randomEdges(rnd, 40 + rnd.nextInt(80), 20 + trial * 10)
+      check(edges, edges.filter(_ => rnd.nextInt(4) == 0))
+    }
+  }
+
+  test("applyDelta over an empty label table equals a from-scratch run") {
+    val s = spark
+    import s.implicits._
+    val empty = Seq.empty[(Long, Long)].toDF("node", "component")
+    val rnd = new scala.util.Random(17)
+    for (trial <- 1 to 3) {
+      val edges = randomEdges(rnd, 30 + rnd.nextInt(80), 10 + trial * 15)
+      val got = IncrementalCC.applyDelta(empty, edges.toDF("src", "dst"))
+        .as[(Long, Long)].collect()
+      assert(got.map(_._1).distinct.length === got.length, "a node labeled twice")
+      assert(got.toMap === runCC(edges)._1, s"trial $trial mismatch")
+    }
+  }
+
   test("runAuto small-graph (driver union-find) path matches the distributed fixpoint") {
     val s = spark
     import s.implicits._

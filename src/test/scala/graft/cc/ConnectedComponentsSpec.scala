@@ -167,33 +167,36 @@ class ConnectedComponentsSpec extends SparkSpec {
        "path, checkpoint files actually written, superseded rounds' " +
        "files GC'd deterministically (r11 verdict #4, r12 #4)") {
     val s = spark; import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_cc_ckpt")
-    spark.sparkContext.setCheckpointDir(dir.toString)
-    // depth-16 path: multiple rounds, so mid-run checkpoints exercise
-    // the supersede-and-free discipline on the reliable branch too
-    val edges = edgesDf((0L until 15L).map(i => (i, i + 1)))
-    val rel = ConnectedComponents.run(edges, reliableCheckpoint = true)
-    assert(rel.converged)
-    val loc = ConnectedComponents.run(edges)
-    assert(rel.assignments.as[(Long, Long)].collect().toSet ===
-           loc.assignments.as[(Long, Long)].collect().toSet)
-    assert(rel.iterations === loc.iterations)
-    assert(rel.iterations > 1) // multiple rounds or the GC claim is vacuous
-    // the result's OWN checkpoint files survive (the caller owns them);
-    // every superseded round's rdd-* dir was deleted when its successor
-    // materialized — without that, a long cluster fixpoint holds
-    // rounds x round-size of checkpoint storage until context stop
-    val w = java.nio.file.Files.walk(dir)
-    val liveRddDirs =
-      try w.filter(p => java.nio.file.Files.isRegularFile(p))
-        .map[String](_.getParent.getFileName.toString)
-        .filter(_.startsWith("rdd-"))
-        .distinct().count()
-      finally w.close()
-    assert(liveRddDirs === 1L,
-      s"expected exactly the final round's checkpoint dir, got $liveRddDirs")
-    // and the surviving files are genuinely readable as the result
-    assert(rel.assignments.count() === 16L)
+    val dir = java.nio.file.Files.createTempDirectory(
+      graft.queries.Scratch.root, "graft_cc_ckpt")
+    try {
+      spark.sparkContext.setCheckpointDir(dir.toString)
+      // depth-16 path: multiple rounds, so mid-run checkpoints exercise
+      // the supersede-and-free discipline on the reliable branch too
+      val edges = edgesDf((0L until 15L).map(i => (i, i + 1)))
+      val rel = ConnectedComponents.run(edges, reliableCheckpoint = true)
+      assert(rel.converged)
+      val loc = ConnectedComponents.run(edges)
+      assert(rel.assignments.as[(Long, Long)].collect().toSet ===
+             loc.assignments.as[(Long, Long)].collect().toSet)
+      assert(rel.iterations === loc.iterations)
+      assert(rel.iterations > 1) // multiple rounds or the GC claim is vacuous
+      // the result's OWN checkpoint files survive (the caller owns them);
+      // every superseded round's rdd-* dir was deleted when its successor
+      // materialized — without that, a long cluster fixpoint holds
+      // rounds x round-size of checkpoint storage until context stop
+      val w = java.nio.file.Files.walk(dir)
+      val liveRddDirs =
+        try w.filter(p => java.nio.file.Files.isRegularFile(p))
+          .map[String](_.getParent.getFileName.toString)
+          .filter(_.startsWith("rdd-"))
+          .distinct().count()
+        finally w.close()
+      assert(liveRddDirs === 1L,
+        s"expected exactly the final round's checkpoint dir, got $liveRddDirs")
+      // and the surviving files are genuinely readable as the result
+      assert(rel.assignments.count() === 16L)
+    } finally graft.queries.Scratch.deleteRec(dir)
   }
 
   test("edge cases: empty input, single self-loop, path graph, maxIterations=0") {

@@ -58,19 +58,22 @@ class SurfaceR4Spec extends SparkSpec {
     import spark.implicits._
     // Endpoint check on a controlled corpus written as parquet so the
     // query's own reader path is exercised.
-    val dir = java.nio.file.Files.createTempDirectory("gini").toString
-    Seq((1L, "aaaa", "en", "s", 4L), (2L, "abcd", "en", "s", 4L))
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val r = SparkEntry.queries("text_char_gini")(spark, dir)
-      .collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("gini_ppm"))
-      .toMap
-    assert(r(1L) == 0L, "single-char doc must have zero impurity")
-    assert(r(2L) == 750000L, "uniform 4-char doc must be 1 - 4/16 = 750000 ppm")
-    val real = SparkEntry.queries("text_char_gini")(spark, sf).collect()
-    assert(real.forall { x =>
-      val g = x.getAs[Long]("gini_ppm"); g >= 0L && g < 1000000L
-    })
+    val tmp = java.nio.file.Files.createTempDirectory(Scratch.root, "gini")
+    try {
+      val dir = tmp.toString
+      Seq((1L, "aaaa", "en", "s", 4L), (2L, "abcd", "en", "s", 4L))
+        .toDF("doc_id", "text", "lang", "source", "n_chars")
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val r = SparkEntry.queries("text_char_gini")(spark, dir)
+        .collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("gini_ppm"))
+        .toMap
+      assert(r(1L) == 0L, "single-char doc must have zero impurity")
+      assert(r(2L) == 750000L, "uniform 4-char doc must be 1 - 4/16 = 750000 ppm")
+      val real = SparkEntry.queries("text_char_gini")(spark, sf).collect()
+      assert(real.forall { x =>
+        val g = x.getAs[Long]("gini_ppm"); g >= 0L && g < 1000000L
+      })
+    } finally Scratch.deleteRec(tmp)
   }
 
   test("pipe_bpe_merges rank 1 really is the corpus argmax pair") {
@@ -409,6 +412,31 @@ class SurfaceR4Spec extends SparkSpec {
       .select(col("l_partkey")).distinct().count()
     assert(maintained.size < allNodes,
       "deleting %10==3 orders must remove at least one node entirely")
+  }
+
+  test("stream_cc_incremental and stream_cc_decremental equal from-scratch solves") {
+    import graft.cc.{ConnectedComponents, EdgeBuilder}
+    def scratch(keep: org.apache.spark.sql.Column): Map[Long, Long] = {
+      val li = Tables.lineitem(spark, sf).where(col("l_quantity") >= 45).where(keep)
+      ConnectedComponents.runContracted(EdgeBuilder.starEdges(
+          li.groupBy("l_orderkey").agg(collect_set(col("l_partkey")).as("nodes"))))
+        .assignments.collect()
+        .map(r => (r.getAs[Long]("node"), r.getAs[Long]("component"))).toMap
+    }
+    def maintained(name: String): Map[Long, Long] = {
+      val rows = SparkEntry.queries(name)(spark, sf).collect()
+        .map(r => (r.getLong(0), r.getLong(1)))
+      assert(rows.map(_._1).distinct.length == rows.length,
+        s"$name labels some node twice")
+      rows.toMap
+    }
+    val full = maintained("stream_cc_incremental")
+    assert(full == scratch(lit(true)),
+      "add-stream maintenance must equal a solve of the full graph")
+    val surviving = maintained("stream_cc_decremental")
+    assert(surviving == scratch(col("l_orderkey") % 10 =!= 3),
+      "delete-stream maintenance must equal a solve of the surviving graph")
+    assert(surviving.size < full.size, "the delete batch must remove a node")
   }
 
   test("sketch_ams_f2 estimate is within its asserted 25% of exact truth") {
