@@ -73,9 +73,8 @@ object ConnectedComponents {
     * multi-round fixpoint would otherwise hold EVERY round's files
     * until context stop: rounds × round-size of cluster-visible
     * storage where the localCheckpoint branch holds ~2 × round-size.
-    * Safe at this call site by the same one-round-lag argument as the
-    * block unpersist — the successor checkpoint has materialized, so
-    * nothing can read these files again.
+    * Safe at this call site because the successor checkpoint has
+    * materialized, so nothing can read these files again.
     */
   private def freeCheckpoint(r: RDD[_], reliable: Boolean): Unit = {
     r.unpersist(false)
@@ -87,69 +86,46 @@ object ConnectedComponents {
 
   /** @param edges DataFrame with integral columns `src`, `dst` (any
     *              orientation, duplicates/self-loops fine)
+    *
+    * Each round is one Spark action: [[StarOps.smallStar]]'s eager
+    * checkpoint runs the large star, the small star and both change
+    * counts (Observations on that same action), so the round's pairs
+    * are materialized when the round ends and the previous round's
+    * checkpoint, its input, is freed at once. At most two rounds'
+    * pairs are ever stored. With `reliableCheckpoint` each round copies
+    * its pairs to the checkpoint dir (one more job) and frees the local
+    * copy.
     */
   def run(edges: DataFrame, maxIterations: Int = 20,
           reliableCheckpoint: Boolean = false): CCResult = {
-    val spark = edges.sparkSession
     var pairs = edges.select(
       col("src").cast("bigint").as("src"),
       col("dst").cast("bigint").as("dst"))
     var rounds = Vector.empty[(Long, Long)]
     var converged = false
-    // Handles persisted in iteration i stay alive until iteration i+1's
-    // first action has materialized the (lazy) checkpoint that reads
-    // them — eager checkpointing would cost a whole extra job per
-    // iteration, which dominates wall time on small graphs.
-    var pendingUnpersist: Seq[DataFrame] = Nil
-    // Round checkpoints, freed on the same one-round lag: cp created in
-    // round k (lazy) materializes during round k+1's first action, at
-    // which point cp_{k-1}'s blocks feed nothing and are dropped.
-    var materializedCp: Option[RDD[_]] = None
-    var pendingCp: Option[RDD[_]] = None
+    // The checkpoint of the last round's pairs; never the caller's edges.
+    var prev: Option[RDD[_]] = None
     while (!converged && rounds.size < maxIterations) {
-      // ONE edge-scale job per round: the large star defers its count
-      // and streams into the small star, whose count action executes
-      // the whole round — materializing all four star caches and last
-      // round's lazy checkpoint on the way. The two count reads after
-      // it are node-scale aggregations over cached stats.
       val ls = StarOps.largeStarLazy(pairs)
       val ss = StarOps.smallStar(ls.pairs)
-      val large = ls.changeCount()
-      // The large star's caches fed the small star's (now materialized)
-      // caches; nothing downstream reads them again.
-      ls.handles.foreach(_.unpersist(false))
-      pendingUnpersist.foreach(_.unpersist(false))
-      // MEMORY_AND_DISK_SER: rows are read back at most once next
-      // round, and serialized UnsafeRow blocks cost ~25 B/row where the
-      // default deserialized level costs ~85 B in memory and ~10× that
-      // Java-serialized on disk spill (measured on the giant probe).
       val next =
-        if (reliableCheckpoint) ss.pairs.checkpoint(eager = false)
-        else ss.pairs.localCheckpoint(false, StorageLevel.MEMORY_AND_DISK_SER)
-      // The checkpoint materialized by THIS round's action supersedes
-      // the previous one; free the old blocks (and, on the reliable
-      // branch, files) now instead of waiting for a driver GC to let
-      // the ContextCleaner find them.
-      materializedCp.foreach(freeCheckpoint(_, reliableCheckpoint))
-      materializedCp = pendingCp
-      pendingCp = checkpointRdd(next)
-      pendingUnpersist = ss.handles
-      val small = ss.changeCount
+        if (reliableCheckpoint) {
+          val files = ss.pairs.checkpoint(eager = true)
+          checkpointRdd(ss.pairs).foreach(_.unpersist(false))
+          files
+        } else ss.pairs
+      // This round's pairs are materialized, so nothing reads the last
+      // round's again; free its blocks (and, on the reliable branch,
+      // files) now instead of waiting for a driver GC to let the
+      // ContextCleaner find them.
+      prev.foreach(freeCheckpoint(_, reliableCheckpoint))
+      prev = checkpointRdd(next)
+      val (large, small) = (ls.changeCount(), ss.changeCount)
       converged = stopRule(rounds.lastOption, large, small)
       rounds :+= ((large, small))
       pairs = next
     }
-    // Materialize the final checkpoint before releasing its inputs.
-    val out = pairs.toDF("node", "component")
-    if (rounds.nonEmpty) {
-      out.count()
-      pendingUnpersist.foreach(_.unpersist(false))
-      // The final checkpoint (the result, owned by the caller — its
-      // files live until the caller or context stop frees them) is now
-      // materialized; its predecessor is dead.
-      materializedCp.foreach(freeCheckpoint(_, reliableCheckpoint))
-    }
-    CCResult(out, converged, rounds.size, rounds)
+    CCResult(pairs.toDF("node", "component"), converged, rounds.size, rounds)
   }
 
   /** Input-partition count for the distributed fixpoint given the edge
@@ -193,10 +169,10 @@ object ConnectedComponents {
     * or below `smallGraphThreshold` solve with a driver-side union-find
     * (one collect, exact same min-labels), otherwise run the
     * distributed alternating fixpoint. Rationale: a fixpoint iteration
-    * costs 2 shuffles + 2 actions of fixed latency, so a converged
-    * 6-round run on a few thousand edges spends seconds of pure
-    * scheduling — while a sub-million-edge graph union-finds in
-    * milliseconds in the driver (exactly the regime where AQE would
+    * costs 2 shuffles and 1 action (3 jobs under AQE) of fixed latency,
+    * so a converged 6-round run on a few thousand edges spends a second
+    * or more of pure scheduling — while a sub-million-edge graph
+    * union-finds in milliseconds in the driver (exactly the regime where AQE would
     * broadcast a join side). Threshold is edge COUNT. On the
     * distributed branch the already-counted edges also size the input
     * partitions against heap-per-core (see inline comment) — the
@@ -238,13 +214,14 @@ object ConnectedComponents {
       // Memory-aware input sizing (the round-10 half-memory lesson,
       // encoded instead of rediscovered by OOM): per-task transient
       // state in a star round is proportional to the task's edge
-      // slice — symmetrized rows plus the distinct hash map, ~100
-      // bytes/edge with slack — and the binding constraint is
-      // heap-per-core, not total heap. Size partitions so one task's
-      // slice stays within a quarter of its heap share; a fraction of
-      // that state spills gracefully (hash aggregation falls back to
-      // sort-based), so this bounds straggling, not correctness. On a
-      // real cluster the same knob is spark.sql.files.maxPartitionBytes.
+      // slice — the symmetrized rows in the shuffle writer's sort
+      // buffer, ~100 bytes/edge with slack — and the binding constraint
+      // is heap-per-core, not total heap. Size partitions so one task's
+      // slice stays within a quarter of its heap share; past that the
+      // buffer spills (the shuffle writer and the star's sort both go
+      // through Spark's external sorter), so this bounds straggling,
+      // not correctness. On a real cluster the same knob is
+      // spark.sql.files.maxPartitionBytes.
       val parts = inputPartitions(n,
         math.max(spark.sparkContext.defaultParallelism, 1),
         Runtime.getRuntime.maxMemory())
@@ -272,7 +249,7 @@ object ConnectedComponents {
     * lives in nodes that appear in more than one task with different
     * reps. Phase 2 star-expands each node's rep clique WITHOUT
     * materializing it (per-node min rep + a join back onto the
-    * mapping — the same O(1)-state min-join discipline as StarOps) and
+    * mapping — O(1) state per key, as in StarOps) and
     * solves the rep graph — O(tasks x components-per-task) nodes,
     * typically orders of magnitude smaller than the input — with
     * [[runAuto]]: driver
@@ -325,10 +302,9 @@ object ConnectedComponents {
     // that clique is just (rep, min rep) per mapping row — so phase 2
     // needs only the per-node MIN rep (a combinable O(1)-state
     // aggregate) joined back onto the mapping, never the rep SET.
-    // This is the same min-join discipline as StarOps: the per-key set
-    // here is bounded (one rep per task that saw the node), but the
-    // MAP-SIDE hash of boxed single-element sets over ~10⁷ keys per
-    // task is not — at 1 GB/core the collect_set form this replaces
+    // The per-key set here is bounded (one rep per task that saw the
+    // node), but the MAP-SIDE hash of boxed single-element sets over
+    // ~10⁷ keys per task is not — at 1 GB/core the collect_set form this replaces
     // died with AGGREGATE_OUT_OF_MEMORY on the 10⁸-node giant graph
     // while min/join spills and passes (SCALE.md round 11).
     val mins = mapping.groupBy("node")

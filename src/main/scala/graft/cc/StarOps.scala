@@ -1,12 +1,16 @@
 package graft.cc
 
-import org.apache.spark.sql.{Column, DataFrame}
+import java.util.concurrent.TimeoutException
+
+import scala.concurrent.Await
+import scala.concurrent.duration._
+
+import org.apache.spark.sql.{DataFrame, Encoders, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 /** One Large-Star / Small-Star round (Kiveris et al., "Connected
-  * Components in MapReduce and Beyond", SoCC 2014), re-expressed on the
-  * DataFrame API with codegen-friendly built-ins only — no UDFs, no RDDs.
+  * Components in MapReduce and Beyond", SoCC 2014), on the DataFrame API.
   *
   * Semantics mirror the reference implementation exactly (reference:
   * /root/reference/src/main/scala/com/kwartile/lib/cc/ConnectedComponent.scala):
@@ -20,70 +24,180 @@ import org.apache.spark.storage.StorageLevel
   *  - changeCount (reference :91,160): |newPairs \ {(self, n) | n ∈ nbrs}|
   *    summed over groups.
   *
-  * Implementation: the MIN-JOIN form, not materialized adjacency. The
-  * reference (and this engine through round 10) builds each node's
-  * neighbor set in one aggregation buffer (`HashSet` there,
-  * `collect_set` here). That is O(component) state in ONE row once a
-  * component converges: every edge is then `(node, min)`, and the min
-  * node's symmetric group holds the entire component — on a 100 TB
-  * dedup corpus with a 10⁸-member boilerplate cluster, that's an OOM or
-  * a multi-hour single-task straggler, untunable by partitioning
-  * (measured: SCALE.md "giant component", old vs new shape on the same
-  * 10⁸-node graph). But a star round doesn't NEED the neighbor set;
-  * it needs three combinable per-key scalars — min(nbr), a neighbor
-  * count, a self-loop flag — plus the edges themselves:
+  * Implementation: the paper's streaming reducer. Each star is ONE
+  * exchange, `repartition(<session shuffle partitions>, self)`, then
+  * `sortWithinPartitions(self, nbr)` and one `mapPartitions` pass that
+  * scans each sorted group once ([[Scan]]): the first row gives the
+  * minimum neighbour and so m, adjacent duplicates are skipped (the
+  * reference's per-group `HashSet` dedup), `(nbr, m)` rows are emitted
+  * while scanning, and the group's end emits `(self, m)` with the
+  * group's change count. State per key is O(1) — a handful of longs —
+  * and the group itself streams out of Spark's external sorter, which
+  * spills. The reference (and this engine through round 10) instead
+  * built each node's neighbour set in one buffer, O(component) state in
+  * ONE row once a component converges: every edge is then `(node, min)`
+  * and the min node's symmetric group holds the entire component — an
+  * OOM at 1 GB/core on the 5×10⁷-member probe (SCALE.md "giant
+  * component").
   *
-  *   1. dedup the (self, nbr) rows (the reference's per-group HashSet
-  *      dedup, as one hash aggregation keyed by BOTH columns — uniform
-  *      keys, no skew);
-  *   2. fold the per-key stats with plain min/count/max — O(1) state
-  *      per key, map-side partial aggregation caps any hot key's
-  *      reducer input at one row per upstream partition;
-  *   3. join the stats row back onto the deduped edges on `self` to
-  *      emit `(nbr, m)` — a shuffle join, which AQE skew-splits when a
-  *      giant component concentrates one key.
+  * The skew trade: the giant component's key is ONE task's serial scan,
+  * O(1) memory but O(component) time, where the previous min-join form
+  * (distinct + per-key min/count aggregate + a join back on `self`, up
+  * to three shuffles per star and four persisted caches per round) let
+  * AQE split the join on that key across tasks. The scan is a single
+  * pass over sorted rows, so one task streaming the giant group costs
+  * less than the two extra shuffles every key paid for the split:
+  * `CCScaleProbe 10000000 giant new` at 4 threads and a 4 GB heap ran
+  * its fixpoint in 221.2 s against the min-join form's 473.3 s, with
+  * peak cached storage 127.5 MiB against 1604.3 MiB and the same
+  * `rounds` vector (SCALE.md "One-shuffle star rounds").
   *
-  * Per-row state is O(1) everywhere; the giant component costs extra
-  * TASKS, not one giant buffer. This is the Kiveris streaming-reducer
-  * formulation (the paper's reducers emit while scanning a sorted
-  * group) rather than the reference's materialized-HashSet port of it.
+  * The partition count is fixed, so AQE does not coalesce the star
+  * shuffles to one or two tasks on small rounds.
   *
-  * The emitted multiset is identical to the collect_set form's: per
-  * group, each pair once (dedup makes the join distinct within a
-  * group); across groups, the same duplicates either form produces
-  * (each star dedups its own input, so they never accumulate). The
-  * reference's set-diff change count collapses to arithmetic on the
-  * stats row — every new pair shares dst = m, so the only old pair a
-  * new pair can equal is (self, m):
+  * Change counts: the reference's set-diff count collapses to
+  * arithmetic on the group scan — every new pair shares dst = m, so the
+  * only old pair a new pair can equal is (self, m):
   *
   *   largeStar: |new| = 1 + |{n ∈ nbrs : n > self}|, overlap
   *     [m ∈ nbrs] = 1 if min(nbrs) < self else [self-loop].
   *   smallStar: m = min(nbrs) ∈ nbrs always, so count =
   *     |nbrs \ {m, self}| = |nbrs| − |{m, self} ∩ nbrs|.
   *
-  * (Arithmetic instead of array ops also matters for a second reason,
-  * kept from round 7: array_distinct/array_except on struct arrays are
-  * O(n²) in Spark — no hash path for non-atomic types.)
+  * Each group's count rides on its `(self, m)` row and is summed by an
+  * `Observation` on the action that runs the star's plan — no extra
+  * job. [[smallStar]] runs that action itself: one eager
+  * `localCheckpoint` of its pairs, which also runs the large star that
+  * feeds it and so fills both counts.
+  *
+  * The emitted multiset equals the min-join form's and the reference's:
+  * per group, each pair once; across groups, the same duplicates (each
+  * star dedups its own input, so they never accumulate).
   */
 object StarOps {
 
-  /** pairs: the new edge set; changeCount: connectivity changes this
-    * round; handles: the persisted intermediates (deduped edges +
-    * per-key stats) — unpersist them once `pairs` has been
-    * consumed/checkpointed.
+  /** pairs: the small star's new edge set, already materialized as a
+    * local checkpoint (MEMORY_AND_DISK_SER) that the caller owns;
+    * changeCount: connectivity changes this round; handles: always
+    * empty — the stars persist nothing besides `pairs`.
     */
   final case class StarResult(pairs: DataFrame, changeCount: Long,
                               handles: Seq[DataFrame])
 
-  /** Large star whose change-count action is DEFERRED: construction
-    * persists the deduped edges and stats but runs no job; the first
-    * downstream action over `pairs` (in the CC loop: the small star's
-    * count) materializes both caches, after which `changeCount()` is a
-    * cheap aggregation over the cached node-scale stats. One edge-scale
-    * job per fixpoint round instead of two.
+  /** Large star: `pairs` is lazy, and `changeCount()` is observed on the
+    * first action over them (in the CC loop: the small star's
+    * checkpoint). Reading it before any such action throws.
+    * `handles` is always empty.
     */
   final case class LazyStarResult(pairs: DataFrame, changeCount: () => Long,
                                   handles: Seq[DataFrame])
+
+  /** One input row of a star's group scan. */
+  private[cc] final case class Arc(self: Long, nbr: Long)
+
+  /** One emitted pair; `cnt` is the group's change count on its
+    * `(self, m)` row and 0 on every other row.
+    */
+  private[cc] final case class Emit(src: Long, dst: Long, cnt: Long)
+
+  /** Streams one star over rows sorted by (self, nbr) within the
+    * partition, all rows of a key in one partition. Per group: m from
+    * the first row, a duplicate nbr is skipped (it equals the previous
+    * row's), each kept nbr n emits (n, m), and the group's end emits
+    * (self, m) with the group's count.
+    */
+  private final class Scan(rows: Iterator[Arc], large: Boolean)
+      extends Iterator[Emit] {
+    private val in = rows.buffered
+    private var open = false
+    private var self, mn, m, last = 0L
+    private var kept = 0L // large: distinct nbrs > self; small: distinct nbrs
+    private var loop = false
+    private var out: Emit = null
+
+    def hasNext: Boolean = {
+      while (out == null && (open || in.hasNext)) step()
+      out != null
+    }
+
+    def next(): Emit = {
+      if (!hasNext) throw new NoSuchElementException("end of star scan")
+      val o = out
+      out = null
+      o
+    }
+
+    private def step(): Unit =
+      if (!open) {
+        val a = in.next()
+        self = a.self
+        mn = a.nbr
+        m = if (large) math.min(self, mn) else mn
+        kept = 0L
+        loop = false
+        open = true
+        visit(mn)
+      } else if (in.hasNext && in.head.self == self) {
+        val n = in.next().nbr
+        if (n != last) visit(n)
+      } else {
+        open = false
+        val cnt =
+          if (large) 1L + kept - (if (mn < self || loop) 1L else 0L)
+          else if (mn == self) 0L
+          else kept - (if (loop) 2L else 1L)
+        out = Emit(self, m, cnt)
+      }
+
+    private def visit(n: Long): Unit = {
+      last = n
+      if (n == self) loop = true
+      if (large) {
+        if (n > self) { kept += 1; out = Emit(n, m, 0L) }
+      } else {
+        kept += 1
+        if (n != m && n != self) out = Emit(n, m, 0L)
+      }
+    }
+  }
+
+  /** The star over (self, nbr) rows: one exchange on `self`, a sort
+    * within partitions, one scan; the per-group counts are summed into
+    * `obs` on the action that runs it.
+    */
+  private def star(rows: DataFrame, large: Boolean, obs: Observation): DataFrame = {
+    val parts = rows.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    rows.repartition(parts, col("self"))
+      .sortWithinPartitions("self", "nbr")
+      .as(Encoders.product[Arc])
+      .mapPartitions((it: Iterator[Arc]) => new Scan(it, large): Iterator[Emit])(
+        Encoders.product[Emit])
+      .observe(obs, coalesce(sum("cnt"), lit(0L)).as("cnt"))
+      .select("src", "dst")
+  }
+
+  /** How long a large-star count read waits for Spark to deliver the
+    * observation of an action that already returned. Delivery (a
+    * listener-bus event) takes milliseconds, and [[smallStar]] waits
+    * for its own observation of the same event first; a read that waits
+    * this long had no action to wait for.
+    */
+  private val DeliveryWait: Duration = 5.seconds
+
+  /** The observed sum of a star's counts. An action over an empty input
+    * may plan the star away; its observation is then an empty row, and
+    * the count is 0.
+    */
+  private def observedCount(obs: Observation, wait: Duration): Long = {
+    val row =
+      try Await.result(obs.future, wait)
+      catch {
+        case _: TimeoutException => throw new IllegalStateException(
+          "star change count read before any action ran over the star's " +
+          "pairs: the count is observed on that action")
+      }
+    if (row.length == 0) 0L else row.getLong(0)
+  }
 
   /** Symmetrized (self, nbr) rows — self-loops once, everything else in
     * both orientations (reference largeStar flatMap, :139-146).
@@ -97,73 +211,27 @@ object StarOps {
         struct(col("dst").as("self"), col("src").as("nbr"))))
     ).as("e")).select(col("e.self").as("self"), col("e.nbr").as("nbr"))
 
-  /** Per-key stats for the large star over deduped (self, nbr) rows:
-    * m = min(self, min(nbrs)); cnt = 1 + |{n > self}| − [m ∈ nbrs].
-    */
-  private def largeStats(dedup: DataFrame): DataFrame =
-    dedup.groupBy("self").agg(
-        min("nbr").as("mn"),
-        count(when(col("nbr") > col("self"), 1)).as("gt"),
-        max(when(col("nbr") === col("self"), 1L).otherwise(0L)).as("loop"))
-      .select(
-        col("self"),
-        least(col("self"), col("mn")).as("m"),
-        (lit(1L) + col("gt") -
-          when(col("mn") < col("self"), 1L).otherwise(col("loop"))).as("cnt"))
-
-  /** Per-key stats for the small star (input oriented, nbr ≤ self):
-    * m = min(nbrs); cnt = |nbrs| − |{m, self} ∩ nbrs|, where m ∈ nbrs
-    * always and self ∈ nbrs iff a self-loop row exists.
-    */
-  private def smallStats(dedup: DataFrame): DataFrame =
-    dedup.groupBy("self").agg(
-        min("nbr").as("mn"),
-        count(lit(1)).as("deg"),
-        max(when(col("nbr") === col("self"), 1L).otherwise(0L)).as("loop"))
-      .select(
-        col("self"),
-        col("mn").as("m"),
-        (col("deg") - when(col("mn") === col("self"), 1L)
-          .otherwise(when(col("loop") === 1L, 2L).otherwise(1L))).as("cnt"))
-
-  /** Emitted pairs: (self, m) per group plus (nbr, m) for every deduped
-    * edge row the star keeps — `keep` is n > self for the large star
-    * (strictness dedups the self row), n ∉ {m, self} for the small star.
-    */
-  private def pairsOf(dedup: DataFrame, stats: DataFrame,
-                      keep: Column): DataFrame =
-    stats.select(col("self").as("src"), col("m").as("dst"))
-      .unionAll(
-        dedup.join(stats.select("self", "m"), "self")
-          .where(keep)
-          .select(col("nbr").as("src"), col("m").as("dst")))
-
-  private val largeKeep: Column = col("nbr") > col("self")
-  private val smallKeep: Column =
-    col("nbr") =!= col("m") && col("nbr") =!= col("self")
-
-  private def persistBoth(dedupIn: DataFrame,
-                          stats: DataFrame => DataFrame)
-      : (DataFrame, DataFrame) = {
-    val dedup = dedupIn.distinct().persist(StorageLevel.MEMORY_AND_DISK)
-    (dedup, stats(dedup).persist(StorageLevel.MEMORY_AND_DISK))
-  }
-
-  private def sumCnt(stats: DataFrame): Long =
-    stats.agg(coalesce(sum("cnt"), lit(0L))).first().getLong(0)
-
   def largeStarLazy(nodePairs: DataFrame): LazyStarResult = {
-    val (dedup, stats) = persistBoth(symmetrize(nodePairs), largeStats)
-    LazyStarResult(pairsOf(dedup, stats, largeKeep),
-      () => sumCnt(stats), Seq(dedup, stats))
+    val obs = Observation()
+    LazyStarResult(star(symmetrize(nodePairs), large = true, obs),
+      () => observedCount(obs, DeliveryWait), Nil)
   }
 
+  /** Runs the round's one action: an eager local checkpoint of the small
+    * star's pairs, which also runs (and fills the count of) any large
+    * star feeding `nodePairs`.
+    */
   def smallStar(nodePairs: DataFrame): StarResult = {
+    val obs = Observation()
     val oriented = nodePairs.select(
       greatest(col("src"), col("dst")).as("self"),
       least(col("src"), col("dst")).as("nbr"))
-    val (dedup, stats) = persistBoth(oriented, smallStats)
-    StarResult(pairsOf(dedup, stats, smallKeep), sumCnt(stats),
-      Seq(dedup, stats))
+    // MEMORY_AND_DISK_SER: rows are read back at most once next round,
+    // and serialized UnsafeRow blocks cost ~25 B/row where the default
+    // deserialized level costs ~85 B in memory and ~10× that
+    // Java-serialized on disk spill (measured on the giant probe).
+    val pairs = star(oriented, large = false, obs)
+      .localCheckpoint(eager = true, StorageLevel.MEMORY_AND_DISK_SER)
+    StarResult(pairs, observedCount(obs, Duration.Inf), Nil)
   }
 }

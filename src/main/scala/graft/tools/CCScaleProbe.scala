@@ -24,7 +24,7 @@ import graft.cc.{CliqueGen, ConnectedComponents, EdgeBuilder, Tuning}
   * (`mix`, r11 verdict item 3, unions the tree with `nBlocks` CliqueGen
   * blocks offset above it — the mega-cluster-plus-long-tail shape real
   * dedup corpora have — and checks both populations' labels exactly)
-  * — the shapes cover the min-join fixpoint, the two-phase contraction
+  * — the shapes cover the star fixpoint, the two-phase contraction
   * front door, and the label-maintenance front door (K=10⁶ new nodes
   * attached to the standing component via IncrementalCC.applyDelta,
   * with closed-form standing labels so the delta pass is measured
@@ -32,11 +32,10 @@ import graft.cc.{CliqueGen, ConnectedComponents, EdgeBuilder, Tuning}
   * binary tree `(i, i div 2)` for i in [1, nNodes) — one component of
   * nNodes members, nNodes-1 edges, deterministic, no RNG. Near
   * convergence every edge is `(n, 0)`, so the large star's group for
-  * node 0 holds the ENTIRE component: the min-join shape
-  * ([[graft.cc.StarOps]]) keeps per-key state O(1) there and lets AQE
-  * skew-split the join, where the round-10 collect_set shape held
-  * O(component) state in one task (SCALE.md "giant component": OOM at
-  * 48g). This is the 100 TB boilerplate-mega-cluster case from the
+  * node 0 holds the ENTIRE component: the sorted streaming star
+  * ([[graft.cc.StarOps]]) scans that group in one task with O(1) state
+  * per key, where the round-10 collect_set shape held O(component)
+  * state in one task (SCALE.md "giant component": OOM at 1 GB/core). This is the 100 TB boilerplate-mega-cluster case from the
   * dedup pipelines.
   *
   * `incremental` (r5 verdict item 5) probes the label-MAINTENANCE path

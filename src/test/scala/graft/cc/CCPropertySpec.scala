@@ -36,6 +36,81 @@ class CCPropertySpec extends SparkSpec {
     (res.assignments.as[(Long, Long)].collect().toMap, res.converged)
   }
 
+  /** Seeded multigraph over `maxNode` ids around 0 plus `Long.MinValue`
+    * and `Long.MaxValue`: random edges, then self-loops, duplicates and
+    * flipped copies of some of them.
+    */
+  private def multigraph(rnd: scala.util.Random, n: Int, maxNode: Int): List[(Long, Long)] = {
+    val ids = (0 until maxNode).map(_.toLong - maxNode / 2) ++ Seq(Long.MinValue, Long.MaxValue)
+    def id(): Long = ids(rnd.nextInt(ids.length))
+    val base = List.fill(n)((id(), id()))
+    val loops = List.fill(1 + n / 10) { val v = id(); (v, v) }
+    val dups = rnd.shuffle(base).take(n / 4)
+    val flips = rnd.shuffle(base).take(n / 4).map(_.swap)
+    rnd.shuffle(base ++ loops ++ dups ++ flips)
+  }
+
+  /** The reference's HashSet star (StarOps header): per `self`, the set
+    * of its neighbours; per group, the emitted pair set and the number
+    * of its pairs that are not among the group's input pairs.
+    */
+  private def oracleStar(rows: Seq[(Long, Long)],
+                         emit: (Long, Long, Set[Long]) => Set[Long]): (Seq[(Long, Long)], Long) = {
+    val groups = rows.groupBy(_._1).map { case (self, g) => self -> g.map(_._2).toSet }
+    val perGroup = groups.toSeq.map { case (self, nbrs) =>
+      val m = (nbrs + self).min
+      val out = emit(self, m, nbrs).map(n => (n, m))
+      (out.toSeq, out.count { case (n, d) => !(n == self && nbrs(d)) }.toLong)
+    }
+    (perGroup.flatMap(_._1).sorted, perGroup.map(_._2).sum)
+  }
+
+  private def oracleLarge(edges: Seq[(Long, Long)]): (Seq[(Long, Long)], Long) =
+    oracleStar(edges.flatMap { case (a, b) => if (a == b) Seq((a, b)) else Seq((a, b), (b, a)) },
+      (self, _, nbrs) => (nbrs + self).filter(_ >= self))
+
+  private def oracleSmall(edges: Seq[(Long, Long)]): (Seq[(Long, Long)], Long) =
+    oracleStar(edges.map { case (a, b) => (math.max(a, b), math.min(a, b)) },
+      (self, m, nbrs) => nbrs.filter(n => n != m && n != self) + self)
+
+  test("each star's pairs and change count equal the reference HashSet star") {
+    val s = spark
+    import s.implicits._
+    val rnd = new scala.util.Random(2718)
+    val graphs = Nil :: List.tabulate(6)(t => multigraph(rnd, 5 + rnd.nextInt(40 + 30 * t), 4 + 6 * t))
+    for ((edges, trial) <- graphs.zipWithIndex) {
+      val df = edges.toDF("src", "dst")
+      val large = StarOps.largeStarLazy(df)
+      val got = large.pairs.as[(Long, Long)].collect().toSeq.sorted
+      assert((got, large.changeCount()) === oracleLarge(edges), s"large star, trial $trial")
+      val small = StarOps.smallStar(df)
+      assert((small.pairs.as[(Long, Long)].collect().toSeq.sorted, small.changeCount) ===
+        oracleSmall(edges), s"small star, trial $trial")
+      // Chained as in a fixpoint round: the small star's one action
+      // fills both counts.
+      val chained = StarOps.largeStarLazy(df)
+      val next = StarOps.smallStar(chained.pairs)
+      val (largePairs, largeCount) = oracleLarge(edges)
+      assert(chained.changeCount() === largeCount, s"chained large star, trial $trial")
+      assert((next.pairs.as[(Long, Long)].collect().toSeq.sorted, next.changeCount) ===
+        oracleSmall(largePairs), s"chained small star, trial $trial")
+    }
+  }
+
+  test("rounds on a fixed multigraph are pinned to the recorded vector") {
+    val s = spark
+    import s.implicits._
+    // a seeded multigraph (extreme ids included) plus a 64-node path
+    val edges = multigraph(new scala.util.Random(31337), 300, 120) ++
+      (1000L until 1063L).map(i => (i, i + 1))
+    val res = ConnectedComponents.run(edges.toDF("src", "dst"))
+    assert(res.converged)
+    // the vector the min-join star form (three shuffles per star) printed
+    assert(res.rounds === Seq((372L, 276L), (349L, 216L), (302L, 182L), (340L, 190L),
+      (348L, 150L), (274L, 31L), (181L, 0L), (181L, 0L)))
+    assert(res.assignments.as[(Long, Long)].collect().toMap === unionFind(edges))
+  }
+
   test("CC matches union-find oracle on random multigraphs") {
     val rnd = new scala.util.Random(1234)
     for (trial <- 1 to 6) {

@@ -1,6 +1,15 @@
 package graft.cc
 
+import java.util.concurrent.{CountDownLatch, LinkedBlockingQueue, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
 import graft.SparkSpec
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Golden fixtures from the reference's own docs:
   *   - README worked example (/root/reference/README.md:12-24)
@@ -82,21 +91,48 @@ class ConnectedComponentsSpec extends SparkSpec {
     r.handles.foreach(_.unpersist())
   }
 
+  /** Physical plan of the `localCheckpoint` action `body` runs, as
+    * executed (AQE's final plan), captured by a QueryExecutionListener.
+    */
+  private def checkpointPlan(body: => Unit): SparkPlan = {
+    val plans = new LinkedBlockingQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, ns: Long): Unit =
+        if (funcName == "localCheckpoint") plans.add(qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      Option(plans.poll(60, TimeUnit.SECONDS))
+        .getOrElse(fail("no localCheckpoint action was reported"))
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   test("star rounds carry NO materialized adjacency: no collect_set / " +
        "ObjectHashAggregate anywhere in either star's plan (r10 verdict #1)") {
     // the O(component)-state hazard: a converged giant component's
-    // entire membership in one aggregation buffer. The min-join form
-    // must keep every aggregate O(1)-state (HashAggregate min/count/max)
+    // entire membership in one aggregation buffer. Each star must be one
+    // exchange, a sort and a streaming scan: no aggregate at all
     val edges = edgesDf(Seq((1L, 4L), (6L, 1L), (3L, 2L), (6L, 5L)))
-    val large = StarOps.largeStarLazy(edges)
-    val small = StarOps.smallStar(edges)
-    for ((pairs, handles) <- Seq(large.pairs -> large.handles,
-                                 small.pairs -> small.handles)) {
-      val plan = pairs.queryExecution.sparkPlan.toString
-      assert(!plan.contains("collect_set"), plan)
-      assert(!plan.contains("ObjectHashAggregate"), plan)
-      handles.foreach(_.unpersist())
+    val helper = new AdaptiveSparkPlanHelper {}
+    for ((stars, round) <- Seq[(Int, () => Unit)](
+           1 -> (() => StarOps.smallStar(edges)),
+           2 -> (() => StarOps.smallStar(StarOps.largeStarLazy(edges).pairs)))) {
+      val plan = checkpointPlan(round())
+      val text = plan.toString
+      assert(!text.contains("collect_set"), text)
+      assert(!text.contains("ObjectHashAggregate"), text)
+      assert(helper.collect(plan) { case a: HashAggregateExec => a }.isEmpty, text)
+      assert(helper.collect(plan) { case e: ShuffleExchangeExec => e }.size === stars, text)
     }
+  }
+
+  test("a large-star change count read before any action over its pairs " +
+       "throws instead of waiting") {
+    val ls = StarOps.largeStarLazy(edgesDf(Seq((1L, 2L), (2L, 3L))))
+    val err = intercept[IllegalStateException](ls.changeCount())
+    assert(err.getMessage.contains("before any action"))
   }
 
   test("README example: full CC run (labels = component min, incl. self-pair)") {
@@ -235,6 +271,37 @@ class ConnectedComponentsSpec extends SparkSpec {
     val fired = prevs.zip(res.rounds).map { case (p, (l, sm)) =>
       ConnectedComponents.stopRule(p, l, sm) }
     assert(fired === Seq.fill(res.iterations - 1)(false) :+ true)
+  }
+
+  test("a fixpoint round runs at most 4 jobs (one action; AQE adds one " +
+       "map-stage job per star shuffle)") {
+    val sc = spark.sparkContext
+    val (tag, key) = ("cc-round-jobs", "graft.spec.span")
+    val jobs = new AtomicInteger()
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(key)) match {
+          case Some(`tag`) => jobs.incrementAndGet()
+          case Some("end") => drained.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, tag)
+      val res =
+        try ConnectedComponents.run(edgesDf((0L until 199L).map(i => (i, i + 1))))
+        finally sc.setLocalProperty(key, null)
+      // listener events arrive in order: once the marker job is seen,
+      // every job of the run has been counted
+      sc.setLocalProperty(key, "end")
+      try sc.parallelize(Seq(1)).count() finally sc.setLocalProperty(key, null)
+      assert(drained.await(60, TimeUnit.SECONDS))
+      assert(res.converged && res.iterations === 10)
+      assert(jobs.get <= 4 * res.iterations,
+        s"${jobs.get} jobs for ${res.iterations} rounds")
+    } finally sc.removeSparkListener(listener)
   }
 
   test("starEdges: duplicate-only cliques keep their node as a self-pair") {

@@ -71,34 +71,37 @@ class StreamingSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     implicit val ctx = s.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("graft_ckpt_test")
-    val sink = base.resolve("data").toString
-    val ck = base.resolve("ck").toString
-    val input = MemoryStream[Long]
-    def start() = input.toDF().toDF("v")
-      .writeStream.format("parquet")
-      .option("path", sink).option("checkpointLocation", ck)
-      .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
+    val base = java.nio.file.Files.createTempDirectory(
+      graft.queries.Scratch.root, "graft_ckpt_test")
+    try {
+      val sink = base.resolve("data").toString
+      val ck = base.resolve("ck").toString
+      val input = MemoryStream[Long]
+      def start() = input.toDF().toDF("v")
+        .writeStream.format("parquet")
+        .option("path", sink).option("checkpointLocation", ck)
+        .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
 
-    // run 1: two batches land
-    val q1 = start()
-    input.addData(1L, 2L); q1.processAllAvailable()
-    input.addData(3L); q1.processAllAvailable()
-    q1.stop()
-    assert(spark.read.parquet(sink).as[Long].collect().sorted.toSeq
-      === Seq(1L, 2L, 3L))
+      // run 1: two batches land
+      val q1 = start()
+      input.addData(1L, 2L); q1.processAllAvailable()
+      input.addData(3L); q1.processAllAvailable()
+      q1.stop()
+      assert(spark.read.parquet(sink).as[Long].collect().sorted.toSeq
+        === Seq(1L, 2L, 3L))
 
-    // data arriving while the query is DOWN
-    input.addData(4L, 5L)
+      // data arriving while the query is DOWN
+      input.addData(4L, 5L)
 
-    // run 2: a NEW query on the same checkpoint+sink picks up where
-    // run 1 committed — the offline data lands exactly once, nothing
-    // from run 1 is re-emitted
-    val q2 = start()
-    q2.processAllAvailable()
-    q2.stop()
-    assert(spark.read.parquet(sink).as[Long].collect().sorted.toSeq
-      === Seq(1L, 2L, 3L, 4L, 5L))
+      // run 2: a NEW query on the same checkpoint+sink picks up where
+      // run 1 committed — the offline data lands exactly once, nothing
+      // from run 1 is re-emitted
+      val q2 = start()
+      q2.processAllAvailable()
+      q2.stop()
+      assert(spark.read.parquet(sink).as[Long].collect().sorted.toSeq
+        === Seq(1L, 2L, 3L, 4L, 5L))
+    } finally graft.queries.Scratch.deleteRec(base)
   }
 
   test("append mode: watermark gates window emission and drops late data") {
@@ -240,18 +243,20 @@ class StreamingSpec extends SparkSpec {
         .filter(_.startsWith("ck_")).toSet
       finally ls.close()
     }
-    val src = java.nio.file.Files.createTempDirectory("graft_failing_stream")
-    spark.range(10).write.mode("overwrite").parquet(src.toString)
-    val schema = spark.read.parquet(src.toString).schema
-    val before = ckDirs()
-    intercept[Exception] {
-      StreamingQueries.runToCompletion(spark,
-        sub => sub.readStream.schema(schema).parquet(src.toString)
-          .select(assert_true(col("id") < 0).as("never")),
-        "append")
-    }
-    assert(ckDirs().diff(before).isEmpty)
-    graft.queries.Scratch.deleteRec(src)
+    val src = java.nio.file.Files.createTempDirectory(
+      graft.queries.Scratch.root, "graft_failing_stream")
+    try {
+      spark.range(10).write.mode("overwrite").parquet(src.toString)
+      val schema = spark.read.parquet(src.toString).schema
+      val before = ckDirs()
+      intercept[Exception] {
+        StreamingQueries.runToCompletion(spark,
+          sub => sub.readStream.schema(schema).parquet(src.toString)
+            .select(assert_true(col("id") < 0).as("never")),
+          "append")
+      }
+      assert(ckDirs().diff(before).isEmpty)
+    } finally graft.queries.Scratch.deleteRec(src)
   }
 
   test("transformWithState running counts reach the batch per-user totals") {
