@@ -40,8 +40,22 @@ def type_key(t):
     if s.startswith(('int', 'uint')): return 'int'
     return s
 
+# DuckDB runs every oracle under one fixed memory cap, so an oracle that
+# outgrows it fails loudly instead of taking the host. Spill goes under
+# the engine's scratch root (graft.queries.Scratch.root: the
+# `graft-scratch` dir of $SPARK_GRAFT_SCRATCH, else of /dev/shm), not the
+# working directory. The progress bar is off: it overwrites the
+# per-oracle lines.
+SCRATCH = os.path.join(os.environ.get('SPARK_GRAFT_SCRATCH', '/dev/shm'),
+                       'graft-scratch')
+
 def main(sf_dir, out_dir, only=None):
     con = duckdb.connect()
+    temp_dir = os.path.join(SCRATCH, 'duckdb-tmp')
+    os.makedirs(temp_dir, exist_ok=True)
+    con.execute("SET memory_limit='4GB'")
+    con.execute(f"SET temp_directory='{temp_dir}'")
+    con.execute("SET enable_progress_bar=false")
     for p in glob.glob(os.path.join(sf_dir, '*.parquet')):
         name = os.path.basename(p)[:-len('.parquet')]
         con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{p}')")

@@ -3,7 +3,7 @@ package graft.multimodal
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.queries.{Query, Tables}
+import graft.queries.{DedupQueries, Query, Tables}
 
 /** Multimodal-column plumbing: media as opaque `binary` payloads with a
   * typed metadata struct, decoded at an explicit codec boundary.
@@ -236,7 +236,7 @@ FROM documents ORDER BY doc_id
     res.assignments.toDF("doc_id", "cluster").orderBy("doc_id")
   }
 
-  val mediaPhashClustersOracle: String = """
+  val mediaPhashClustersOracle: String = s"""
 WITH RECURSIVE decim AS (
   SELECT doc_id,
          array_to_string(list_transform(range(1, length(text) + 1, 2),
@@ -277,18 +277,7 @@ cand AS (
   WHERE x.band IN (SELECT band FROM cold)
 ),
 verified AS (SELECT a, b FROM cand WHERE bit_count(xor(pa, pb)) <= 1),
-edges AS (
-  SELECT a AS src, b AS dst FROM verified
-  UNION
-  SELECT b AS src, a AS dst FROM verified
-),
-walk(node, comp) AS (
-  SELECT doc_id, doc_id FROM documents
-  UNION
-  SELECT e.dst, w.comp FROM walk w JOIN edges e ON e.src = w.node
-)
-SELECT node AS doc_id, min(comp) AS cluster FROM walk GROUP BY node
-ORDER BY doc_id
+${DedupQueries.clusterOracle("doc_id", "documents", "verified")}
 """
 
   final case class AudioWindows(doc_id: Long, n_windows: Int,

@@ -75,30 +75,25 @@ object CCQueries {
   def ccGraphx(spark: SparkSession, sfDir: String): DataFrame =
     graft.cc.GraphXCC.run(copurchaseEdges(spark, sfDir)).orderBy("node")
 
-  /** Oracle for ccCopurchase: DuckDB recursive min-label propagation.
-    * Monotone fixpoint — terminates; feasible at sf0.01 scale
-    * (SURVEY.md §7.4.3).
+  /** The co-purchase graph over the lineitem rows matching `where`,
+    * labelled by [[Oracles.minLabel]] as `lab(node, comp)`: the oracle
+    * prefix of every co-purchase CC query, batch and streaming.
     */
-  val copurchaseOracle: String = """
+  private[queries] def copurchaseLabels(where: String): String = s"""
 WITH RECURSIVE li AS (
-  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
+  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem WHERE $where
 ),
 edges AS (
-  SELECT b.l_partkey AS src, a.l_partkey AS dst
-  FROM li a JOIN li b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  UNION
-  SELECT a.l_partkey AS src, b.l_partkey AS dst
+  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
   FROM li a JOIN li b
     ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
 ),
-nodes AS (SELECT DISTINCT l_partkey AS node FROM li),
-walk(node, comp) AS (
-  SELECT node, node FROM nodes
-  UNION
-  SELECT e.dst, w.comp FROM walk w JOIN edges e ON e.src = w.node
-)
-SELECT node, min(comp) AS component FROM walk GROUP BY node ORDER BY node
+nodes AS (SELECT DISTINCT l_partkey AS node FROM li),${Oracles.minLabel("lab", "nodes", "edges")}
+"""
+
+  /** Oracle for ccCopurchase (and cc_graphx). */
+  val copurchaseOracle: String = copurchaseLabels("true") + """
+SELECT node, comp AS component FROM lab ORDER BY node
 """
 
   /** cc_percolation: component structure as the co-purchase WEIGHT
@@ -172,7 +167,9 @@ SELECT node, min(comp) AS component FROM walk GROUP BY node ORDER BY node
     }.reduce(_ unionAll _).orderBy("threshold")
   }
 
-  val ccPercolationOracle: String = """
+  val ccPercolationOracle: String = {
+    val labels = Seq(2, 3).map(t => Oracles.minLabel(s"l$t", "nodes", s"e$t"))
+    s"""
 WITH RECURSIVE li AS (
   SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem
 ),
@@ -182,24 +179,10 @@ pw AS (
   GROUP BY 1, 2
 ),
 nodes AS (SELECT DISTINCT p AS node FROM li),
-e2 AS (SELECT u AS src, v AS dst FROM pw WHERE w >= 2
-       UNION SELECT v, u FROM pw WHERE w >= 2),
-w2(node, comp) AS (
-  SELECT node, node FROM nodes
-  UNION
-  SELECT e.dst, x.comp FROM w2 x JOIN e2 e ON e.src = x.node
-),
-a2 AS (SELECT node, min(comp) AS c FROM w2 GROUP BY node),
-z2 AS (SELECT c, count(*) AS cnt FROM a2 GROUP BY c),
-e3 AS (SELECT u AS src, v AS dst FROM pw WHERE w >= 3
-       UNION SELECT v, u FROM pw WHERE w >= 3),
-w3(node, comp) AS (
-  SELECT node, node FROM nodes
-  UNION
-  SELECT e.dst, x.comp FROM w3 x JOIN e3 e ON e.src = x.node
-),
-a3 AS (SELECT node, min(comp) AS c FROM w3 GROUP BY node),
-z3 AS (SELECT c, count(*) AS cnt FROM a3 GROUP BY c)
+e2 AS (SELECT u AS src, v AS dst FROM pw WHERE w >= 2),
+e3 AS (SELECT u AS src, v AS dst FROM pw WHERE w >= 3),${labels.mkString(",")},
+z2 AS (SELECT comp, count(*) AS cnt FROM l2 GROUP BY comp),
+z3 AS (SELECT comp, count(*) AS cnt FROM l3 GROUP BY comp)
 SELECT * FROM (
   SELECT 2::BIGINT AS threshold, count(*) AS n_components,
          CAST(max(cnt) AS BIGINT) AS largest_size,
@@ -213,33 +196,13 @@ SELECT * FROM (
 )
 ORDER BY threshold
 """
+  }
 
-  val copurchaseComponentsOracle: String = """
-WITH RECURSIVE li AS (
-  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-),
-edges AS (
-  SELECT b.l_partkey AS src, a.l_partkey AS dst
-  FROM li a JOIN li b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  UNION
-  SELECT a.l_partkey AS src, b.l_partkey AS dst
-  FROM li a JOIN li b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-),
-nodes AS (SELECT DISTINCT l_partkey AS node FROM li),
-walk(node, comp) AS (
-  SELECT node, node FROM nodes
-  UNION
-  SELECT e.dst, w.comp FROM walk w JOIN edges e ON e.src = w.node
-),
-assign AS (
-  SELECT node, min(comp) AS component FROM walk GROUP BY node
-)
-SELECT component,
+  val copurchaseComponentsOracle: String = copurchaseLabels("true") + """
+SELECT comp AS component,
        cast(count(*) AS int) AS n_members,
        array_to_string(list_sort(list(node)), ' ') AS members
-FROM assign GROUP BY component ORDER BY component
+FROM lab GROUP BY comp ORDER BY component
 """
 
   val all: Seq[Query] = Seq(

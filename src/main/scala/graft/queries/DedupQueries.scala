@@ -266,6 +266,16 @@ FROM scored ORDER BY exact_ppm DESC, a, b LIMIT 20
     }).orderBy("doc_id")
   }
 
+  /** Oracle tail shared by the near-duplicate clusterings: the `(a, b)`
+    * pairs of `pairs`, labelled by [[Oracles.minLabel]] over every `id`
+    * of `from` (singletons stay their own cluster), as `(id, cluster)`.
+    */
+  private[graft] def clusterOracle(id: String, from: String, pairs: String): String =
+    Oracles.minLabel("lab", s"(SELECT $id AS node FROM $from)",
+      s"(SELECT a AS src, b AS dst FROM $pairs)") + s"""
+SELECT node AS $id, comp AS cluster FROM lab ORDER BY $id
+"""
+
   val dedupMinhashOracle: String = s"""
 WITH RECURSIVE toks AS (
   SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS token
@@ -302,18 +312,7 @@ verified AS (
     FROM cand JOIN tsets ta ON cand.a = ta.doc_id
               JOIN tsets tb ON cand.b = tb.doc_id
   ) WHERE inter * 5 >= uni * 4
-),
-edges AS (
-  SELECT a AS src, b AS dst FROM verified
-  UNION
-  SELECT b AS src, a AS dst FROM verified
-),
-walk(node, comp) AS (
-  SELECT doc_id, doc_id FROM documents
-  UNION
-  SELECT e.dst, w.comp FROM walk w JOIN edges e ON e.src = w.node
-)
-SELECT node AS doc_id, min(comp) AS cluster FROM walk GROUP BY node ORDER BY doc_id
+),${clusterOracle("doc_id", "documents", "verified")}
 """
 
   // ---------------------------------------------------------------
@@ -420,17 +419,7 @@ cand AS (
   WHERE x.band IN (SELECT band FROM cold)
 ),
 verified AS (SELECT a, b FROM cand WHERE bit_count(xor(sa, sb)) <= 1),
-edges AS (
-  SELECT a AS src, b AS dst FROM verified
-  UNION
-  SELECT b AS src, a AS dst FROM verified
-),
-walk(node, comp) AS (
-  SELECT doc_id, doc_id FROM documents
-  UNION
-  SELECT e.dst, w.comp FROM walk w JOIN edges e ON e.src = w.node
-)
-SELECT node AS doc_id, min(comp) AS cluster FROM walk GROUP BY node ORDER BY doc_id
+${clusterOracle("doc_id", "documents", "verified")}
 """
 
   val dedupSimhashOracle: String = """
@@ -670,7 +659,7 @@ ORDER BY contained, container
     res.assignments.toDF("vec_id", "cluster").orderBy("vec_id")
   }
 
-  val dedupEmbeddingOracle: String = """
+  val dedupEmbeddingOracle: String = s"""
 WITH RECURSIVE n AS (
   SELECT vec_id,
          list_transform(embedding, x -> x::double) AS v,
@@ -682,18 +671,7 @@ near AS (
   SELECT a.vec_id AS a, b.vec_id AS b
   FROM u a JOIN u b ON a.vec_id < b.vec_id
   WHERE list_sum(list_transform(range(1, len(a.u) + 1), i -> a.u[i] * b.u[i])) >= 0.4
-),
-edges AS (
-  SELECT a AS src, b AS dst FROM near
-  UNION
-  SELECT b AS src, a AS dst FROM near
-),
-walk(node, comp) AS (
-  SELECT vec_id, vec_id FROM embeddings WHERE vec_id < 1000
-  UNION
-  SELECT e.dst, w.comp FROM walk w JOIN edges e ON e.src = w.node
-)
-SELECT node AS vec_id, min(comp) AS cluster FROM walk GROUP BY node ORDER BY vec_id
+),${clusterOracle("vec_id", "embeddings WHERE vec_id < 1000", "near")}
 """
 
   /** Scale-safe embedding near-dup clustering: LSH bucket candidates →
@@ -830,19 +808,8 @@ near AS (
   WHERE list_sum(list_transform(range(1, len(ua.u) + 1), i -> ua.u[i] * ub.u[i])) >= 0.4
 )"""
 
-  val dedupEmbeddingAnnOracle: String = "WITH RECURSIVE " + annNearSql + """,
-edges AS (
-  SELECT a AS src, b AS dst FROM near
-  UNION
-  SELECT b AS src, a AS dst FROM near
-),
-walk(node, comp) AS (
-  SELECT vec_id, vec_id FROM embeddings
-  UNION
-  SELECT e.dst, w.comp FROM walk w JOIN edges e ON e.src = w.node
-)
-SELECT node AS vec_id, min(comp) AS cluster FROM walk GROUP BY node ORDER BY vec_id
-"""
+  val dedupEmbeddingAnnOracle: String =
+    "WITH RECURSIVE " + annNearSql + "," + clusterOracle("vec_id", "embeddings", "near")
 
   /** Gate-visible ANN recall (VERDICT r3 §missing #3): of the exact
     * cosine-threshold pairs in the bounded baseline subset

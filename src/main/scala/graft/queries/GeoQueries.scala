@@ -349,8 +349,8 @@ FROM ranked WHERE rank <= 3 ORDER BY qid, rank
     *
     * eps = 20 000 (denser than the grid join's 5 000 so cores exist at
     * sf0.01's 1 500 points); minPts = 3. The oracle re-solves the
-    * core–core closure with the recursive min-label walk the cc_*
-    * oracles use. Scale: candidate generation is linear for bounded
+    * core–core closure with [[Oracles.minLabel]], as the cc_* oracles
+    * do. Scale: candidate generation is linear for bounded
     * density — and unbounded density fails LOUDLY up front
     * ([[DbscanCellCap]]; dropping hot cells like the grid join does
     * would invert DBSCAN's meaning, so the guard is the only honest
@@ -431,6 +431,9 @@ FROM ranked WHERE rank <= 3 ORDER BY qid, rank
       .orderBy("cluster")
   }
 
+  // `pairs` is an all-pairs distance join, read through `sym`, `core`
+  // and `edges` many times over; MATERIALIZED runs it once, where DuckDB
+  // would re-run an inlined CTE at every reference.
   val dbscanOracle: String = s"""
 WITH RECURSIVE p AS (
   SELECT c_custkey AS id,
@@ -440,7 +443,7 @@ WITH RECURSIVE p AS (
            % $Side AS y
   FROM customer
 ),
-pairs AS (
+pairs AS MATERIALIZED (
   SELECT a.id AS a, b.id AS b
   FROM p a JOIN p b ON a.id < b.id
   WHERE (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y)
@@ -451,15 +454,10 @@ core AS (
   SELECT a AS node FROM sym GROUP BY a HAVING count(*) >= ${MinPts - 1}
 ),
 edges AS (
-  SELECT s.a AS src, s.b AS dst FROM sym s
-  JOIN core c1 ON c1.node = s.a JOIN core c2 ON c2.node = s.b
-),
-walk(node, comp) AS (
-  SELECT node, node FROM core
-  UNION
-  SELECT e.dst, w.comp FROM walk w JOIN edges e ON e.src = w.node
-),
-labels AS (SELECT node, min(comp) AS cluster FROM walk GROUP BY node),
+  SELECT p.a AS src, p.b AS dst FROM pairs p
+  JOIN core c1 ON c1.node = p.a JOIN core c2 ON c2.node = p.b
+),${Oracles.minLabel("lab", "core", "edges")},
+labels AS (SELECT node, comp AS cluster FROM lab),
 border AS (
   SELECT s.a AS node, min(l.cluster) AS cluster
   FROM sym s JOIN labels l ON l.node = s.b

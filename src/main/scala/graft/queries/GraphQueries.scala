@@ -363,31 +363,13 @@ FROM coeff GROUP BY deg_band ORDER BY deg_band
       hqBaseAssignments(spark, sfDir), deletedNodes, survEdges).orderBy("node")
   }
 
-  /** Oracle for [[ccDecremental]]: from-scratch recursive min-label
-    * closure of the surviving graph — the maintenance path must be
+  /** Oracle for [[ccDecremental]]: from-scratch min-label closure of
+    * the surviving graph — the maintenance path must be
     * indistinguishable from never having had the deleted orders.
     */
-  private val ccDecrementalOracle: String = """
-WITH RECURSIVE li AS (
-  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-  WHERE l_quantity >= 45 AND l_orderkey % 10 <> 3
-),
-edges AS (
-  SELECT b.l_partkey AS src, a.l_partkey AS dst
-  FROM li a JOIN li b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  UNION
-  SELECT a.l_partkey AS src, b.l_partkey AS dst
-  FROM li a JOIN li b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-),
-nodes AS (SELECT DISTINCT l_partkey AS node FROM li),
-walk(node, comp) AS (
-  SELECT node, node FROM nodes
-  UNION
-  SELECT e.dst, w.comp FROM walk w JOIN edges e ON e.src = w.node
-)
-SELECT node, min(comp) AS component FROM walk GROUP BY node ORDER BY node
+  private[graft] val ccDecrementalOracle: String =
+    CCQueries.copurchaseLabels("l_quantity >= 45 AND l_orderkey % 10 <> 3") + """
+SELECT node, comp AS component FROM lab ORDER BY node
 """
 
   /** Top-20 nodes by PageRank (damping 0.85, 5 power iterations) over
@@ -613,29 +595,10 @@ pernode AS (
 SELECT node, n_tri FROM pernode ORDER BY n_tri DESC, node LIMIT 20
 """
 
-  private val ccSizeHistOracle: String = """
-WITH RECURSIVE li AS (
-  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem WHERE l_quantity >= 45
-),
-edges AS (
-  SELECT b.l_partkey AS src, a.l_partkey AS dst
-  FROM li a JOIN li b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  UNION
-  SELECT a.l_partkey AS src, b.l_partkey AS dst
-  FROM li a JOIN li b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-),
-nodes AS (SELECT DISTINCT l_partkey AS node FROM li),
-walk(node, comp) AS (
-  SELECT node, node FROM nodes
-  UNION
-  SELECT e.dst, w.comp FROM walk w JOIN edges e ON e.src = w.node
-),
-assign AS (SELECT node, min(comp) AS component FROM walk GROUP BY node),
-sizes AS (SELECT component, count(*) AS comp_size FROM assign GROUP BY component)
-SELECT comp_size, count(*) AS n_components FROM sizes GROUP BY comp_size
-ORDER BY comp_size
+  private val ccSizeHistOracle: String = CCQueries.copurchaseLabels("l_quantity >= 45") + """
+SELECT comp_size, count(*) AS n_components
+FROM (SELECT comp, count(*) AS comp_size FROM lab GROUP BY comp)
+GROUP BY comp_size ORDER BY comp_size
 """
 
   /** The PageRank recurrence unrolled: 5 (contribution, rank) CTE pairs
@@ -860,6 +823,8 @@ SELECT w, count(*) AS n_edges FROM we GROUP BY w ORDER BY w
       .orderBy("a", "rank")
   }
 
+  // Every `e` row has u < v, so the non-edge probe is one equi-join on
+  // (least, greatest); an OR over both orientations is a nested loop.
   private val linkPredictionOracle: String = edgesCte + """
 , sym AS (SELECT u AS c, v AS n FROM e UNION ALL SELECT v, u FROM e),
 deg AS (SELECT c AS node, count(*) AS deg FROM sym GROUP BY c),
@@ -876,8 +841,7 @@ wedges AS (
 nonedges AS (
   SELECT w.* FROM wedges w
   WHERE NOT EXISTS (SELECT 1 FROM e
-                    WHERE (e.u = w.a AND e.v = w.b)
-                       OR (e.u = w.b AND e.v = w.a))
+                    WHERE e.u = least(w.a, w.b) AND e.v = greatest(w.a, w.b))
 ),
 ranked AS (
   SELECT ne.a, ne.b, ne.common,
@@ -1972,27 +1936,10 @@ FROM cl GROUP BY 1 ORDER BY 1
 
   // The incremental path must converge to the same labels as a
   // from-scratch solve — so its oracle re-solves the whole (sparse)
-  // graph recursively.
-  private val ccIncrementalOracle: String = """
-WITH RECURSIVE li AS (
-  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem WHERE l_quantity >= 45
-),
-edges AS (
-  SELECT b.l_partkey AS src, a.l_partkey AS dst
-  FROM li a JOIN li b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  UNION
-  SELECT a.l_partkey AS src, b.l_partkey AS dst
-  FROM li a JOIN li b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-),
-nodes AS (SELECT DISTINCT l_partkey AS node FROM li),
-walk(node, comp) AS (
-  SELECT node, node FROM nodes
-  UNION
-  SELECT e.dst, w.comp FROM walk w JOIN edges e ON e.src = w.node
-)
-SELECT node, min(comp) AS component FROM walk GROUP BY node ORDER BY node
+  // graph.
+  private[graft] val ccIncrementalOracle: String =
+    CCQueries.copurchaseLabels("l_quantity >= 45") + """
+SELECT node, comp AS component FROM lab ORDER BY node
 """
 
   val all: Seq[Query] = Seq(

@@ -187,24 +187,22 @@ ORDER BY name_a, name_b
       .orderBy("n_members")
   }
 
-  /** Min-label transitive closure in SQL: comp labels walk down to the
-    * lexicographic minimum reachable name, which IS the canonical.
+  /** Oracle prefix of [[entityClusters]] and [[golden]]: the one-edit
+    * name graph labelled by [[Oracles.minLabel]] as `lab(name, comp)`.
+    * Each label is the lexicographic-min name of its entity, which IS
+    * the canonical.
     */
-  val entityClustersOracle: String = """
+  private val entityLabels: String = s"""
 WITH RECURSIVE n AS (SELECT DISTINCT p_name AS name FROM part),
 p AS (
-  SELECT a.name AS na, b.name AS nb
+  SELECT a.name AS src, b.name AS dst
   FROM n a JOIN n b
     ON abs(len(a.name) - len(b.name)) <= 1 AND a.name < b.name
   WHERE levenshtein(a.name, b.name) = 1
-),
-e AS (SELECT na AS x, nb AS y FROM p UNION SELECT nb, na FROM p),
-walk(name, comp) AS (
-  SELECT name, name FROM n
-  UNION
-  SELECT e.x, w.comp FROM e JOIN walk w ON w.name = e.y AND w.comp < e.x
-),
-lab AS (SELECT name, min(comp) AS comp FROM walk GROUP BY name),
+),${Oracles.minLabel("ml", "(SELECT name AS node FROM n)", "p")},
+lab AS (SELECT node AS name, comp FROM ml)"""
+
+  val entityClustersOracle: String = entityLabels + """,
 ent AS (
   SELECT comp, min(name) AS canonical, count(*) AS n_members
   FROM lab GROUP BY comp
@@ -271,21 +269,7 @@ FROM ent GROUP BY n_members ORDER BY n_members
       .orderBy("canonical")
   }
 
-  val goldenOracle: String = """
-WITH RECURSIVE n AS (SELECT DISTINCT p_name AS name FROM part),
-p AS (
-  SELECT a.name AS na, b.name AS nb
-  FROM n a JOIN n b
-    ON abs(len(a.name) - len(b.name)) <= 1 AND a.name < b.name
-  WHERE levenshtein(a.name, b.name) = 1
-),
-e AS (SELECT na AS x, nb AS y FROM p UNION SELECT nb, na FROM p),
-walk(name, comp) AS (
-  SELECT name, name FROM n
-  UNION
-  SELECT e.x, w.comp FROM e JOIN walk w ON w.name = e.y AND w.comp < e.x
-),
-lab AS (SELECT name, min(comp) AS comp FROM walk GROUP BY name),
+  val goldenOracle: String = entityLabels + """,
 rec AS (
   SELECT lab.comp, part.p_name AS name,
          cast(p_partkey AS bigint) AS partkey,

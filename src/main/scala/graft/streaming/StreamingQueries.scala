@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.queries.Query
+import graft.queries.{GraphQueries, Query}
 
 /** Structured Streaming over the `events` table: the same parquet data
   * replayed through `readStream` (file source), windowed/sessionized
@@ -1021,8 +1021,8 @@ FROM r WHERE rn = (n + 1) // 2 ORDER BY user_id
     * result rebases the table.
     * Because labels are component minima, the two-batch composition is
     * bit-identical to a from-scratch solve of the full graph — exactly
-    * what the oracle computes, so the hash gate proves the streaming
-    * maintenance loses nothing.
+    * what its oracle, cc_incremental's, computes, so the hash gate
+    * proves the streaming maintenance loses nothing.
     *
     * Scale: per trigger the work is two hash joins of the delta
     * against the label table (the delta side is the small one and
@@ -1045,32 +1045,6 @@ FROM r WHERE rn = (n + 1) // 2 ORDER BY user_id
     spark.read.parquet(labels).orderBy("node")
   }
 
-  /** The maintained table equals the from-scratch min-label closure of
-    * the FULL high-quantity graph (same closure as cc_incremental's
-    * oracle — the streaming composition must lose nothing).
-    */
-  val ccIncrementalStreamOracle: String = """
-WITH RECURSIVE li AS (
-  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem WHERE l_quantity >= 45
-),
-edges AS (
-  SELECT b.l_partkey AS src, a.l_partkey AS dst
-  FROM li a JOIN li b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  UNION
-  SELECT a.l_partkey AS src, b.l_partkey AS dst
-  FROM li a JOIN li b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-),
-nodes AS (SELECT DISTINCT l_partkey AS node FROM li),
-walk(node, comp) AS (
-  SELECT node, node FROM nodes
-  UNION
-  SELECT e.dst, w.comp FROM walk w JOIN edges e ON e.src = w.node
-)
-SELECT node, min(comp) AS component FROM walk GROUP BY node ORDER BY node
-"""
-
   /** stream_cc_decremental: the DELETION half of streaming label
     * maintenance — [[ccIncrementalStream]] handles the ingest stream;
     * this is the retention/GDPR stream, driven by a CDC-shaped feed
@@ -1083,9 +1057,10 @@ SELECT node, min(comp) AS component FROM walk GROUP BY node ORDER BY node
     * (rebuilt from the updated clique store). Because labels are
     * component minima, the maintained table is bit-identical
     * to a from-scratch solve of the surviving graph — which is what
-    * the oracle computes: after batch 1 (all high-quantity orders as
-    * adds) and batch 2 (orders `%10 == 3` as deletes), the result must
-    * be indistinguishable from never having had the deleted orders.
+    * its oracle, cc_decremental's, computes: after batch 1 (all
+    * high-quantity orders as adds) and batch 2 (orders `%10 == 3` as
+    * deletes), the result must be indistinguishable from never having
+    * had the deleted orders.
     * Nodes whose every order was deleted leave the table entirely —
     * the membership contract a deletion pipeline must honor.
     *
@@ -1128,34 +1103,6 @@ SELECT node, min(comp) AS component FROM walk GROUP BY node ORDER BY node
     }
     spark.read.parquet(labels).orderBy("node")
   }
-
-  /** The maintained table equals the from-scratch min-label closure of
-    * the SURVIVING graph (all high-quantity orders minus the deleted
-    * `%10 == 3` orders) — the cc_decremental contract, reached through
-    * a streamed add batch + delete batch instead of a batch recompute.
-    */
-  val ccDecrementalStreamOracle: String = """
-WITH RECURSIVE li AS (
-  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-  WHERE l_quantity >= 45 AND l_orderkey % 10 <> 3
-),
-edges AS (
-  SELECT b.l_partkey AS src, a.l_partkey AS dst
-  FROM li a JOIN li b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  UNION
-  SELECT a.l_partkey AS src, b.l_partkey AS dst
-  FROM li a JOIN li b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-),
-nodes AS (SELECT DISTINCT l_partkey AS node FROM li),
-walk(node, comp) AS (
-  SELECT node, node FROM nodes
-  UNION
-  SELECT e.dst, w.comp FROM walk w JOIN edges e ON e.src = w.node
-)
-SELECT node, min(comp) AS component FROM walk GROUP BY node ORDER BY node
-"""
 
   /** stream_foreachbatch_upsert: the `foreachBatch` MERGE sink — THE
     * production pattern for landing a streaming aggregate in an upsert
@@ -1590,8 +1537,8 @@ ORDER BY day ASC NULLS FIRST, event_type ASC NULLS FIRST
     Query("stream_chained_windows", chainedWindows, chainedWindowsOracle),
     Query("stream_session_timers", sessionTimers, sessionTimersOracle),
     Query("stream_foreachbatch_upsert", foreachBatchUpsert, foreachBatchUpsertOracle),
-    Query("stream_cc_incremental", ccIncrementalStream, ccIncrementalStreamOracle),
-    Query("stream_cc_decremental", ccDecrementalStream, ccDecrementalStreamOracle),
+    Query("stream_cc_incremental", ccIncrementalStream, GraphQueries.ccIncrementalOracle),
+    Query("stream_cc_decremental", ccDecrementalStream, GraphQueries.ccDecrementalOracle),
     Query("stream_dedup_watermark", dedupWatermark, dedupWatermarkOracle),
     Query("stream_running_count", runningCount, runningCountOracle),
     Query("stream_mapstate_modes", mapStateModes, mapStateModesOracle),

@@ -156,13 +156,12 @@ object CCScaleProbe {
     // case (every component task-local, one rep per node). Scattering
     // the edges mimics how a real corpus arrives — components smeared
     // across every task — which is the case the contraction must beat.
-    // SPARK_GRAFT_SCATTER sizes the input partitions: the fixpoint's
-    // map-side aggregation state (the (self, nbr) dedup and the
-    // min/count partials) is proportional to edges/partition,
-    // so a halved heap needs proportionally more (smaller) partitions
-    // — the same sizing a real cluster does with
-    // spark.sql.files.maxPartitionBytes (round-10 probe: 32 partitions
-    // × 12M edges OOM'd the map-side aggregation at 48g; 128 × 3M fits).
+    // SPARK_GRAFT_SCATTER sets the input partition count, i.e. how many
+    // edges each map task of the first star's exchange writes. The star
+    // itself holds O(1) state per key (the sorted streaming scan, see
+    // StarOps), so this sizes only the shuffle-write and sort buffers,
+    // which spill — the sizing a real cluster does with
+    // spark.sql.files.maxPartitionBytes.
     val scatter = sys.env.getOrElse("SPARK_GRAFT_SCATTER", "32").toInt
     lazy val edges = {
       val e = time(s"generate nBlocks=$nBlocks (cliques -> edges, scattered x$scatter, checkpointed)") {
@@ -375,7 +374,7 @@ object CCScaleProbe {
             // a long tail of small components in the same graph. Union
             // the tree with CliqueGen blocks (node ids offset above the
             // tree so the populations are disjoint) and confirm the hot
-            // key's AQE skew handling coexists with the tail's
+            // key's one-task sorted scan coexists with the tail's
             // parallelism: per-round wall stays near the pure-giant run
             // at the same tree size, and BOTH populations label exactly.
             val mixBlocks = args.drop(3).headOption.map(_.toInt).getOrElse(25000)

@@ -288,6 +288,77 @@ class CCPropertySpec extends SparkSpec {
     assert(ours === theirs)
   }
 
+  /** Ids 0 until n relabelled by a seeded shuffle, so a component's
+    * minimum sits at a random position of a path, comb or broom instead
+    * of at its end.
+    */
+  private def permuted(edges: Seq[(Long, Long)], n: Int, seed: Int): Seq[(Long, Long)] = {
+    val ids = new scala.util.Random(seed).shuffle((0L until n).toVector)
+    edges.map { case (a, b) => (ids(a.toInt), ids(b.toInt)) }
+  }
+
+  private def path(n: Int): Seq[(Long, Long)] = (0L until n - 1).map(i => (i, i + 1))
+
+  /** Solves with `run`, `runAuto` and `runContracted` (the last two
+    * with the distributed fixpoint forced), checks each one's labels
+    * against union-find and returns their round counts.
+    */
+  private def checkEverySolver(edges: Seq[(Long, Long)], maxIterations: Int,
+                               what: String): Seq[Int] = {
+    val s = spark
+    import s.implicits._
+    val df = edges.toDF("src", "dst")
+    val oracle = unionFind(edges)
+    val results = Seq(
+      ConnectedComponents.run(df, maxIterations),
+      ConnectedComponents.runAuto(df, maxIterations, smallGraphThreshold = 0),
+      ConnectedComponents.runContracted(df.repartition(4), maxIterations,
+        smallGraphThreshold = 0))
+    for ((res, name) <- results.zip(Seq("run", "runAuto", "runContracted"))) {
+      assert(res.converged, s"$name on $what did not converge")
+      assert(res.assignments.as[(Long, Long)].collect().toMap === oracle,
+        s"$name on $what")
+    }
+    results.map(_.iterations)
+  }
+
+  test("paths of 2^k nodes converge within k² rounds on every solver") {
+    for (k <- 4 to 8; permute <- Seq(false, true)) {
+      val n = 1 << k
+      val edges = if (permute) permuted(path(n), n, k) else path(n)
+      val what = s"${if (permute) "permuted" else "ordered"} path of $n"
+      val rounds = checkEverySolver(edges, k * k + 1, what)
+      assert(rounds.forall(_ <= k * k), s"$what: rounds $rounds exceed k² = ${k * k}")
+      info(s"$what: run / runAuto / runContracted rounds ${rounds.mkString(" / ")}")
+    }
+  }
+
+  test("combs, brooms and a bridged pair of giants match union-find on every solver") {
+    // comb: a 32-node spine, a 7-node tooth hanging off every spine node
+    val spine = 32
+    val comb = path(spine) ++ (0 until spine).flatMap { i =>
+      val tooth = spine + i * 7L
+      (i.toLong, tooth) +: (0L until 6L).map(j => (tooth + j, tooth + j + 1))
+    }
+    // broom: a 128-node handle ending in a 128-bristle star
+    val broom = path(128) ++ (128L until 256L).map(b => (127L, b))
+    // two random connected giants on interleaved ids (evens, odds),
+    // joined by one edge between their largest ids
+    val rnd = new scala.util.Random(606)
+    def giant(ids: IndexedSeq[Long]): Seq[(Long, Long)] =
+      ids.indices.tail.map(i => (ids(rnd.nextInt(i)), ids(i))) ++
+        Seq.fill(ids.size)((ids(rnd.nextInt(ids.size)), ids(rnd.nextInt(ids.size))))
+    val evens = rnd.shuffle((0L until 600L by 2).toVector)
+    val odds = rnd.shuffle((1L until 600L by 2).toVector)
+    val bridged = giant(evens) ++ giant(odds) :+ ((598L, 599L))
+    for ((edges, what) <- Seq(comb -> "comb", permuted(comb, 256, 1) -> "permuted comb",
+        broom -> "broom", permuted(broom, 256, 2) -> "permuted broom",
+        bridged -> "bridged giants")) {
+      val rounds = checkEverySolver(edges, 50, what)
+      info(s"$what: run / runAuto / runContracted rounds ${rounds.mkString(" / ")}")
+    }
+  }
+
   test("runAuto input sizing encodes the round-10 half-memory lesson") {
     val GiB = 1L << 30
     val r10Edges = 384653590L // SCALE.md: the 48g probe graph
