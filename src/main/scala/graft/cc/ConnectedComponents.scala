@@ -1,7 +1,7 @@
 package graft.cc
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -247,22 +247,31 @@ object ConnectedComponents {
     * min node of the node's task-local component — so every edge
     * collapses inside its task, and all surviving global connectivity
     * lives in nodes that appear in more than one task with different
-    * reps. Phase 2 star-expands each node's rep clique WITHOUT
-    * materializing it (per-node min rep + a join back onto the
-    * mapping — O(1) state per key, as in StarOps) and
-    * solves the rep graph — O(tasks x components-per-task) nodes,
-    * typically orders of magnitude smaller than the input — with
-    * [[runAuto]]: driver
-    * union-find when tiny, otherwise the alternating fixpoint, so the
-    * reference convergence contract still governs the pairs that
-    * remain. Phase 3 joins rep labels back through the per-node
-    * min-rep table (`mins`) — the rep side is small, AQE broadcasts
-    * it — and the mapping's blocks are freed before phase 3 runs.
+    * reps.
+    *
+    * Phase 2 is one sorted pass ([[ContractScan]]), the paper's
+    * streaming reducer as in [[StarOps]]:
+    * `repartition(<session shuffle partitions>, node)`,
+    * `sortWithinPartitions(node, rep)` and one `mapPartitions` scan. A
+    * node's first row gives its min rep m and emits its label row
+    * `(node, m)`; each other distinct rep r emits the rep-clique star
+    * edge `(r, m)`. Both kinds of row land in one eager local
+    * checkpoint, the contraction's only action. The rep graph —
+    * O(tasks x components-per-task) nodes, typically orders of
+    * magnitude smaller than the input — is solved by [[runAuto]]:
+    * driver union-find when tiny, otherwise the alternating fixpoint,
+    * so the reference convergence contract still governs the pairs
+    * that remain. Phase 3 left-joins the label rows to the rep labels
+    * on m and keeps m where the rep graph has no label for it.
     *
     * Exactness: rep(n) <= n and rep(n) is connected to n, so a
     * component's minimum rep IS its minimum node (the global min node
-    * is its own rep in every task where it appears) — labels are
-    * bit-identical to [[run]]'s under any partitioning (CCPropertySpec).
+    * is its own rep in every task where it appears). A rep in no star
+    * edge is the only rep of every node it represents, so no other
+    * task-local component shares a node with its components: its
+    * component is theirs, and it is their minimum — its own label.
+    * Labels are bit-identical to [[run]]'s under any partitioning
+    * (CCPropertySpec).
     *
     * Memory: the task-local map costs 16 bytes/slot over the task's
     * DISTINCT nodes. With 128 MB input splits (~8M edges of two
@@ -270,7 +279,10 @@ object ConnectedComponents {
     * transient; real graphs sit far below because contraction exists
     * precisely when nodes repeat. Size
     * `spark.sql.files.maxPartitionBytes` down if a corpus approaches
-    * the worst case.
+    * the worst case. The scan holds O(1) state per node — its group
+    * streams out of Spark's external sorter, which spills — and its
+    * partition count is fixed, so AQE cannot coalesce the node-scale
+    * stages into one task.
     *
     * `iterations` and `rounds` report the inner solve's fixpoint rounds
     * (0 and empty on the driver path); `converged` is the inner solve's
@@ -288,53 +300,73 @@ object ConnectedComponents {
                     smallGraphThreshold: Long = 4L << 20): CCResult = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val mapping = edges.select(
+    val scanned = contract(edges.select(
         col("src").cast("bigint"), col("dst").cast("bigint"))
       .as[(Long, Long)]
       .mapPartitions { it =>
         val uf = new LocalUnionFind(1 << 12)
         it.foreach { case (a, b) => uf.union(a, b) }
-        uf.iterator
-      }
-      .toDF("node", "rep")
-      .localCheckpoint(false, StorageLevel.MEMORY_AND_DISK_SER)
-    // A node's reps across tasks form a clique; the star expansion of
-    // that clique is just (rep, min rep) per mapping row — so phase 2
-    // needs only the per-node MIN rep (a combinable O(1)-state
-    // aggregate) joined back onto the mapping, never the rep SET.
-    // The per-key set here is bounded (one rep per task that saw the
-    // node), but the MAP-SIDE hash of boxed single-element sets over
-    // ~10⁷ keys per task is not — at 1 GB/core the collect_set form this replaces
-    // died with AGGREGATE_OUT_OF_MEMORY on the 10⁸-node giant graph
-    // while min/join spills and passes (SCALE.md round 11).
-    val mins = mapping.groupBy("node")
-      .agg(min(col("rep")).as("rep"))
-      .localCheckpoint(false, StorageLevel.MEMORY_AND_DISK_SER)
-    // Rep-clique star edges: (rep, min rep) per mapping row. Duplicates
-    // are fine — runAuto dedups; a singleton node yields its (m, m)
-    // self-pair, keeping isolated nodes visible, exactly as the set
-    // form's starEdges did.
-    val repEdges = mapping
-      .join(mins.toDF("node", "m"), "node")
-      .select(col("rep").as("src"), col("m").as("dst"))
-    val inner = runAuto(repEdges, maxIterations, smallGraphThreshold)
-    val labels = mins
-      .join(inner.assignments.toDF("rep", "component"), "rep")
-      .select(col("node"), col("component"))
-    // labels reads only mins + assignments, so the mapping's blocks
-    // are dead ONCE mins' lazy checkpoint is materialized. Today
-    // runAuto materializes it transitively (its eager input checkpoint
-    // reads repEdges, which reads mins), but nothing in runAuto's
-    // contract promises that — so pin the invariant locally with one
-    // node-scale action against the (already-cached) mins before
-    // freeing the mapping. localCheckpoint blocks cannot be recomputed;
-    // unpersisting them under a still-lazy reader is a job failure,
-    // not a slowdown (ADVICE r11). Free through the checkpoint RDD —
-    // Dataset.unpersist is a no-op on a localCheckpoint (same
-    // discipline as the fixpoint loop).
-    mins.count()
-    checkpointRdd(mapping).foreach(_.unpersist(false))
+        uf.iterator.map { case (n, r) => NodeRep(n, r) }
+      })
+    val inner = runAuto(
+      scanned.where(!col("label")).select(col("id").as("src"), col("m").as("dst")),
+      maxIterations, smallGraphThreshold)
+    val labels = scanned.where(col("label"))
+      .join(inner.assignments.toDF("m", "component"), Seq("m"), "left")
+      .select(col("id").as("node"), coalesce(col("component"), col("m")).as("component"))
     CCResult(labels, inner.converged, inner.iterations, inner.rounds)
+  }
+
+  /** [[runContracted]]'s phase 2 over its `(node, rep)` rows, run by
+    * its one action. MEMORY_AND_DISK_SER as in [[StarOps]]: each row is
+    * read once more.
+    */
+  private[cc] def contract(mapping: Dataset[NodeRep]): Dataset[Contracted] = {
+    val spark = mapping.sparkSession
+    import spark.implicits._
+    mapping.repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt, col("node"))
+      .sortWithinPartitions("node", "rep")
+      .mapPartitions((it: Iterator[NodeRep]) => new ContractScan(it): Iterator[Contracted])
+      .localCheckpoint(eager = true, StorageLevel.MEMORY_AND_DISK_SER)
+  }
+
+  /** One phase-1 row of [[runContracted]]: a node and its task-local rep. */
+  private[cc] final case class NodeRep(node: Long, rep: Long)
+
+  /** One row of [[runContracted]]'s scan: the label row `(node, m)` when
+    * `label`, else the rep-clique star edge `(rep, m)`.
+    */
+  private[cc] final case class Contracted(id: Long, m: Long, label: Boolean)
+
+  /** Streams [[runContracted]]'s phase 2 over rows sorted by (node, rep)
+    * within the partition, all rows of a node in one partition: a
+    * group's first row gives m and emits `(node, m)`, each later distinct
+    * rep r emits `(r, m)`, and a row repeating the previous rep is
+    * skipped.
+    */
+  private[cc] final class ContractScan(rows: Iterator[NodeRep])
+      extends Iterator[Contracted] {
+    private val in = rows.buffered
+    private var open = false
+    private var node, m, last = 0L
+
+    def hasNext: Boolean = {
+      while (open && in.hasNext && in.head.node == node && in.head.rep == last) in.next()
+      in.hasNext
+    }
+
+    def next(): Contracted = {
+      if (!hasNext) throw new NoSuchElementException("end of contraction scan")
+      val r = in.next()
+      last = r.rep
+      if (open && r.node == node) Contracted(r.rep, m, label = false)
+      else {
+        open = true
+        node = r.node
+        m = r.rep
+        Contracted(node, m, label = true)
+      }
+    }
   }
 
   /** Mutable long-keyed union-find (union-by-min roots + full path

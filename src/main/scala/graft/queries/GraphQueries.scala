@@ -1874,8 +1874,10 @@ GROUP BY 1 ORDER BY bc_ppm DESC, node LIMIT 20
   }
 
   // The oracle replays the same 15 doubling rounds as chained
-  // (non-recursive) CTEs — a recursive CTE cannot self-join its working
-  // table, but doubling needs f^2k(x) = f^k(f^k(x)).
+  // (non-recursive) CTEs: doubling needs f^2k(x) = f^k(f^k(x)), a join
+  // of the previous round with itself. DuckDB 1.0.0 does let a recursive
+  // CTE join its working table to itself (Oracles.minLabel does), so one
+  // recursive CTE could replace the chain; that is unmeasured.
   private val affinityOracle: String = {
     val rounds = (1 to 15).map { i =>
       // MATERIALIZED: each round references the previous one twice;

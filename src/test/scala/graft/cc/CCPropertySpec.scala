@@ -277,6 +277,66 @@ class CCPropertySpec extends SparkSpec {
     assert(res.assignments.count() === 0)
   }
 
+  test("the contraction scan equals the reference min-rep table and rep-clique star") {
+    val s = spark
+    import s.implicits._
+    import ConnectedComponents.NodeRep
+    val rnd = new scala.util.Random(1618)
+    val ids = (-20L to 20L) ++ Seq(Long.MinValue, Long.MinValue + 1, Long.MaxValue - 1, Long.MaxValue)
+    def id(): Long = ids(rnd.nextInt(ids.length))
+    assert(ConnectedComponents.contract(Seq.empty[NodeRep].toDS()).collect().isEmpty)
+    for (trial <- 0 until 5) {
+      // each node seen by 1..5 tasks, each task naming one rep from a
+      // small pool, so reps repeat within and across nodes
+      val nodes = if (trial == 4) ids else rnd.shuffle(ids).take(4 + 8 * trial)
+      val rows = rnd.shuffle(nodes.flatMap { n =>
+        Seq.fill(1 + rnd.nextInt(5))(NodeRep(n, if (rnd.nextInt(3) == 0) n else id()))
+      })
+      val groups = rows.groupBy(_.node).map { case (n, g) => n -> g.map(_.rep).distinct.sorted }
+      val wantLabels = groups.map { case (n, reps) => (n, reps.head) }.toSeq.sorted
+      val wantEdges = groups.values.toSeq.flatMap(reps => reps.tail.map(r => (r, reps.head))).sorted
+      val got = ConnectedComponents.contract(rows.toDS().repartition(3)).collect().toSeq
+      val (labels, edges) = got.partition(_.label)
+      assert(labels.map(c => (c.id, c.m)).sorted === wantLabels, s"label rows, trial $trial")
+      assert(edges.map(c => (c.id, c.m)).sorted === wantEdges, s"star edges, trial $trial")
+    }
+  }
+
+  test("runContracted labels task-local and split components exactly") {
+    val s = spark
+    import s.implicits._
+    // Components held wholly inside one partition (their reps never
+    // reach the rep graph, so their labels come from the coalesce) next
+    // to components whose edges are dealt across partitions.
+    val rnd = new scala.util.Random(2357)
+    val parts = 4
+    val local = (0 until 12).map { c =>
+      val base = 1000L * c
+      (c % parts, path(3 + c).map { case (a, b) => (base + a, base + b) })
+    }
+    val split = (12 until 20).map { c =>
+      val ids = rnd.shuffle((0L until 40L).map(_ + 1000L * c).toVector)
+      ids.indices.tail.map(i => (ids(rnd.nextInt(i)), ids(i)))
+    }
+    // a local component below every other id, and a node of split
+    // component 12 that only partition 1 sees
+    val placed = local ++ Seq(0 -> Seq((-5L, -4L)), 1 -> Seq((12000L, 99999L))) ++
+      split.flatten.map(e => rnd.nextInt(parts) -> Seq(e))
+    val byPart = (0 until parts).map(p => placed.filter(_._1 == p).flatMap(_._2))
+    val edges = byPart.flatten
+    val df = spark.sparkContext.parallelize(0 until parts, parts)
+      .flatMap(byPart(_)).toDF("src", "dst")
+    val oracle = unionFind(edges)
+    for (threshold <- Seq(4L << 20, 0L)) {
+      val res = ConnectedComponents.runContracted(df, maxIterations = 50,
+        smallGraphThreshold = threshold)
+      val got = res.assignments.as[(Long, Long)].collect()
+      assert(res.converged, s"threshold $threshold did not converge")
+      assert(got.map(_._1).distinct.length === got.length, "a node labeled twice")
+      assert(got.toMap === oracle, s"threshold $threshold")
+    }
+  }
+
   test("agrees with GraphX connectedComponents (Pregel) on a fixed random graph") {
     val s = spark
     import s.implicits._

@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import graft.SparkSpec
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.HashAggregateExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -273,10 +273,10 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(fired === Seq.fill(res.iterations - 1)(false) :+ true)
   }
 
-  test("a fixpoint round runs at most 4 jobs (one action; AQE adds one " +
-       "map-stage job per star shuffle)") {
+  /** Runs `body` and counts the Spark jobs it starts. */
+  private def countingJobs[T](body: => T): (T, Int) = {
     val sc = spark.sparkContext
-    val (tag, key) = ("cc-round-jobs", "graft.spec.span")
+    val (tag, key) = ("cc-jobs", "graft.spec.span")
     val jobs = new AtomicInteger()
     val drained = new CountDownLatch(1)
     val listener = new SparkListener {
@@ -290,18 +290,46 @@ class ConnectedComponentsSpec extends SparkSpec {
     sc.addSparkListener(listener)
     try {
       sc.setLocalProperty(key, tag)
-      val res =
-        try ConnectedComponents.run(edgesDf((0L until 199L).map(i => (i, i + 1))))
-        finally sc.setLocalProperty(key, null)
+      val res = try body finally sc.setLocalProperty(key, null)
       // listener events arrive in order: once the marker job is seen,
-      // every job of the run has been counted
+      // every job of the body has been counted
       sc.setLocalProperty(key, "end")
       try sc.parallelize(Seq(1)).count() finally sc.setLocalProperty(key, null)
       assert(drained.await(60, TimeUnit.SECONDS))
-      assert(res.converged && res.iterations === 10)
-      assert(jobs.get <= 4 * res.iterations,
-        s"${jobs.get} jobs for ${res.iterations} rounds")
+      (res, jobs.get)
     } finally sc.removeSparkListener(listener)
+  }
+
+  test("a fixpoint round runs at most 4 jobs (one action; AQE adds one " +
+       "map-stage job per star shuffle)") {
+    val (res, jobs) = countingJobs(
+      ConnectedComponents.run(edgesDf((0L until 199L).map(i => (i, i + 1)))))
+    assert(res.converged && res.iterations === 10)
+    assert(jobs <= 4 * res.iterations, s"$jobs jobs for ${res.iterations} rounds")
+  }
+
+  test("runContracted plus a noop sink runs at most 6 jobs; its scan keeps " +
+       "every shuffle partition") {
+    val cliques = CliqueGen.cliques(spark, 40, 7L).localCheckpoint()
+    val (res, jobs) = countingJobs {
+      val r = ConnectedComponents.runContracted(EdgeBuilder.cliqueEdgesGen(cliques))
+      r.assignments.write.format("noop").mode("overwrite").save()
+      r
+    }
+    assert(res.converged && res.iterations === 0)
+    // measured: 6 (the min-rep aggregate, its count and the join-back
+    // form ran 11)
+    assert(jobs <= 6, s"$jobs jobs")
+    // the only checkpoint under the labels is the contraction scan's
+    // (the inner solve took the driver path); AQE must not have
+    // coalesced it to fewer tasks
+    val ckpts = res.assignments.queryExecution.analyzed.collect {
+      case l: LogicalRDD => l.rdd.getNumPartitions
+    }
+    assert(ckpts === Seq(spark.conf.get("spark.sql.shuffle.partitions").toInt))
+    val s = spark; import s.implicits._
+    assert(res.assignments.as[(Long, Long)].collect().toSet ===
+      CliqueGen.groundTruth(spark, 40, 7L).as[(Long, Long)].collect().toSet)
   }
 
   test("starEdges: duplicate-only cliques keep their node as a self-pair") {

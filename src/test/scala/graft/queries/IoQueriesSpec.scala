@@ -52,12 +52,13 @@ class IoQueriesSpec extends SparkSpec {
   test("csv roundtrip preserves every row verbatim") {
     val s = spark
     val docs = Tables.documents(s, sfDir)
-    val dir = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), "graft_io_spec").toString
-    docs.write.mode("overwrite").option("header", "true").csv(dir)
-    val back = s.read.schema(docs.schema).option("header", "true").csv(dir)
-    assert(back.count() === docs.count())
-    assert(back.exceptAll(docs).isEmpty && docs.exceptAll(back).isEmpty)
+    val dir = java.nio.file.Files.createTempDirectory(Scratch.root, "graft_io_spec")
+    try {
+      docs.write.mode("overwrite").option("header", "true").csv(dir.toString)
+      val back = s.read.schema(docs.schema).option("header", "true").csv(dir.toString)
+      assert(back.count() === docs.count())
+      assert(back.exceptAll(docs).isEmpty && docs.exceptAll(back).isEmpty)
+    } finally Scratch.deleteRec(dir)
   }
 
   test("compaction collapses the file count and range-clusters doc_id") {

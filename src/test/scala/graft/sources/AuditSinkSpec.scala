@@ -4,8 +4,10 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 
 import graft.SparkSpec
+import graft.queries.Scratch
 
 /** Pins the V2 write path's transactional semantics — the parts the
   * hash gate can't see: manifest-as-commit bookkeeping, checksum
@@ -13,19 +15,16 @@ import graft.SparkSpec
   * crash-window snapshot preservation (publish-then-GC), and NULL
   * fail-fast.
   */
-class AuditSinkSpec extends SparkSpec {
+class AuditSinkSpec extends SparkSpec with BeforeAndAfterAll {
 
-  private def freshDir(tag: String): String = {
-    val d = Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_audit_spec", tag)
-    if (Files.exists(d)) {
-      val w = Files.walk(d)
-      try w.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-      finally w.close()
-    }
-    d.toString
-  }
+  /** One fresh dir below the scratch root holds this suite's dirs, so
+    * two JVMs never share them; it is removed after the suite.
+    */
+  private lazy val root = Files.createTempDirectory(Scratch.root, "graft_audit_spec")
+
+  override def afterAll(): Unit = try Scratch.deleteRec(root) finally super.afterAll()
+
+  private def freshDir(tag: String): String = root.resolve(tag).toString
 
   private def writeRange(dir: String, n: Long, parts: Int): Unit =
     spark.range(0, n, 1, parts)
