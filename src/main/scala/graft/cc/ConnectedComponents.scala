@@ -1,8 +1,9 @@
 package graft.cc
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.{DataFrame, Dataset, Row, graftsql}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -14,10 +15,24 @@ import org.apache.spark.storage.StorageLevel
   * the result maps every node of the graph to the minimum node id of its
   * component (the min node maps to itself), `converged` reports whether
   * the fixpoint was reached within `maxIterations`, and `iterations` is
-  * the number of large+small rounds executed. Convergence rule
-  * (reference :247-249), preserved exactly because it changes iteration
-  * counts: converged ⇔ both change counts equal the previous iteration's
-  * counts, OR both are zero.
+  * the number of large+small rounds executed.
+  *
+  * Stop rule: a certificate, not the reference's heuristic. The large
+  * star's scan flags every group that is neither a *leaf* (exactly one
+  * distinct neighbour other than itself, and that one smaller) nor a
+  * *centre* (no smaller neighbour), and [[run]] stops after the first
+  * round that flags none. Then the round's input was a star forest
+  * centred on the component minima: a centre's neighbours are larger,
+  * so each is a leaf whose only neighbour is that centre, and a leaf's
+  * neighbour has a larger neighbour, so it is a centre. The stars
+  * preserve connectivity, so that round's output, `(n, centre)` for
+  * every node, is the exact labelling, and `converged` is true only
+  * then. The reference (:247-249) stopped when both change counts
+  * repeated the previous round's or were both zero: a heuristic that
+  * spends one more round confirming a labelling that is already final
+  * (and could in principle stop early on a coincidental repeat). So
+  * `iterations`, `rounds` and `nonStar` end at the first star-forest
+  * round.
   *
   * Unlike the reference (which returns a null RDD on non-convergence) we
   * always return the partial assignment; callers branch on `converged`.
@@ -31,23 +46,14 @@ import org.apache.spark.storage.StorageLevel
   */
 object ConnectedComponents {
 
-  /** `rounds` holds each fixpoint round's (large, small) change counts,
-    * in order — counts [[run]] already has on the driver, so reporting
-    * them runs no job. Empty when no star round ran (the driver
-    * union-find path).
+  /** `rounds` holds each fixpoint round's (large, small) change counts
+    * and `nonStar` each round's count of large-star groups that are
+    * neither a leaf nor a centre, in order. [[run]] reads all three off
+    * the round's own plan, so reporting them runs no job. Both are
+    * empty when no star round ran (the driver union-find path).
     */
   final case class CCResult(assignments: DataFrame, converged: Boolean, iterations: Int,
-                            rounds: Seq[(Long, Long)] = Nil)
-
-  /** The reference's stop rule (ConnectedComponent.scala:247-249): both
-    * change counts repeat the previous round's, or both are zero. With
-    * no previous round only the zero case can fire — the reference seeds
-    * `prev` with a 9999999 sentinel instead, so a first round whose
-    * counts both happened to equal it "converged" after one round.
-    */
-  private[cc] def stopRule(prev: Option[(Long, Long)],
-                           large: Long, small: Long): Boolean =
-    prev.contains((large, small)) || (large == 0 && small == 0)
+                            rounds: Seq[(Long, Long)] = Nil, nonStar: Seq[Long] = Nil)
 
   /** The RDD behind a checkpointed Dataset (its analyzed plan is a
     * LogicalRDD leaf), so superseded round checkpoints can be freed
@@ -58,7 +64,7 @@ object ConnectedComponents {
     * (measured: the 10⁸-node giant-component probe filled ~90 GB of
     * scratch in 4 rounds before this fix; SCALE.md "giant component").
     */
-  private def checkpointRdd(ds: DataFrame): Option[RDD[_]] =
+  private def checkpointRdd(ds: DataFrame): Option[RDD[InternalRow]] =
     ds.queryExecution.analyzed match {
       case l: LogicalRDD => Some(l.rdd)
       case _             => None
@@ -84,48 +90,70 @@ object ConnectedComponents {
     }
   }
 
+  /** [[run]]'s round, planned once: [[StarOps.round]] over a
+    * `LogicalRDD` leaf of `input`'s schema. The returned function
+    * prepares that plan, without AQE, over one round's input rows.
+    */
+  private[cc] def plannedRound(input: DataFrame): RDD[InternalRow] => SparkPlan = {
+    val spark = input.sparkSession
+    val template = StarOps.round(spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+      input.schema)).queryExecution.sparkPlan
+    rows => graftsql.prepareOver(spark, template, rows)
+  }
+
   /** @param edges DataFrame with integral columns `src`, `dst` (any
     *              orientation, duplicates/self-loops fine)
     *
-    * Each round is one Spark action: [[StarOps.smallStar]]'s eager
-    * checkpoint runs the large star, the small star and both change
-    * counts (Observations on that same action), so the round's pairs
-    * are materialized when the round ends and the previous round's
-    * checkpoint, its input, is freed at once. At most two rounds'
-    * pairs are ever stored. With `reliableCheckpoint` each round copies
-    * its pairs to the checkpoint dir (one more job) and frees the local
-    * copy.
+    * The round (large star, then small star) is planned once per call
+    * ([[plannedRound]]). Each round swaps the plan's leaf for the last
+    * round's checkpoint (round 1 reads the cast input) and runs as ONE
+    * job of three stages: an eager local checkpoint of the plan's
+    * output, after which both stars' sums are read off the plan's own
+    * `observe` metrics. The previous round's checkpoint, its input, is
+    * then freed at once, so at most two rounds' pairs are ever stored.
+    * With `reliableCheckpoint` each round copies its pairs to the
+    * checkpoint dir (one more job) and frees the local copy.
+    *
+    * The loop stops after the first round whose large star saw no
+    * non-star group: that round's input was a star forest centred on
+    * the component minima, so its output is the final labelling.
     */
   def run(edges: DataFrame, maxIterations: Int = 20,
           reliableCheckpoint: Boolean = false): CCResult = {
-    var pairs = edges.select(
+    val spark = edges.sparkSession
+    val input = edges.select(
       col("src").cast("bigint").as("src"),
       col("dst").cast("bigint").as("dst"))
+    val prepare = plannedRound(input)
+    var pairs = input
     var rounds = Vector.empty[(Long, Long)]
-    var converged = false
+    var nonStar = Vector.empty[Long]
     // The checkpoint of the last round's pairs; never the caller's edges.
-    var prev: Option[RDD[_]] = None
-    while (!converged && rounds.size < maxIterations) {
-      val ls = StarOps.largeStarLazy(pairs)
-      val ss = StarOps.smallStar(ls.pairs)
+    var prev: Option[RDD[InternalRow]] = None
+    while (!nonStar.lastOption.contains(0L) && rounds.size < maxIterations) {
+      val plan = prepare(prev.getOrElse(input.queryExecution.toRdd))
+      val local = graftsql.outputOf(spark, plan)
+        .localCheckpoint(eager = true, StorageLevel.MEMORY_AND_DISK_SER)
       val next =
         if (reliableCheckpoint) {
-          val files = ss.pairs.checkpoint(eager = true)
-          checkpointRdd(ss.pairs).foreach(_.unpersist(false))
+          val files = local.checkpoint(eager = true)
+          checkpointRdd(local).foreach(_.unpersist(false))
           files
-        } else ss.pairs
+        } else local
       // This round's pairs are materialized, so nothing reads the last
       // round's again; free its blocks (and, on the reliable branch,
       // files) now instead of waiting for a driver GC to let the
       // ContextCleaner find them.
       prev.foreach(freeCheckpoint(_, reliableCheckpoint))
       prev = checkpointRdd(next)
-      val (large, small) = (ls.changeCount(), ss.changeCount)
-      converged = stopRule(rounds.lastOption, large, small)
-      rounds :+= ((large, small))
+      val sums = graftsql.collectedMetrics(plan)
+      val (large, small) = (sums(StarOps.LargeCounts), sums(StarOps.SmallCounts))
+      rounds :+= ((large.getLong(0), small.getLong(0)))
+      nonStar :+= large.getLong(1)
       pairs = next
     }
-    CCResult(pairs.toDF("node", "component"), converged, rounds.size, rounds)
+    CCResult(pairs.toDF("node", "component"), nonStar.lastOption.contains(0L),
+      rounds.size, rounds, nonStar)
   }
 
   /** Input-partition count for the distributed fixpoint given the edge
@@ -169,7 +197,7 @@ object ConnectedComponents {
     * or below `smallGraphThreshold` solve with a driver-side union-find
     * (one collect, exact same min-labels), otherwise run the
     * distributed alternating fixpoint. Rationale: a fixpoint iteration
-    * costs 2 shuffles and 1 action (3 jobs under AQE) of fixed latency,
+    * costs 2 shuffles and 1 job of fixed latency,
     * so a converged 6-round run on a few thousand edges spends a second
     * or more of pure scheduling — while a sub-million-edge graph
     * union-finds in milliseconds in the driver (exactly the regime where AQE would
@@ -314,7 +342,7 @@ object ConnectedComponents {
     val labels = scanned.where(col("label"))
       .join(inner.assignments.toDF("m", "component"), Seq("m"), "left")
       .select(col("id").as("node"), coalesce(col("component"), col("m")).as("component"))
-    CCResult(labels, inner.converged, inner.iterations, inner.rounds)
+    CCResult(labels, inner.converged, inner.iterations, inner.rounds, inner.nonStar)
   }
 
   /** [[runContracted]]'s phase 2 over its `(node, rep)` rows, run by

@@ -64,11 +64,25 @@ import org.apache.spark.storage.StorageLevel
   *   smallStar: m = min(nbrs) ∈ nbrs always, so count =
   *     |nbrs \ {m, self}| = |nbrs| − |{m, self} ∩ nbrs|.
   *
-  * Each group's count rides on its `(self, m)` row and is summed by an
-  * `Observation` on the action that runs the star's plan — no extra
-  * job. [[smallStar]] runs that action itself: one eager
+  * Non-star flag (large star only): with `below` the number of
+  * distinct neighbours smaller than `self`, a group is a *leaf* when
+  * `below = 1` and `kept = 0`, a *centre* when `below = 0`, and
+  * *non-star* otherwise. When no group is non-star, the star's input is
+  * a star forest centred on the component minima, the certificate
+  * [[ConnectedComponents.run]] stops on (its scaladoc has the argument).
+  *
+  * Each group's count and flag ride on its `(self, m)` row and are
+  * summed by an `observe` on the action that runs the star's plan — no
+  * extra job. [[largeStarLazy]] and [[smallStar]] sum into
+  * `Observation`s, and [[smallStar]] runs that action itself: one eager
   * `localCheckpoint` of its pairs, which also runs the large star that
-  * feeds it and so fills both counts.
+  * feeds it and so fills both counts. [[ConnectedComponents.run]]
+  * instead plans [[round]] (the same two stars, with named `observe`s)
+  * once per call and prepares it without AQE: each star fixes its
+  * partition count and the round has no join or aggregate, so AQE has
+  * nothing to adapt, yet it splits a round into three jobs (each
+  * shuffle's map stage, then the checkpoint) with idle scheduling gaps
+  * between them.
   *
   * The emitted multiset equals the min-join form's and the reference's:
   * per group, each pair once; across groups, the same duplicates (each
@@ -84,27 +98,32 @@ object StarOps {
   final case class StarResult(pairs: DataFrame, changeCount: Long,
                               handles: Seq[DataFrame])
 
-  /** Large star: `pairs` is lazy, and `changeCount()` is observed on the
-    * first action over them (in the CC loop: the small star's
-    * checkpoint). Reading it before any such action throws.
-    * `handles` is always empty.
+  /** Large star: `pairs` is lazy, and `changeCount()` and `nonStar()`
+    * (the number of non-star groups) are observed on the first action
+    * over them (chained as in a round: the small star's checkpoint).
+    * Reading either before any such action throws. `handles` is always
+    * empty.
     */
   final case class LazyStarResult(pairs: DataFrame, changeCount: () => Long,
-                                  handles: Seq[DataFrame])
+                                  nonStar: () => Long, handles: Seq[DataFrame])
 
   /** One input row of a star's group scan. */
   private[cc] final case class Arc(self: Long, nbr: Long)
 
-  /** One emitted pair; `cnt` is the group's change count on its
-    * `(self, m)` row and 0 on every other row.
+  /** One emitted pair. On a group's `(self, m)` row, `cnt` is the
+    * group's change count and `nonStar` its non-star flag (large star
+    * only); both are 0 on every other row.
     */
-  private[cc] final case class Emit(src: Long, dst: Long, cnt: Long)
+  private[cc] final case class Emit(src: Long, dst: Long, cnt: Long, nonStar: Long)
 
   /** Streams one star over rows sorted by (self, nbr) within the
     * partition, all rows of a key in one partition. Per group: m from
     * the first row, a duplicate nbr is skipped (it equals the previous
     * row's), each kept nbr n emits (n, m), and the group's end emits
-    * (self, m) with the group's count.
+    * (self, m) with the group's count and, in the large star, its
+    * non-star flag: 1 unless the group is a leaf (exactly one distinct
+    * neighbour other than itself, and that one smaller) or a centre (no
+    * smaller neighbour).
     */
   private final class Scan(rows: Iterator[Arc], large: Boolean)
       extends Iterator[Emit] {
@@ -112,6 +131,7 @@ object StarOps {
     private var open = false
     private var self, mn, m, last = 0L
     private var kept = 0L // large: distinct nbrs > self; small: distinct nbrs
+    private var below = 0L // distinct nbrs < self
     private var loop = false
     private var out: Emit = null
 
@@ -134,6 +154,7 @@ object StarOps {
         mn = a.nbr
         m = if (large) math.min(self, mn) else mn
         kept = 0L
+        below = 0L
         loop = false
         open = true
         visit(mn)
@@ -146,33 +167,41 @@ object StarOps {
           if (large) 1L + kept - (if (mn < self || loop) 1L else 0L)
           else if (mn == self) 0L
           else kept - (if (loop) 2L else 1L)
-        out = Emit(self, m, cnt)
+        val nonStar = large && (below >= 2 || below == 1 && kept > 0)
+        out = Emit(self, m, cnt, if (nonStar) 1L else 0L)
       }
 
     private def visit(n: Long): Unit = {
       last = n
       if (n == self) loop = true
+      if (n < self) below += 1
       if (large) {
-        if (n > self) { kept += 1; out = Emit(n, m, 0L) }
+        if (n > self) { kept += 1; out = Emit(n, m, 0L, 0L) }
       } else {
         kept += 1
-        if (n != m && n != self) out = Emit(n, m, 0L)
+        if (n != m && n != self) out = Emit(n, m, 0L, 0L)
       }
     }
   }
 
   /** The star over (self, nbr) rows: one exchange on `self`, a sort
-    * within partitions, one scan; the per-group counts are summed into
-    * `obs` on the action that runs it.
+    * within partitions, one scan. The action that runs it sums the
+    * per-group counts (and, for the large star, the non-star flags)
+    * into `counts`: an `Observation`, or the metrics of a named
+    * `observe` that [[ConnectedComponents.run]] reads off its own plan.
     */
-  private def star(rows: DataFrame, large: Boolean, obs: Observation): DataFrame = {
+  private def star(rows: DataFrame, large: Boolean,
+                   counts: Either[Observation, String]): DataFrame = {
     val parts = rows.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    rows.repartition(parts, col("self"))
+    val scanned = rows.repartition(parts, col("self"))
       .sortWithinPartitions("self", "nbr")
       .as(Encoders.product[Arc])
       .mapPartitions((it: Iterator[Arc]) => new Scan(it, large): Iterator[Emit])(
         Encoders.product[Emit])
-      .observe(obs, coalesce(sum("cnt"), lit(0L)).as("cnt"))
+    val sums = coalesce(sum("cnt"), lit(0L)).as("cnt") +:
+      (if (large) Seq(coalesce(sum("nonStar"), lit(0L)).as("nonStar")) else Nil)
+    counts.fold(scanned.observe(_, sums.head, sums.tail: _*),
+                scanned.observe(_, sums.head, sums.tail: _*))
       .select("src", "dst")
   }
 
@@ -184,11 +213,11 @@ object StarOps {
     */
   private val DeliveryWait: Duration = 5.seconds
 
-  /** The observed sum of a star's counts. An action over an empty input
-    * may plan the star away; its observation is then an empty row, and
-    * the count is 0.
+  /** The observed sum `i` of a star (0: changes, 1: non-star groups).
+    * An action over an empty input may plan the star away; its
+    * observation is then an empty row, and the sum is 0.
     */
-  private def observedCount(obs: Observation, wait: Duration): Long = {
+  private def observedCount(obs: Observation, wait: Duration, i: Int): Long = {
     val row =
       try Await.result(obs.future, wait)
       catch {
@@ -196,7 +225,7 @@ object StarOps {
           "star change count read before any action ran over the star's " +
           "pairs: the count is observed on that action")
       }
-    if (row.length == 0) 0L else row.getLong(0)
+    if (row.length == 0) 0L else row.getLong(i)
   }
 
   /** Symmetrized (self, nbr) rows — self-loops once, everything else in
@@ -211,10 +240,16 @@ object StarOps {
         struct(col("dst").as("self"), col("src").as("nbr"))))
     ).as("e")).select(col("e.self").as("self"), col("e.nbr").as("nbr"))
 
+  /** Small-star input rows: each pair oriented (max, min). */
+  private def orient(nodePairs: DataFrame): DataFrame =
+    nodePairs.select(
+      greatest(col("src"), col("dst")).as("self"),
+      least(col("src"), col("dst")).as("nbr"))
+
   def largeStarLazy(nodePairs: DataFrame): LazyStarResult = {
     val obs = Observation()
-    LazyStarResult(star(symmetrize(nodePairs), large = true, obs),
-      () => observedCount(obs, DeliveryWait), Nil)
+    LazyStarResult(star(symmetrize(nodePairs), large = true, Left(obs)),
+      () => observedCount(obs, DeliveryWait, 0), () => observedCount(obs, DeliveryWait, 1), Nil)
   }
 
   /** Runs the round's one action: an eager local checkpoint of the small
@@ -223,15 +258,28 @@ object StarOps {
     */
   def smallStar(nodePairs: DataFrame): StarResult = {
     val obs = Observation()
-    val oriented = nodePairs.select(
-      greatest(col("src"), col("dst")).as("self"),
-      least(col("src"), col("dst")).as("nbr"))
     // MEMORY_AND_DISK_SER: rows are read back at most once next round,
     // and serialized UnsafeRow blocks cost ~25 B/row where the default
     // deserialized level costs ~85 B in memory and ~10× that
     // Java-serialized on disk spill (measured on the giant probe).
-    val pairs = star(oriented, large = false, obs)
+    val pairs = star(orient(nodePairs), large = false, Left(obs))
       .localCheckpoint(eager = true, StorageLevel.MEMORY_AND_DISK_SER)
-    StarResult(pairs, observedCount(obs, Duration.Inf), Nil)
+    StarResult(pairs, observedCount(obs, Duration.Inf, 0), Nil)
   }
+
+  /** Metric names of [[round]]'s two `observe`s. [[LargeCounts]] holds
+    * the large star's change count and non-star group count,
+    * [[SmallCounts]] the small star's change count.
+    */
+  private[cc] val LargeCounts = "graft_cc_large_star"
+  private[cc] val SmallCounts = "graft_cc_small_star"
+
+  /** One fixpoint round as one lazy plan: the large star over
+    * `nodePairs`, then the small star over its pairs, each star's sums
+    * under a named `observe`. [[ConnectedComponents.run]] plans it once
+    * and runs it as one job per round.
+    */
+  private[cc] def round(nodePairs: DataFrame): DataFrame =
+    star(orient(star(symmetrize(nodePairs), large = true, Right(LargeCounts))),
+      large = false, Right(SmallCounts))
 }

@@ -1,5 +1,7 @@
 package org.apache.spark.sql
 
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Bridge between graft's custom Catalyst expressions and the public
@@ -19,6 +21,33 @@ object graftsql {
   def ofRows(spark: SparkSession,
              plan: catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** `template`, a plan as the planner built it (`sparkPlan`, before
+    * any preparation rule), with its one existing-RDD scan reading
+    * `rows` instead, prepared for execution by the non-adaptive rule set
+    * (`QueryExecution.prepareExecutedPlan`): the plan runs as planned,
+    * with no AQE stage split. Each call copies every node above the
+    * scan, so each prepared plan owns fresh shuffles and fresh
+    * `observe` accumulators.
+    */
+  def prepareOver(spark: SparkSession, template: execution.SparkPlan,
+                  rows: RDD[InternalRow]): execution.SparkPlan =
+    execution.QueryExecution.prepareExecutedPlan(spark.asInstanceOf[classic.SparkSession],
+      template.transform { case s: execution.RDDScanExec => s.copy(rdd = rows) })
+
+  /** A prepared plan's output as a DataFrame over a `LogicalRDD` leaf.
+    * The plan's RDD is built here but runs no job: the first action
+    * over the DataFrame runs the whole plan as that action's job.
+    */
+  def outputOf(spark: SparkSession, plan: execution.SparkPlan): DataFrame =
+    ofRows(spark, execution.LogicalRDD(plan.output, plan.execute())(
+      spark.asInstanceOf[classic.SparkSession]))
+
+  /** Each named `observe` of `plan` and the metrics its last run
+    * collected (a plan that never ran reads its metrics' empty values).
+    */
+  def collectedMetrics(plan: execution.SparkPlan): Map[String, Row] =
+    plan.collect { case c: execution.CollectMetricsExec => c.name -> c.collectedMetrics }.toMap
 
   /** Decode a `.asc`/`.desc` sort Column into (child column,
     * descending?, nullsLast?); None for a plain non-sort Column. The

@@ -73,16 +73,39 @@ class CCPropertySpec extends SparkSpec {
     oracleStar(edges.map { case (a, b) => (math.max(a, b), math.min(a, b)) },
       (self, m, nbrs) => nbrs.filter(n => n != m && n != self) + self)
 
+  /** Large-star groups that are neither a leaf (exactly one distinct
+    * neighbour other than itself, and that one smaller) nor a centre
+    * (no smaller neighbour).
+    */
+  private def oracleNonStar(edges: Seq[(Long, Long)]): Long =
+    edges.flatMap { case (a, b) => Seq(a -> b, b -> a) }.groupBy(_._1).count { case (v, g) =>
+      val nbrs = g.map(_._2).toSet - v
+      val below = nbrs.count(_ < v)
+      !(below == 0 || below == 1 && nbrs.size == 1)
+    }.toLong
+
   test("each star's pairs and change count equal the reference HashSet star") {
     val s = spark
     import s.implicits._
     val rnd = new scala.util.Random(2718)
     val graphs = Nil :: List.tabulate(6)(t => multigraph(rnd, 5 + rnd.nextInt(40 + 30 * t), 4 + 6 * t))
-    for ((edges, trial) <- graphs.zipWithIndex) {
+    // built inputs for the non-star count: min-centred star forests,
+    // without and with self-loops (0); a star centred above its minimum
+    // and a 3-node path (> 0)
+    val forest = List((5L, 1L), (1L, 9L), (3L, 1L), (0L, -7L), (-7L, 4L), (Long.MaxValue, Long.MinValue))
+    val built = List(
+      forest -> true,
+      (forest ++ List((1L, 1L), (9L, 9L), (-7L, -7L), (100L, 100L))) -> true,
+      List((5L, 2L), (5L, 8L), (9L, 5L)) -> false,
+      List((1L, 2L), (2L, 3L)) -> false)
+    for ((edges, star) <- built)
+      assert((oracleNonStar(edges) == 0L) === star, edges)
+    for ((edges, trial) <- (graphs ++ built.map(_._1)).zipWithIndex) {
       val df = edges.toDF("src", "dst")
       val large = StarOps.largeStarLazy(df)
       val got = large.pairs.as[(Long, Long)].collect().toSeq.sorted
       assert((got, large.changeCount()) === oracleLarge(edges), s"large star, trial $trial")
+      assert(large.nonStar() === oracleNonStar(edges), s"non-star groups, trial $trial")
       val small = StarOps.smallStar(df)
       assert((small.pairs.as[(Long, Long)].collect().toSeq.sorted, small.changeCount) ===
         oracleSmall(edges), s"small star, trial $trial")
@@ -92,6 +115,7 @@ class CCPropertySpec extends SparkSpec {
       val next = StarOps.smallStar(chained.pairs)
       val (largePairs, largeCount) = oracleLarge(edges)
       assert(chained.changeCount() === largeCount, s"chained large star, trial $trial")
+      assert(chained.nonStar() === oracleNonStar(edges), s"chained non-star groups, trial $trial")
       assert((next.pairs.as[(Long, Long)].collect().toSeq.sorted, next.changeCount) ===
         oracleSmall(largePairs), s"chained small star, trial $trial")
     }
@@ -105,9 +129,11 @@ class CCPropertySpec extends SparkSpec {
       (1000L until 1063L).map(i => (i, i + 1))
     val res = ConnectedComponents.run(edges.toDF("src", "dst"))
     assert(res.converged)
-    // the vector the min-join star form (three shuffles per star) printed
+    // the vector the min-join star form (three shuffles per star)
+    // printed, up to the first round whose input was a star forest
     assert(res.rounds === Seq((372L, 276L), (349L, 216L), (302L, 182L), (340L, 190L),
-      (348L, 150L), (274L, 31L), (181L, 0L), (181L, 0L)))
+      (348L, 150L), (274L, 31L), (181L, 0L)))
+    assert(res.nonStar === Seq(159L, 96L, 66L, 59L, 55L, 47L, 0L))
     assert(res.assignments.as[(Long, Long)].collect().toMap === unionFind(edges))
   }
 

@@ -6,7 +6,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import graft.SparkSpec
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
 import org.apache.spark.sql.execution.aggregate.HashAggregateExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -126,6 +126,15 @@ class ConnectedComponentsSpec extends SparkSpec {
       assert(helper.collect(plan) { case a: HashAggregateExec => a }.isEmpty, text)
       assert(helper.collect(plan) { case e: ShuffleExchangeExec => e }.size === stars, text)
     }
+    // run's rounds execute the planned round, not smallStar's action:
+    // the same two stars, prepared without AQE
+    val plan = ConnectedComponents.plannedRound(edges)(edges.queryExecution.toRdd)
+    val text = plan.toString
+    assert(!text.contains("collect_set"), text)
+    assert(!text.contains("ObjectHashAggregate"), text)
+    assert(plan.collect { case a: HashAggregateExec => a }.isEmpty, text)
+    assert(plan.collect { case e: ShuffleExchangeExec => e }.size === 2, text)
+    assert(plan.collect { case a: AdaptiveSparkPlanExec => a }.isEmpty, text)
   }
 
   test("a large-star change count read before any action over its pairs " +
@@ -210,8 +219,10 @@ class ConnectedComponentsSpec extends SparkSpec {
       // depth-16 path: multiple rounds, so mid-run checkpoints exercise
       // the supersede-and-free discipline on the reliable branch too
       val edges = edgesDf((0L until 15L).map(i => (i, i + 1)))
-      val rel = ConnectedComponents.run(edges, reliableCheckpoint = true)
+      val (rel, jobs) = countingJobs(ConnectedComponents.run(edges, reliableCheckpoint = true))
       assert(rel.converged)
+      // the round's job plus one job copying its pairs to the files
+      assert(jobs === 2 * rel.iterations, s"$jobs jobs for ${rel.iterations} rounds")
       val loc = ConnectedComponents.run(edges)
       assert(rel.assignments.as[(Long, Long)].collect().toSet ===
              loc.assignments.as[(Long, Long)].collect().toSet)
@@ -254,23 +265,14 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(!non.converged && non.iterations === 0)
   }
 
-  test("stop rule: a first round converges only on zero change counts") {
-    // the reference seeds prev with 9999999; counts that size are normal
-    // at scale and must not stop the first round
-    assert(!ConnectedComponents.stopRule(None, 9999999L, 9999999L))
-    assert(ConnectedComponents.stopRule(None, 0L, 0L))
-    assert(ConnectedComponents.stopRule(Some((9999999L, 9999999L)), 9999999L, 9999999L))
-    assert(!ConnectedComponents.stopRule(Some((5L, 3L)), 5L, 4L))
-  }
-
-  test("rounds: one (large, small) entry per round; the stop rule fires only on the last") {
+  test("rounds: one (large, small) and one non-star entry per round; only " +
+       "the last round saw a star forest") {
     val res = ConnectedComponents.run(edgesDf((0L until 199L).map(i => (i, i + 1))))
     assert(res.converged && res.iterations >= 2)
     assert(res.rounds.size === res.iterations)
-    val prevs = None +: res.rounds.init.map(Some(_))
-    val fired = prevs.zip(res.rounds).map { case (p, (l, sm)) =>
-      ConnectedComponents.stopRule(p, l, sm) }
-    assert(fired === Seq.fill(res.iterations - 1)(false) :+ true)
+    assert(res.nonStar.size === res.iterations)
+    assert(res.nonStar.last === 0L)
+    assert(res.nonStar.init.forall(_ > 0L), res.nonStar)
   }
 
   /** Runs `body` and counts the Spark jobs it starts. */
@@ -300,12 +302,12 @@ class ConnectedComponentsSpec extends SparkSpec {
     } finally sc.removeSparkListener(listener)
   }
 
-  test("a fixpoint round runs at most 4 jobs (one action; AQE adds one " +
-       "map-stage job per star shuffle)") {
+  test("exactly one job per fixpoint round (the planned round runs without " +
+       "AQE's map-stage jobs)") {
     val (res, jobs) = countingJobs(
       ConnectedComponents.run(edgesDf((0L until 199L).map(i => (i, i + 1)))))
-    assert(res.converged && res.iterations === 10)
-    assert(jobs <= 4 * res.iterations, s"$jobs jobs for ${res.iterations} rounds")
+    assert(res.converged && res.iterations === 9)
+    assert(jobs === res.iterations, s"$jobs jobs for ${res.iterations} rounds")
   }
 
   test("runContracted plus a noop sink runs at most 6 jobs; its scan keeps " +
