@@ -1,7 +1,9 @@
 package graft.cc
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Dataset, Row, graftsql}
+import scala.concurrent.duration.Duration
+
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, Row, graftsql}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan}
 import org.apache.spark.sql.functions._
@@ -46,14 +48,17 @@ import org.apache.spark.storage.StorageLevel
   */
 object ConnectedComponents {
 
-  /** `rounds` holds each fixpoint round's (large, small) change counts
-    * and `nonStar` each round's count of large-star groups that are
-    * neither a leaf nor a centre, in order. [[run]] reads all three off
-    * the round's own plan, so reporting them runs no job. Both are
-    * empty when no star round ran (the driver union-find path).
+  /** `path` names the branch that ran: `fixpoint` for [[run]],
+    * `driver` or `fixpoint` for [[runAuto]], and `contracted`,
+    * `contracted+driver` or `contracted+fixpoint` for [[runContracted]]. `rounds` holds each fixpoint round's (large,
+    * small) change counts and `nonStar` each round's count of
+    * large-star groups that are neither a leaf nor a centre, in order.
+    * [[run]] reads all three off the round's own plan, so reporting
+    * them runs no job. Both are empty when no star round ran.
     */
-  final case class CCResult(assignments: DataFrame, converged: Boolean, iterations: Int,
-                            rounds: Seq[(Long, Long)] = Nil, nonStar: Seq[Long] = Nil)
+  final case class CCResult(assignments: DataFrame, path: String, converged: Boolean,
+                            iterations: Int, rounds: Seq[(Long, Long)] = Nil,
+                            nonStar: Seq[Long] = Nil)
 
   /** The RDD behind a checkpointed Dataset (its analyzed plan is a
     * LogicalRDD leaf), so superseded round checkpoints can be freed
@@ -152,7 +157,7 @@ object ConnectedComponents {
       nonStar :+= large.getLong(1)
       pairs = next
     }
-    CCResult(pairs.toDF("node", "component"), nonStar.lastOption.contains(0L),
+    CCResult(pairs.toDF("node", "component"), "fixpoint", nonStar.lastOption.contains(0L),
       rounds.size, rounds, nonStar)
   }
 
@@ -212,8 +217,9 @@ object ConnectedComponents {
     * default, dominated by the collect, and raise the threshold only
     * with a matching driver-memory setting.
     *
-    * `iterations` is 0 on the driver path; `converged` is always true
-    * there (union-find is exact).
+    * `path` is `driver` on the driver path, where `iterations` is 0 and
+    * `converged` is always true (union-find is exact), and `fixpoint`
+    * on the distributed one.
     */
   def runAuto(edges: DataFrame, maxIterations: Int = 20,
               smallGraphThreshold: Long = 4L << 20): CCResult = {
@@ -262,12 +268,11 @@ object ConnectedComponents {
       e.as[(Long, Long)].collect().foreach { case (a, b) => uf.union(a, b) }
       CCResult(spark.createDataset(uf.iterator.toIndexedSeq)
                  .toDF("node", "component"),
-               converged = true, iterations = 0)
+               "driver", converged = true, iterations = 0)
     }
   }
 
-  /** Two-phase CC — the 100 TB front door over [[run]] WHEN the input
-    * layout cooperates (see the measured caveat below).
+  /** Two-phase CC — contract first, then solve only what is left.
     *
     * Phase 1 contracts the graph with a partition-local union-find: one
     * `mapPartitions` pass, zero shuffles. Each task union-finds the
@@ -284,13 +289,16 @@ object ConnectedComponents {
     * node's first row gives its min rep m and emits its label row
     * `(node, m)`; each other distinct rep r emits the rep-clique star
     * edge `(r, m)`. Both kinds of row land in one eager local
-    * checkpoint, the contraction's only action. The rep graph —
-    * O(tasks x components-per-task) nodes, typically orders of
-    * magnitude smaller than the input — is solved by [[runAuto]]:
-    * driver union-find when tiny, otherwise the alternating fixpoint,
-    * so the reference convergence contract still governs the pairs
-    * that remain. Phase 3 left-joins the label rows to the rep labels
-    * on m and keeps m where the rep graph has no label for it.
+    * checkpoint, the contraction's only action, and an `Observation` on
+    * that action counts the star-edge rows, k (no extra job).
+    *
+    * Phase 3: when k = 0 every component was task-local, and the label
+    * rows are the result (`path` `contracted`): no inner solve, no
+    * join. Otherwise [[runAuto]] solves the rep graph — O(tasks x
+    * components-per-task) nodes, typically orders of magnitude smaller
+    * than the input — and `path` is `contracted+` its path (`driver` or
+    * `fixpoint`). The label rows left-join its labels on m and keep m
+    * where the rep graph has no label for it.
     *
     * Exactness: rep(n) <= n and rep(n) is connected to n, so a
     * component's minimum rep IS its minimum node (the global min node
@@ -313,21 +321,22 @@ object ConnectedComponents {
     * stages into one task.
     *
     * `iterations` and `rounds` report the inner solve's fixpoint rounds
-    * (0 and empty on the driver path); `converged` is the inner solve's
-    * flag.
+    * (0 and empty on the driver path and when k = 0); `converged` is the
+    * inner solve's flag.
     *
-    * Measured caveat (CCScaleProbe, SCALE.md round 4): contraction is a
-    * data-LAYOUT bet. Edges grouped by origin (per-order clique
-    * expansion, per-block generation) contract ~300:1 and the inner
-    * solve converges in one round; edges scattered round-robin contract
-    * only ~1.3:1, and the plain [[run]] fixpoint is as fast or faster
-    * up to ~100M edges. Both paths are label-exact under any
-    * partitioning, so the choice is pure performance.
+    * Measured (CCScaleProbe, 4 threads, 4 GB heap; SCALE.md "One CC
+    * front door"): on 19.2 M round-robin edges, contracting first cut
+    * the fixpoint's input 6:1 but not its 3 rounds, and ran 77.6–85.1 s
+    * against plain [[run]]'s 67.5–85.3 s; on a range-partitioned
+    * 10⁷-node tree it ran 43.5 s against 169.9 s. Small graphs still go
+    * to [[runAuto]] directly: its driver path returns a local relation,
+    * which later joins broadcast.
     */
   def runContracted(edges: DataFrame, maxIterations: Int = 20,
                     smallGraphThreshold: Long = 4L << 20): CCResult = {
     val spark = edges.sparkSession
     import spark.implicits._
+    val starEdges = Observation()
     val scanned = contract(edges.select(
         col("src").cast("bigint"), col("dst").cast("bigint"))
       .as[(Long, Long)]
@@ -336,18 +345,26 @@ object ConnectedComponents {
         it.foreach { case (a, b) => uf.union(a, b) }
         uf.iterator.map { case (n, r) => NodeRep(n, r) }
       })
-    val inner = runAuto(
-      scanned.where(!col("label")).select(col("id").as("src"), col("m").as("dst")),
-      maxIterations, smallGraphThreshold)
+      .observe(starEdges, count(when(!col("label"), 1)))
+      // MEMORY_AND_DISK_SER as in StarOps: each row is read once more
+      .localCheckpoint(eager = true, StorageLevel.MEMORY_AND_DISK_SER)
+    val k = StarOps.observedCount(starEdges, Duration.Inf, 0)
     val labels = scanned.where(col("label"))
-      .join(inner.assignments.toDF("m", "component"), Seq("m"), "left")
-      .select(col("id").as("node"), coalesce(col("component"), col("m")).as("component"))
-    CCResult(labels, inner.converged, inner.iterations, inner.rounds, inner.nonStar)
+    if (k == 0)
+      CCResult(labels.select(col("id").as("node"), col("m").as("component")),
+        "contracted", converged = true, iterations = 0)
+    else {
+      val inner = runAuto(
+        scanned.where(!col("label")).select(col("id").as("src"), col("m").as("dst")),
+        maxIterations, smallGraphThreshold)
+      inner.copy(path = s"contracted+${inner.path}", assignments = labels
+        .join(inner.assignments.toDF("m", "component"), Seq("m"), "left")
+        .select(col("id").as("node"), coalesce(col("component"), col("m")).as("component")))
+    }
   }
 
-  /** [[runContracted]]'s phase 2 over its `(node, rep)` rows, run by
-    * its one action. MEMORY_AND_DISK_SER as in [[StarOps]]: each row is
-    * read once more.
+  /** [[runContracted]]'s phase 2 over its `(node, rep)` rows, lazy:
+    * [[runContracted]] runs it as its one action.
     */
   private[cc] def contract(mapping: Dataset[NodeRep]): Dataset[Contracted] = {
     val spark = mapping.sparkSession
@@ -355,7 +372,6 @@ object ConnectedComponents {
     mapping.repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt, col("node"))
       .sortWithinPartitions("node", "rep")
       .mapPartitions((it: Iterator[NodeRep]) => new ContractScan(it): Iterator[Contracted])
-      .localCheckpoint(eager = true, StorageLevel.MEMORY_AND_DISK_SER)
   }
 
   /** One phase-1 row of [[runContracted]]: a node and its task-local rep. */

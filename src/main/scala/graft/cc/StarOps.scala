@@ -213,17 +213,18 @@ object StarOps {
     */
   private val DeliveryWait: Duration = 5.seconds
 
-  /** The observed sum `i` of a star (0: changes, 1: non-star groups).
-    * An action over an empty input may plan the star away; its
+  /** The observed sum `i` of a star (0: changes, 1: non-star groups),
+    * or of [[ConnectedComponents.runContracted]]'s star-edge count.
+    * An action over an empty input may plan the observed rows away; its
     * observation is then an empty row, and the sum is 0.
     */
-  private def observedCount(obs: Observation, wait: Duration, i: Int): Long = {
+  private[cc] def observedCount(obs: Observation, wait: Duration, i: Int): Long = {
     val row =
       try Await.result(obs.future, wait)
       catch {
         case _: TimeoutException => throw new IllegalStateException(
-          "star change count read before any action ran over the star's " +
-          "pairs: the count is observed on that action")
+          "observed count read before any action ran over the observed " +
+          "rows: the count is observed on that action")
       }
     if (row.length == 0) 0L else row.getLong(i)
   }

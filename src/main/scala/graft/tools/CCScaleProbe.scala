@@ -10,9 +10,10 @@ import graft.cc.{CliqueGen, ConnectedComponents, EdgeBuilder, Tuning}
   * CliqueGen graph 10-100x the sf0.1 bench graph, runs BOTH
   * `runContracted` (the 100 TB path) and the plain alternating fixpoint
   * on the same edges, and validates labels against CliqueGen's ground
-  * truth. The `contracted`, `plain` and `giant` runs also print each
-  * fixpoint round's (large, small) change counts (`CCResult.rounds`)
-  * and non-star group counts (`CCResult.nonStar`).
+  * truth. The `contracted`, `plain` and `giant` runs also print the
+  * branch that ran (`CCResult.path`), each fixpoint round's (large,
+  * small) change counts (`CCResult.rounds`) and non-star group counts
+  * (`CCResult.nonStar`).
   *
   * Usage: runMain graft.tools.CCScaleProbe [nBlocks] [mode]
   * (nBlocks=1000 ~ 4M edges, 5000 ~ 20M, 25000 ~ 100M;
@@ -225,7 +226,7 @@ object CCScaleProbe {
         r
       }
       System.err.println(s"[probe] contracted: converged=${contracted.converged} " +
-        s"innerIterations=${contracted.iterations} rounds=${contracted.rounds} nonStar=${contracted.nonStar}")
+        s"innerIterations=${contracted.iterations} path=${contracted.path} rounds=${contracted.rounds} nonStar=${contracted.nonStar}")
       mismatches("contracted", contracted.assignments)
     }
 
@@ -239,7 +240,7 @@ object CCScaleProbe {
         r
       }
       System.err.println(s"[probe] plain: converged=${plain.converged} " +
-        s"iterations=${plain.iterations} rounds=${plain.rounds} nonStar=${plain.nonStar}")
+        s"iterations=${plain.iterations} path=${plain.path} rounds=${plain.rounds} nonStar=${plain.nonStar}")
       mismatches("plain", plain.assignments)
     }
     if (mode == "preview") {
@@ -355,7 +356,7 @@ object CCScaleProbe {
               smallGraphThreshold = 0)
             require(r.converged, "contracted inner solve did not converge")
             System.err.println(
-              s"[probe] giant contracted: innerIterations=${r.iterations} rounds=${r.rounds} nonStar=${r.nonStar}")
+              s"[probe] giant contracted: innerIterations=${r.iterations} path=${r.path} rounds=${r.rounds} nonStar=${r.nonStar}")
             r.assignments
           case "incremental" =>
             // The MAINTENANCE front door against a standing 10⁸-member
@@ -390,7 +391,7 @@ object CCScaleProbe {
             }
             require(r.converged, "mixed fixpoint did not converge")
             System.err.println(
-              s"[probe] giant mix: iterations=${r.iterations} rounds=${r.rounds} nonStar=${r.nonStar}")
+              s"[probe] giant mix: iterations=${r.iterations} path=${r.path} rounds=${r.rounds} nonStar=${r.nonStar}")
             r.assignments
           case "reliable" =>
             // VERDICT r12 #4: the configuration a real multi-hour
@@ -404,13 +405,13 @@ object CCScaleProbe {
             val r = ConnectedComponents.run(tree, reliableCheckpoint = true)
             require(r.converged, "reliable fixpoint did not converge")
             System.err.println(
-              s"[probe] giant reliable: iterations=${r.iterations} rounds=${r.rounds} nonStar=${r.nonStar}")
+              s"[probe] giant reliable: iterations=${r.iterations} path=${r.path} rounds=${r.rounds} nonStar=${r.nonStar}")
             r.assignments
           case "new" =>
             val r = ConnectedComponents.run(tree)
             require(r.converged, "fixpoint did not converge")
             System.err.println(
-              s"[probe] giant: iterations=${r.iterations} rounds=${r.rounds} nonStar=${r.nonStar}")
+              s"[probe] giant: iterations=${r.iterations} path=${r.path} rounds=${r.rounds} nonStar=${r.nonStar}")
             r.assignments
           case other => sys.error(s"unknown giant shape $other")
         }

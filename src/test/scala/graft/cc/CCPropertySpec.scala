@@ -225,12 +225,12 @@ class CCPropertySpec extends SparkSpec {
     val edges = randomEdges(rnd, 200, 80)
     val dist = runCC(edges)._1
     val auto = ConnectedComponents.runAuto(edges.toDF("src", "dst"))
-    assert(auto.converged && auto.iterations === 0) // small path taken
+    assert(auto.path === "driver" && auto.converged && auto.iterations === 0)
     assert(auto.assignments.as[(Long, Long)].collect().toMap === dist)
     // force the distributed path through runAuto too
     val big = ConnectedComponents.runAuto(edges.toDF("src", "dst"),
       smallGraphThreshold = 0)
-    assert(big.iterations > 0)
+    assert(big.path === "fixpoint" && big.iterations > 0)
     assert(big.assignments.as[(Long, Long)].collect().toMap === dist)
   }
 
@@ -244,7 +244,7 @@ class CCPropertySpec extends SparkSpec {
     val edges = List.fill(150000)(
       (rnd.nextInt(120000).toLong, rnd.nextInt(120000).toLong))
     val auto = ConnectedComponents.runAuto(edges.toDF("src", "dst"))
-    assert(auto.converged && auto.iterations === 0)
+    assert(auto.path === "driver" && auto.converged && auto.iterations === 0)
     assert(auto.assignments.as[(Long, Long)].collect().toMap === unionFind(edges))
   }
 
@@ -258,7 +258,7 @@ class CCPropertySpec extends SparkSpec {
     def labels(r: ConnectedComponents.CCResult) = r.assignments.as[(Long, Long)].collect().toMap
     assert(labels(ConnectedComponents.run(df, maxIterations = 50)) === oracle)
     val driver = ConnectedComponents.runAuto(df)
-    assert(driver.iterations === 0 && labels(driver) === oracle)
+    assert(driver.path === "driver" && labels(driver) === oracle)
     assert(labels(ConnectedComponents.runAuto(df, smallGraphThreshold = 0)) === oracle)
     assert(labels(ConnectedComponents.runContracted(df.repartition(3))) === oracle)
   }
@@ -290,7 +290,7 @@ class CCPropertySpec extends SparkSpec {
     val res = ConnectedComponents.runContracted(
       edges.toDF("src", "dst").repartition(8),
       maxIterations = 50, smallGraphThreshold = 0)
-    assert(res.converged && res.iterations > 0) // inner fixpoint ran
+    assert(res.converged && res.path === "contracted+fixpoint")
     assert(res.assignments.as[(Long, Long)].collect().toMap === unionFind(edges))
   }
 
@@ -358,9 +358,16 @@ class CCPropertySpec extends SparkSpec {
         smallGraphThreshold = threshold)
       val got = res.assignments.as[(Long, Long)].collect()
       assert(res.converged, s"threshold $threshold did not converge")
+      assert(res.path === (if (threshold == 0L) "contracted+fixpoint" else "contracted+driver"))
       assert(got.map(_._1).distinct.length === got.length, "a node labeled twice")
       assert(got.toMap === oracle, s"threshold $threshold")
     }
+    // the task-local components alone contract fully: no inner solve
+    val localOnly = spark.sparkContext.parallelize(0 until parts, parts)
+      .flatMap(p => local.filter(_._1 == p).flatMap(_._2)).toDF("src", "dst")
+    val res = ConnectedComponents.runContracted(localOnly)
+    assert(res.path === "contracted" && res.converged && res.iterations === 0)
+    assert(res.assignments.as[(Long, Long)].collect().toMap === unionFind(local.flatMap(_._2)))
   }
 
   test("agrees with GraphX connectedComponents (Pregel) on a fixed random graph") {
@@ -400,7 +407,9 @@ class CCPropertySpec extends SparkSpec {
       ConnectedComponents.runAuto(df, maxIterations, smallGraphThreshold = 0),
       ConnectedComponents.runContracted(df.repartition(4), maxIterations,
         smallGraphThreshold = 0))
-    for ((res, name) <- results.zip(Seq("run", "runAuto", "runContracted"))) {
+    for (((res, name), path) <- results.zip(Seq("run", "runAuto", "runContracted"))
+        .zip(Seq("fixpoint", "fixpoint", "contracted+fixpoint"))) {
+      assert(res.path === path, s"$name on $what")
       assert(res.converged, s"$name on $what did not converge")
       assert(res.assignments.as[(Long, Long)].collect().toMap === oracle,
         s"$name on $what")

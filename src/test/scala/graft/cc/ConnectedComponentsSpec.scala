@@ -310,7 +310,7 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(jobs === res.iterations, s"$jobs jobs for ${res.iterations} rounds")
   }
 
-  test("runContracted plus a noop sink runs at most 6 jobs; its scan keeps " +
+  test("runContracted plus a noop sink runs exactly 3 jobs; its scan keeps " +
        "every shuffle partition") {
     val cliques = CliqueGen.cliques(spark, 40, 7L).localCheckpoint()
     val (res, jobs) = countingJobs {
@@ -318,13 +318,12 @@ class ConnectedComponentsSpec extends SparkSpec {
       r.assignments.write.format("noop").mode("overwrite").save()
       r
     }
-    assert(res.converged && res.iterations === 0)
-    // measured: 6 (the min-rep aggregate, its count and the join-back
-    // form ran 11)
-    assert(jobs <= 6, s"$jobs jobs")
+    assert(res.path === "contracted" && res.converged && res.iterations === 0)
+    // the contraction scan's map stage and its checkpoint, then the sink
+    assert(jobs === 3, s"$jobs jobs")
     // the only checkpoint under the labels is the contraction scan's
-    // (the inner solve took the driver path); AQE must not have
-    // coalesced it to fewer tasks
+    // (the rep graph was empty, so no inner solve ran); AQE must not
+    // have coalesced it to fewer tasks
     val ckpts = res.assignments.queryExecution.analyzed.collect {
       case l: LogicalRDD => l.rdd.getNumPartitions
     }
