@@ -1,13 +1,11 @@
 package graft.cc
 
 import org.apache.spark.rdd.RDD
-import scala.concurrent.duration.Duration
 
-import org.apache.spark.sql.{DataFrame, Dataset, Observation, Row, graftsql}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, graftsql}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan}
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Connected components via the alternating Large-Star / Small-Star
   * fixpoint (Kiveris et al., SoCC 2014), Spark-SQL-native.
@@ -60,41 +58,6 @@ object ConnectedComponents {
                             iterations: Int, rounds: Seq[(Long, Long)] = Nil,
                             nonStar: Seq[Long] = Nil)
 
-  /** The RDD behind a checkpointed Dataset (its analyzed plan is a
-    * LogicalRDD leaf), so superseded round checkpoints can be freed
-    * DETERMINISTICALLY. Without this, each round's blocks (plus the
-    * shuffle files its lineage pins) linger until a driver GC lets the
-    * ContextCleaner reap them — on a 48g+ heap GCs are rare, so a long
-    * fixpoint accumulates every round's working set on executor disks
-    * (measured: the 10⁸-node giant-component probe filled ~90 GB of
-    * scratch in 4 rounds before this fix; SCALE.md "giant component").
-    */
-  private def checkpointRdd(ds: DataFrame): Option[RDD[InternalRow]] =
-    ds.queryExecution.analyzed match {
-      case l: LogicalRDD => Some(l.rdd)
-      case _             => None
-    }
-
-  /** Frees a SUPERSEDED round checkpoint: blocks always; on the
-    * reliable branch also the checkpoint FILES, deterministically.
-    * `unpersist` cannot touch reliable checkpoint files (they outlive
-    * the blocks by design), and the ContextCleaner only deletes them
-    * when `spark.cleaner.referenceTracking.cleanCheckpoints` is set AND
-    * a driver GC collects the RDD — rare on a big heap, so a
-    * multi-round fixpoint would otherwise hold EVERY round's files
-    * until context stop: rounds × round-size of cluster-visible
-    * storage where the localCheckpoint branch holds ~2 × round-size.
-    * Safe at this call site because the successor checkpoint has
-    * materialized, so nothing can read these files again.
-    */
-  private def freeCheckpoint(r: RDD[_], reliable: Boolean): Unit = {
-    r.unpersist(false)
-    if (reliable) r.getCheckpointFile.foreach { dir =>
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(r.sparkContext.hadoopConfiguration).delete(p, true)
-    }
-  }
-
   /** [[run]]'s round, planned once: [[StarOps.round]] over a
     * `LogicalRDD` leaf of `input`'s schema. The returned function
     * prepares that plan, without AQE, over one round's input rows.
@@ -112,12 +75,16 @@ object ConnectedComponents {
     * The round (large star, then small star) is planned once per call
     * ([[plannedRound]]). Each round swaps the plan's leaf for the last
     * round's checkpoint (round 1 reads the cast input) and runs as ONE
-    * job of three stages: an eager local checkpoint of the plan's
-    * output, after which both stars' sums are read off the plan's own
-    * `observe` metrics. The previous round's checkpoint, its input, is
-    * then freed at once, so at most two rounds' pairs are ever stored.
-    * With `reliableCheckpoint` each round copies its pairs to the
+    * job of three stages: the plan's output packed into a local
+    * checkpoint of long arrays ([[PackedPairs]], 16 B per pair), after
+    * which both stars' sums are read off the plan's own `observe`
+    * metrics. The previous round's checkpoint, its input, is then freed
+    * at once, so at most two rounds' pairs are ever stored. With
+    * `reliableCheckpoint` each round copies its packed pairs to the
     * checkpoint dir (one more job) and frees the local copy.
+    *
+    * The result reads the last round's checkpoint, and its plan reports
+    * the exact pair count, so a small result plans as small.
     *
     * The loop stops after the first round whose large star saw no
     * non-star group: that round's input was a star forest centred on
@@ -130,35 +97,26 @@ object ConnectedComponents {
       col("src").cast("bigint").as("src"),
       col("dst").cast("bigint").as("dst"))
     val prepare = plannedRound(input)
-    var pairs = input
     var rounds = Vector.empty[(Long, Long)]
     var nonStar = Vector.empty[Long]
-    // The checkpoint of the last round's pairs; never the caller's edges.
-    var prev: Option[RDD[InternalRow]] = None
+    // The last round's pairs; never the caller's edges.
+    var prev: Option[PackedPairs] = None
     while (!nonStar.lastOption.contains(0L) && rounds.size < maxIterations) {
-      val plan = prepare(prev.getOrElse(input.queryExecution.toRdd))
-      val local = graftsql.outputOf(spark, plan)
-        .localCheckpoint(eager = true, StorageLevel.MEMORY_AND_DISK_SER)
-      val next =
-        if (reliableCheckpoint) {
-          val files = local.checkpoint(eager = true)
-          checkpointRdd(local).foreach(_.unpersist(false))
-          files
-        } else local
-      // This round's pairs are materialized, so nothing reads the last
+      val plan = prepare(prev.fold(input.queryExecution.toRdd)(_.rows()))
+      val next = PackedPairs.store(plan.execute(), reliable = reliableCheckpoint)
+      // This round's pairs are stored, so nothing reads the last
       // round's again; free its blocks (and, on the reliable branch,
       // files) now instead of waiting for a driver GC to let the
       // ContextCleaner find them.
-      prev.foreach(freeCheckpoint(_, reliableCheckpoint))
-      prev = checkpointRdd(next)
+      prev.foreach(_.free())
+      prev = Some(next)
       val sums = graftsql.collectedMetrics(plan)
       val (large, small) = (sums(StarOps.LargeCounts), sums(StarOps.SmallCounts))
       rounds :+= ((large.getLong(0), small.getLong(0)))
       nonStar :+= large.getLong(1)
-      pairs = next
     }
-    CCResult(pairs.toDF("node", "component"), "fixpoint", nonStar.lastOption.contains(0L),
-      rounds.size, rounds, nonStar)
+    CCResult(prev.fold(input.toDF("node", "component"))(_.frame(spark, "node", "component")),
+      "fixpoint", nonStar.lastOption.contains(0L), rounds.size, rounds, nonStar)
   }
 
   /** Input-partition count for the distributed fixpoint given the edge
@@ -210,12 +168,15 @@ object ConnectedComponents {
     * distributed branch the already-counted edges also size the input
     * partitions against heap-per-core (see inline comment) — the
     * round-10 probe lesson that map-side state per task, not total
-    * heap, is what OOMs a halved-memory run. Driver memory at
-    * the default 4M edges: the union-find map is compact (~16 bytes per
-    * node slot, open addressing), but the `collect()` itself transits
-    * up to 4M boxed tuples — budget ~1 GB of driver heap at the
-    * default, dominated by the collect, and raise the threshold only
-    * with a matching driver-memory setting.
+    * heap, is what OOMs a halved-memory run. The deduplicated edges go
+    * through the same packed checkpoint as a fixpoint round
+    * ([[PackedPairs]]), whose one job also returns the edge count; the
+    * driver path collects its long arrays (16 bytes per edge) and
+    * union-finds them: 3 jobs, where a row checkpoint, a `count()` and
+    * a typed `collect()` ran 5. Driver memory
+    * at the default 4M edges: ~64 MB of collected arrays plus the
+    * union-find map (~16 bytes per node slot, open addressing); raise
+    * the threshold only with a matching driver-memory setting.
     *
     * `path` is `driver` on the driver path, where `iterations` is 0 and
     * `converged` is always true (union-find is exact), and `fixpoint`
@@ -224,12 +185,11 @@ object ConnectedComponents {
   def runAuto(edges: DataFrame, maxIterations: Int = 20,
               smallGraphThreshold: Long = 4L << 20): CCResult = {
     val spark = edges.sparkSession
-    val e = edges.select(
+    val e = PackedPairs.store(edges.select(
       col("src").cast("bigint").as("src"),
       col("dst").cast("bigint").as("dst"))
-      .dropDuplicates("src", "dst")
-      .localCheckpoint()
-    val n = e.count()
+      .dropDuplicates("src", "dst").queryExecution.toRdd)
+    val n = e.counts(0)
     // Giant input on an untuned session: say so ONCE, up front, naming
     // the preset — the alternative is the user rediscovering each
     // setting by OOM or by a full scratch disk mid-fixpoint
@@ -259,13 +219,17 @@ object ConnectedComponents {
       val parts = inputPartitions(n,
         math.max(spark.sparkContext.defaultParallelism, 1),
         Runtime.getRuntime.maxMemory())
-      val sized = if (e.rdd.getNumPartitions >= parts) e
-                  else e.repartition(parts)
-      run(sized, maxIterations)
+      val edgeRows = e.frame(spark, "src", "dst")
+      val res = run(if (e.numPartitions >= parts) edgeRows else edgeRows.repartition(parts),
+        maxIterations)
+      // Round 1 stored its own pairs; only a 0-round result reads the edges.
+      if (res.iterations > 0) e.free()
+      res
     } else {
       import spark.implicits._
       val uf = new LocalUnionFind(1 << 16)
-      e.as[(Long, Long)].collect().foreach { case (a, b) => uf.union(a, b) }
+      e.foreachPair(uf.union)
+      e.free()
       CCResult(spark.createDataset(uf.iterator.toIndexedSeq)
                  .toDF("node", "component"),
                "driver", converged = true, iterations = 0)
@@ -288,9 +252,10 @@ object ConnectedComponents {
     * `sortWithinPartitions(node, rep)` and one `mapPartitions` scan. A
     * node's first row gives its min rep m and emits its label row
     * `(node, m)`; each other distinct rep r emits the rep-clique star
-    * edge `(r, m)`. Both kinds of row land in one eager local
-    * checkpoint, the contraction's only action, and an `Observation` on
-    * that action counts the star-edge rows, k (no extra job).
+    * edge `(r, m)`. Both kinds of row land in one packed local
+    * checkpoint ([[PackedPairs]]: label pairs and star edges in separate
+    * arrays, 16 B per pair), the contraction's only action, which also
+    * returns the star-edge count, k.
     *
     * Phase 3: when k = 0 every component was task-local, and the label
     * rows are the result (`path` `contracted`): no inner solve, no
@@ -336,7 +301,6 @@ object ConnectedComponents {
                     smallGraphThreshold: Long = 4L << 20): CCResult = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val starEdges = Observation()
     val scanned = contract(edges.select(
         col("src").cast("bigint"), col("dst").cast("bigint"))
       .as[(Long, Long)]
@@ -345,19 +309,16 @@ object ConnectedComponents {
         it.foreach { case (a, b) => uf.union(a, b) }
         uf.iterator.map { case (n, r) => NodeRep(n, r) }
       })
-      .observe(starEdges, count(when(!col("label"), 1)))
-      // MEMORY_AND_DISK_SER as in StarOps: each row is read once more
-      .localCheckpoint(eager = true, StorageLevel.MEMORY_AND_DISK_SER)
-    val k = StarOps.observedCount(starEdges, Duration.Inf, 0)
-    val labels = scanned.where(col("label"))
-    if (k == 0)
-      CCResult(labels.select(col("id").as("node"), col("m").as("component")),
-        "contracted", converged = true, iterations = 0)
+    // group 0: the label rows (node, m); group 1: the star edges (rep, m)
+    val store = PackedPairs.store(scanned.queryExecution.toRdd, groups = 2,
+      group = r => if (r.getBoolean(2)) 0 else 1)
+    if (store.counts(1) == 0)
+      CCResult(store.frame(spark, "node", "component"), "contracted",
+        converged = true, iterations = 0)
     else {
-      val inner = runAuto(
-        scanned.where(!col("label")).select(col("id").as("src"), col("m").as("dst")),
+      val inner = runAuto(store.frame(spark, "src", "dst", group = 1),
         maxIterations, smallGraphThreshold)
-      inner.copy(path = s"contracted+${inner.path}", assignments = labels
+      inner.copy(path = s"contracted+${inner.path}", assignments = store.frame(spark, "id", "m")
         .join(inner.assignments.toDF("m", "component"), Seq("m"), "left")
         .select(col("id").as("node"), coalesce(col("component"), col("m")).as("component")))
     }

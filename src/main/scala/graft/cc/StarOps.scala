@@ -213,12 +213,11 @@ object StarOps {
     */
   private val DeliveryWait: Duration = 5.seconds
 
-  /** The observed sum `i` of a star (0: changes, 1: non-star groups),
-    * or of [[ConnectedComponents.runContracted]]'s star-edge count.
+  /** The observed sum `i` of a star (0: changes, 1: non-star groups).
     * An action over an empty input may plan the observed rows away; its
     * observation is then an empty row, and the sum is 0.
     */
-  private[cc] def observedCount(obs: Observation, wait: Duration, i: Int): Long = {
+  private def observedCount(obs: Observation, wait: Duration, i: Int): Long = {
     val row =
       try Await.result(obs.future, wait)
       catch {
@@ -259,10 +258,10 @@ object StarOps {
     */
   def smallStar(nodePairs: DataFrame): StarResult = {
     val obs = Observation()
-    // MEMORY_AND_DISK_SER: rows are read back at most once next round,
-    // and serialized UnsafeRow blocks cost ~25 B/row where the default
-    // deserialized level costs ~85 B in memory and ~10× that
-    // Java-serialized on disk spill (measured on the giant probe).
+    // MEMORY_AND_DISK_SER: rows are read back at most once next round.
+    // Under the default Java serializer a serialized 2-long UnsafeRow
+    // costs 42 B; ConnectedComponents.run stores its rounds as packed
+    // long arrays instead (PackedPairs, 16 B per pair).
     val pairs = star(orient(nodePairs), large = false, Left(obs))
       .localCheckpoint(eager = true, StorageLevel.MEMORY_AND_DISK_SER)
     StarResult(pairs, observedCount(obs, Duration.Inf, 0), Nil)

@@ -35,13 +35,16 @@ object graftsql {
     execution.QueryExecution.prepareExecutedPlan(spark.asInstanceOf[classic.SparkSession],
       template.transform { case s: execution.RDDScanExec => s.copy(rdd = rows) })
 
-  /** A prepared plan's output as a DataFrame over a `LogicalRDD` leaf.
-    * The plan's RDD is built here but runs no job: the first action
-    * over the DataFrame runs the whole plan as that action's job.
+  /** A DataFrame over `rows`, each of `schema`, whose `LogicalRDD` leaf
+    * reports `rowCount` rows of `sizeInBytes` as its statistics, so the
+    * planner sizes joins over it by them (a leaf without statistics
+    * plans as `spark.sql.defaultSizeInBytes`, never as small).
     */
-  def outputOf(spark: SparkSession, plan: execution.SparkPlan): DataFrame =
-    ofRows(spark, execution.LogicalRDD(plan.output, plan.execute())(
-      spark.asInstanceOf[classic.SparkSession]))
+  def ofInternalRows(spark: SparkSession, schema: types.StructType, rows: RDD[InternalRow],
+                     rowCount: Long, sizeInBytes: Long): DataFrame =
+    ofRows(spark, execution.LogicalRDD(catalyst.types.DataTypeUtils.toAttributes(schema), rows)(
+      spark.asInstanceOf[classic.SparkSession],
+      Some(catalyst.plans.logical.Statistics(sizeInBytes, Some(rowCount)))))
 
   /** Each named `observe` of `plan` and the metrics its last run
     * collected (a plan that never ran reads its metrics' empty values).

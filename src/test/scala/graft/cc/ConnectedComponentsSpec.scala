@@ -9,6 +9,7 @@ import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
 import org.apache.spark.sql.execution.aggregate.HashAggregateExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Golden fixtures from the reference's own docs:
@@ -331,6 +332,74 @@ class ConnectedComponentsSpec extends SparkSpec {
     val s = spark; import s.implicits._
     assert(res.assignments.as[(Long, Long)].collect().toSet ===
       CliqueGen.groundTruth(spark, 40, 7L).as[(Long, Long)].collect().toSet)
+  }
+
+  test("runAuto's driver path runs 3 jobs: the dedup exchange, the packed " +
+       "checkpoint that counts the edges, and the collect") {
+    val s = spark; import s.implicits._
+    val edges = edgesDf((0L until 199L).map(i => (i, i + 1)) ++ Seq((0L, 1L), (500L, 501L)))
+    val (res, jobs) = countingJobs(ConnectedComponents.runAuto(edges))
+    assert(res.path === "driver")
+    assert(jobs === 3, s"$jobs jobs")
+    assert(res.assignments.as[(Long, Long)].collect().toSet ===
+      ((0L to 199L).map((_, 0L)) ++ Seq((500L, 500L), (501L, 500L))).toSet)
+  }
+
+  /** The stores `body` leaves persisted: RDDs absent from
+    * `getRDDStorageInfo` before it, as reported once every block of
+    * them is (block updates reach the status store asynchronously).
+    */
+  private def storesLeft[T](body: => T): (T, Seq[org.apache.spark.storage.RDDInfo]) = {
+    val sc = spark.sparkContext
+    val before = sc.getRDDStorageInfo.map(_.id).toSet
+    val res = body
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    def left = sc.getRDDStorageInfo.toSeq.filterNot(i => before(i.id))
+    while (!left.forall(i => i.numCachedPartitions == i.numPartitions) &&
+           System.nanoTime() < deadline) Thread.sleep(50)
+    (res, left)
+  }
+
+  /** The persisted RDD under a CC result's one `LogicalRDD` leaf. */
+  private def resultStore(res: ConnectedComponents.CCResult): Int =
+    res.assignments.queryExecution.analyzed.collect {
+      case l: LogicalRDD => l.rdd.dependencies.map(_.rdd.id)
+    }.flatten match {
+      case Seq(id) => id
+      case ids     => fail(s"expected one store under the result, got $ids")
+    }
+
+  test("run and a k = 0 runContracted leave one store, the result's, at " +
+       "most 17 B per pair") {
+    val path = edgesDf((0L until 199L).map(i => (i, i + 1)))
+    val (ran, runLeft) = storesLeft(ConnectedComponents.run(path))
+    assert(ran.iterations > 1)
+    assert(runLeft.map(_.id) === Seq(resultStore(ran)), runLeft)
+    info(s"run: ${runLeft.head.memSize + runLeft.head.diskSize} B for 200 pairs")
+    assert(runLeft.head.memSize + runLeft.head.diskSize <= 17L * 200, runLeft)
+
+    val cliques = CliqueGen.cliques(spark, 40, 7L).localCheckpoint()
+    val nodes = CliqueGen.groundTruth(spark, 40, 7L).count()
+    val (con, conLeft) = storesLeft(
+      ConnectedComponents.runContracted(EdgeBuilder.cliqueEdgesGen(cliques)))
+    assert(con.path === "contracted")
+    assert(conLeft.map(_.id) === Seq(resultStore(con)), conLeft)
+    info(s"runContracted: ${conLeft.head.memSize + conLeft.head.diskSize} B for $nodes pairs")
+    assert(conLeft.head.memSize + conLeft.head.diskSize <= 17L * nodes, conLeft)
+  }
+
+  test("a small run result plans as small: joining an edge table to it " +
+       "plans a broadcast hash join") {
+    val s = spark; import s.implicits._
+    val res = ConnectedComponents.run(edgesDf((0L until 199L).map(i => (i, i + 1))))
+    // an RDD-backed edge table reports no size, so only the labels'
+    // own statistics can make the planner broadcast them
+    val edges = spark.sparkContext.parallelize((0L until 199L).map(i => (i, i + 1)))
+      .toDF("src", "dst")
+    val joined = edges.join(res.assignments, col("src") === col("node"))
+    val plan = joined.queryExecution.sparkPlan
+    assert(plan.collect { case j: BroadcastHashJoinExec => j }.size === 1, plan)
+    assert(joined.count() === 199L)
   }
 
   test("starEdges: duplicate-only cliques keep their node as a self-pair") {
