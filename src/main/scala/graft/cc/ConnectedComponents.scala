@@ -2,10 +2,12 @@ package graft.cc
 
 import org.apache.spark.rdd.RDD
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, graftsql}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession, graftsql}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Connected components via the alternating Large-Star / Small-Star
   * fixpoint (Kiveris et al., SoCC 2014), Spark-SQL-native.
@@ -53,10 +55,13 @@ object ConnectedComponents {
     * large-star groups that are neither a leaf nor a centre, in order.
     * [[run]] reads all three off the round's own plan, so reporting
     * them runs no job. Both are empty when no star round ran.
+    * `contraction` is [[runContracted]]'s (label rows, rep-graph edges),
+    * the counts its packing job returns; `None` on the other paths.
     */
   final case class CCResult(assignments: DataFrame, path: String, converged: Boolean,
                             iterations: Int, rounds: Seq[(Long, Long)] = Nil,
-                            nonStar: Seq[Long] = Nil)
+                            nonStar: Seq[Long] = Nil,
+                            contraction: Option[(Long, Long)] = None)
 
   /** [[run]]'s round, planned once: [[StarOps.round]] over a
     * `LogicalRDD` leaf of `input`'s schema. The returned function
@@ -239,7 +244,8 @@ object ConnectedComponents {
   /** Two-phase CC — contract first, then solve only what is left.
     *
     * Phase 1 contracts the graph with a partition-local union-find: one
-    * `mapPartitions` pass, zero shuffles. Each task union-finds the
+    * `mapPartitions` pass over the edge plan's own rows (`toRdd`, which
+    * still runs adaptively), zero shuffles. Each task union-finds the
     * edges it already holds and emits `(node, rep)` where `rep` is the
     * min node of the node's task-local component — so every edge
     * collapses inside its task, and all surviving global connectivity
@@ -248,14 +254,18 @@ object ConnectedComponents {
     *
     * Phase 2 is one sorted pass ([[ContractScan]]), the paper's
     * streaming reducer as in [[StarOps]]:
-    * `repartition(<session shuffle partitions>, node)`,
-    * `sortWithinPartitions(node, rep)` and one `mapPartitions` scan. A
-    * node's first row gives its min rep m and emits its label row
-    * `(node, m)`; each other distinct rep r emits the rep-clique star
-    * edge `(r, m)`. Both kinds of row land in one packed local
-    * checkpoint ([[PackedPairs]]: label pairs and star edges in separate
-    * arrays, 16 B per pair), the contraction's only action, which also
-    * returns the star-edge count, k.
+    * `repartition(<session shuffle partitions>, node)` and
+    * `sortWithinPartitions(node, rep)`, planned once without AQE
+    * ([[sortedByNode]]), then one scan. A node's first row gives its min
+    * rep m and emits its label row `(node, m)`; each other distinct rep
+    * r emits the rep-clique star edge `(r, m)`. Both kinds of row land
+    * in one packed local checkpoint ([[PackedPairs]]: label pairs and
+    * star edges in separate arrays, 16 B per pair), whose job is the
+    * contraction's only one: it runs phase 1 and the exchange's map side
+    * as its first stage, the sort, scan and packing as its second, and
+    * returns both groups' counts, the star-edge count k among them.
+    * Every phase reads and writes binary rows through reused buffers:
+    * no row is decoded to an object, and no pair is boxed.
     *
     * Phase 3: when k = 0 every component was task-local, and the label
     * rows are the result (`path` `contracted`): no inner solve, no
@@ -282,12 +292,12 @@ object ConnectedComponents {
     * `spark.sql.files.maxPartitionBytes` down if a corpus approaches
     * the worst case. The scan holds O(1) state per node — its group
     * streams out of Spark's external sorter, which spills — and its
-    * partition count is fixed, so AQE cannot coalesce the node-scale
-    * stages into one task.
+    * partition count is fixed and planned without AQE, so nothing
+    * coalesces the node-scale stages into one task.
     *
     * `iterations` and `rounds` report the inner solve's fixpoint rounds
     * (0 and empty on the driver path and when k = 0); `converged` is the
-    * inner solve's flag.
+    * inner solve's flag; `contraction` is (label rows, k).
     *
     * Measured (CCScaleProbe, 4 threads, 4 GB heap; SCALE.md "One CC
     * front door"): on 19.2 M round-robin edges, contracting first cut
@@ -300,77 +310,102 @@ object ConnectedComponents {
   def runContracted(edges: DataFrame, maxIterations: Int = 20,
                     smallGraphThreshold: Long = 4L << 20): CCResult = {
     val spark = edges.sparkSession
-    import spark.implicits._
-    val scanned = contract(edges.select(
-        col("src").cast("bigint"), col("dst").cast("bigint"))
-      .as[(Long, Long)]
+    val reps = edges.select(col("src").cast("bigint"), col("dst").cast("bigint"))
+      .queryExecution.toRdd
       .mapPartitions { it =>
         val uf = new LocalUnionFind(1 << 12)
-        it.foreach { case (a, b) => uf.union(a, b) }
-        uf.iterator.map { case (n, r) => NodeRep(n, r) }
-      })
+        it.foreach { r =>
+          if (r.isNullAt(0) || r.isNullAt(1))
+            throw new IllegalArgumentException("runContracted: null edge endpoint")
+          uf.union(r.getLong(0), r.getLong(1))
+        }
+        val row = new UnsafeRow(2)
+        row.pointTo(new Array[Byte](24), 24)
+        uf.nodes.map { n => row.setLong(0, n); row.setLong(1, uf.find(n)); row: InternalRow }
+      }
     // group 0: the label rows (node, m); group 1: the star edges (rep, m)
-    val store = PackedPairs.store(scanned.queryExecution.toRdd, groups = 2,
+    val store = PackedPairs.store(contract(spark, reps), groups = 2,
       group = r => if (r.getBoolean(2)) 0 else 1)
+    val contraction = Some((store.counts(0), store.counts(1)))
     if (store.counts(1) == 0)
       CCResult(store.frame(spark, "node", "component"), "contracted",
-        converged = true, iterations = 0)
+        converged = true, iterations = 0, contraction = contraction)
     else {
       val inner = runAuto(store.frame(spark, "src", "dst", group = 1),
         maxIterations, smallGraphThreshold)
-      inner.copy(path = s"contracted+${inner.path}", assignments = store.frame(spark, "id", "m")
-        .join(inner.assignments.toDF("m", "component"), Seq("m"), "left")
-        .select(col("id").as("node"), coalesce(col("component"), col("m")).as("component")))
+      inner.copy(path = s"contracted+${inner.path}", contraction = contraction,
+        assignments = store.frame(spark, "id", "m")
+          .join(inner.assignments.toDF("m", "component"), Seq("m"), "left")
+          .select(col("id").as("node"), coalesce(col("component"), col("m")).as("component")))
     }
   }
 
-  /** [[runContracted]]'s phase 2 over its `(node, rep)` rows, lazy:
-    * [[runContracted]] runs it as its one action.
+  /** [[runContracted]]'s phase-2 exchange and sort over its `(node,
+    * rep)` rows: `repartition(<session shuffle partitions>, node)` and
+    * `sortWithinPartitions(node, rep)`, planned over an existing-RDD
+    * leaf and prepared without AQE ([[graftsql.prepareOver]]), as
+    * [[plannedRound]] does for [[run]]. The partition count is fixed,
+    * so AQE would add only a map-stage job and a re-plan.
     */
-  private[cc] def contract(mapping: Dataset[NodeRep]): Dataset[Contracted] = {
-    val spark = mapping.sparkSession
-    import spark.implicits._
-    mapping.repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt, col("node"))
+  private[cc] def sortedByNode(spark: SparkSession, reps: RDD[InternalRow]): SparkPlan = {
+    val schema = StructType(Seq(StructField("node", LongType, nullable = false),
+      StructField("rep", LongType, nullable = false)))
+    val template = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+      .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt, col("node"))
       .sortWithinPartitions("node", "rep")
-      .mapPartitions((it: Iterator[NodeRep]) => new ContractScan(it): Iterator[Contracted])
+      .queryExecution.sparkPlan
+    graftsql.prepareOver(spark, template, reps)
   }
 
-  /** One phase-1 row of [[runContracted]]: a node and its task-local rep. */
-  private[cc] final case class NodeRep(node: Long, rep: Long)
-
-  /** One row of [[runContracted]]'s scan: the label row `(node, m)` when
-    * `label`, else the rep-clique star edge `(rep, m)`.
+  /** [[runContracted]]'s phase 2 over its `(node, rep)` rows, lazy: the
+    * sorted rows of [[sortedByNode]] through [[ContractScan]].
+    * [[runContracted]] runs it inside its one action, the packing job.
     */
-  private[cc] final case class Contracted(id: Long, m: Long, label: Boolean)
+  private[cc] def contract(spark: SparkSession, reps: RDD[InternalRow]): RDD[InternalRow] =
+    sortedByNode(spark, reps).execute().mapPartitions(new ContractScan(_))
 
-  /** Streams [[runContracted]]'s phase 2 over rows sorted by (node, rep)
-    * within the partition, all rows of a node in one partition: a
-    * group's first row gives m and emits `(node, m)`, each later distinct
-    * rep r emits `(r, m)`, and a row repeating the previous rep is
-    * skipped.
+  /** Streams [[runContracted]]'s phase 2 over `(node, rep)` rows sorted
+    * by (node, rep) within the partition, all rows of a node in one
+    * partition: a group's first row gives m and emits `(node, m, true)`,
+    * each later distinct rep r emits `(r, m, false)` (a rep-clique star
+    * edge), and a row repeating the previous rep is skipped. Every row
+    * it returns is one reused `UnsafeRow`, and it reads each input row's
+    * fields before asking for the next (the sorter reuses its row too).
     */
-  private[cc] final class ContractScan(rows: Iterator[NodeRep])
-      extends Iterator[Contracted] {
-    private val in = rows.buffered
-    private var open = false
+  private[cc] final class ContractScan(rows: Iterator[InternalRow])
+      extends Iterator[InternalRow] {
+    private val out = new UnsafeRow(3)
+    out.pointTo(new Array[Byte](32), 32)
+    private var open, ready = false
     private var node, m, last = 0L
 
     def hasNext: Boolean = {
-      while (open && in.hasNext && in.head.node == node && in.head.rep == last) in.next()
-      in.hasNext
+      while (!ready && rows.hasNext) {
+        val r = rows.next()
+        val n = r.getLong(0)
+        val rep = r.getLong(1)
+        if (!open || n != node) {
+          open = true
+          node = n
+          m = rep
+          emit(n, label = true)
+        } else if (rep != last) emit(rep, label = false)
+        last = rep
+      }
+      ready
     }
 
-    def next(): Contracted = {
+    def next(): InternalRow = {
       if (!hasNext) throw new NoSuchElementException("end of contraction scan")
-      val r = in.next()
-      last = r.rep
-      if (open && r.node == node) Contracted(r.rep, m, label = false)
-      else {
-        open = true
-        node = r.node
-        m = r.rep
-        Contracted(node, m, label = true)
-      }
+      ready = false
+      out
+    }
+
+    private def emit(id: Long, label: Boolean): Unit = {
+      out.setLong(0, id)
+      out.setLong(1, m)
+      out.setBoolean(2, label)
+      ready = true
     }
   }
 
@@ -381,6 +416,13 @@ object ConnectedComponents {
     */
   private[cc] final class LocalUnionFind(initialCapacity: Int) {
     private val parent = new LongLongMap(initialCapacity)
+    // The last union's endpoints and their common root. Only a union
+    // moves a root, so until the next one both still have that root; a
+    // clique stream repeats an endpoint pair after pair, and each repeat
+    // skips a find.
+    private var lastA, lastB, lastRoot = 0L
+    private var remembered = false
+
     def find(x: Long): Long = {
       var r = x
       var p = parent.getOrPut(r, r)
@@ -390,16 +432,21 @@ object ConnectedComponents {
       r
     }
     def union(a: Long, b: Long): Unit = {
-      val ra = find(a)
-      val rb = find(b)
+      val ra = if (remembered && (a == lastA || a == lastB)) lastRoot else find(a)
+      val rb = if (remembered && (b == lastA || b == lastB)) lastRoot else find(b)
       if (ra != rb) parent.put(math.max(ra, rb), math.min(ra, rb))
+      lastA = a
+      lastB = b
+      lastRoot = math.min(ra, rb)
+      remembered = true
     }
-    /** (node, root) for every node ever seen. Path compression during
-      * iteration only rewrites existing slots — no rehash, so iterating
-      * while compressing is safe.
+    /** Every node ever seen. Path compression while iterating only
+      * rewrites existing slots — no rehash, so calling [[find]] on each
+      * node as it comes is safe.
       */
-    def iterator: Iterator[(Long, Long)] =
-      parent.keysIterator.map(n => (n, find(n)))
+    def nodes: Iterator[Long] = parent.keysIterator
+    /** (node, root) for every node ever seen. */
+    def iterator: Iterator[(Long, Long)] = nodes.map(n => (n, find(n)))
   }
 
   /** Minimal open-addressing long→long map (linear probe, power-of-two

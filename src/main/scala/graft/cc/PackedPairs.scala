@@ -51,6 +51,8 @@ private[cc] final class PackedPairs private (chunks: RDD[Array[Long]], val count
       .foreach(r => f(r.getLong(0), r.getLong(1)))
 
   /** Frees the blocks now and, for a reliable checkpoint, its files too.
+    * The blocks go without `RDD.unpersist`, which warns on every locally
+    * checkpointed RDD that its lineage is gone; nothing reads them again.
     * `unpersist` cannot touch reliable checkpoint files (they outlive the
     * blocks by design), and the ContextCleaner deletes them only when
     * `spark.cleaner.referenceTracking.cleanCheckpoints` is set AND a
@@ -59,7 +61,7 @@ private[cc] final class PackedPairs private (chunks: RDD[Array[Long]], val count
     * stop. Call it only once nothing reads this checkpoint again.
     */
   def free(): Unit = {
-    chunks.unpersist(false)
+    graftsql.unpersistQuietly(chunks)
     if (reliable) chunks.getCheckpointFile.foreach { dir =>
       val p = new org.apache.hadoop.fs.Path(dir)
       p.getFileSystem(chunks.sparkContext.hadoopConfiguration).delete(p, true)

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.Generator
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -24,6 +24,12 @@ import org.apache.spark.sql.types._
   * the built-in CollectionGenerators; a custom Generator runs on the
   * eval path inside GenerateExec, which is exactly where the streaming
   * (vs materialize-then-explode) win lives.
+  *
+  * Each clique's pairs are written into one reused two-long `UnsafeRow`,
+  * so a pair allocates and boxes nothing. Reuse is safe because
+  * `GenerateExec` consumes each generated row before asking for the
+  * next: its eval path projects the row at once, and its whole-stage
+  * path reads its fields in place.
   */
 case class CliquePairs(child: Expression)
     extends UnaryExpression with Generator with CodegenFallback {
@@ -47,10 +53,15 @@ case class CliquePairs(child: Expression)
     if (arr == null || arr.numElements() == 0) Iterator.empty
     else {
       val n = arr.numElements()
-      if (n == 1) {
-        val v = arr.getLong(0)
-        Iterator.single(InternalRow(v, v))
-      } else new Iterator[InternalRow] {
+      val row = new UnsafeRow(2)
+      row.pointTo(new Array[Byte](24), 24)
+      def pair(a: Long, b: Long): InternalRow = {
+        row.setLong(0, a)
+        row.setLong(1, b)
+        row
+      }
+      if (n == 1) Iterator.single(pair(arr.getLong(0), arr.getLong(0)))
+      else new Iterator[InternalRow] {
         private var i = 0
         private var j = 1
         override def hasNext: Boolean = i < n - 1
@@ -58,7 +69,7 @@ case class CliquePairs(child: Expression)
           val a = arr.getLong(i); val b = arr.getLong(j)
           j += 1
           if (j >= n) { i += 1; j = i + 1 }
-          if (a >= b) InternalRow(a, b) else InternalRow(b, a)
+          if (a >= b) pair(a, b) else pair(b, a)
         }
       }
     }

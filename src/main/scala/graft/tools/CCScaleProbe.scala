@@ -13,7 +13,8 @@ import graft.cc.{CliqueGen, ConnectedComponents, EdgeBuilder, Tuning}
   * truth. The `contracted`, `plain` and `giant` runs also print the
   * branch that ran (`CCResult.path`), each fixpoint round's (large,
   * small) change counts (`CCResult.rounds`) and non-star group counts
-  * (`CCResult.nonStar`).
+  * (`CCResult.nonStar`); the contracted runs also print the
+  * contraction's (label rows, rep-graph edges) (`CCResult.contraction`).
   *
   * Usage: runMain graft.tools.CCScaleProbe [nBlocks] [mode]
   * (nBlocks=1000 ~ 4M edges, 5000 ~ 20M, 25000 ~ 100M;
@@ -226,7 +227,8 @@ object CCScaleProbe {
         r
       }
       System.err.println(s"[probe] contracted: converged=${contracted.converged} " +
-        s"innerIterations=${contracted.iterations} path=${contracted.path} rounds=${contracted.rounds} nonStar=${contracted.nonStar}")
+        s"innerIterations=${contracted.iterations} path=${contracted.path} rounds=${contracted.rounds} nonStar=${contracted.nonStar} " +
+        s"contraction=${contracted.contraction.mkString}")
       mismatches("contracted", contracted.assignments)
     }
 
@@ -356,7 +358,8 @@ object CCScaleProbe {
               smallGraphThreshold = 0)
             require(r.converged, "contracted inner solve did not converge")
             System.err.println(
-              s"[probe] giant contracted: innerIterations=${r.iterations} path=${r.path} rounds=${r.rounds} nonStar=${r.nonStar}")
+              s"[probe] giant contracted: innerIterations=${r.iterations} path=${r.path} rounds=${r.rounds} nonStar=${r.nonStar} " +
+              s"contraction=${r.contraction.mkString}")
             r.assignments
           case "incremental" =>
             // The MAINTENANCE front door against a standing 10⁸-member

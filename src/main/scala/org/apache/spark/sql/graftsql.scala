@@ -46,6 +46,13 @@ object graftsql {
       spark.asInstanceOf[classic.SparkSession],
       Some(catalyst.plans.logical.Statistics(sizeInBytes, Some(rowCount)))))
 
+  /** Drops `rdd`'s cached blocks, as `RDD.unpersist(blocking = false)`
+    * does but without its warning for a locally checkpointed RDD (whose
+    * blocks are its only copy): for a caller that frees such an RDD
+    * once nothing reads it again.
+    */
+  def unpersistQuietly(rdd: RDD[_]): Unit = rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
+
   /** Each named `observe` of `plan` and the metrics its last run
     * collected (a plan that never ran reads its metrics' empty values).
     */

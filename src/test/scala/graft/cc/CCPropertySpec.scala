@@ -306,11 +306,17 @@ class CCPropertySpec extends SparkSpec {
   test("the contraction scan equals the reference min-rep table and rep-clique star") {
     val s = spark
     import s.implicits._
-    import ConnectedComponents.NodeRep
+    case class NodeRep(node: Long, rep: Long)
+    case class Contracted(id: Long, m: Long, label: Boolean)
+    def contract(rows: Seq[NodeRep]): Seq[Contracted] =
+      ConnectedComponents.contract(spark, rows.map(r => (r.node, r.rep)).toDF("node", "rep")
+          .repartition(3).queryExecution.toRdd)
+        .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).collect().toSeq
+        .map((Contracted.apply _).tupled)
     val rnd = new scala.util.Random(1618)
     val ids = (-20L to 20L) ++ Seq(Long.MinValue, Long.MinValue + 1, Long.MaxValue - 1, Long.MaxValue)
     def id(): Long = ids(rnd.nextInt(ids.length))
-    assert(ConnectedComponents.contract(Seq.empty[NodeRep].toDS()).collect().isEmpty)
+    assert(contract(Nil).isEmpty)
     for (trial <- 0 until 5) {
       // each node seen by 1..5 tasks, each task naming one rep from a
       // small pool, so reps repeat within and across nodes
@@ -321,10 +327,33 @@ class CCPropertySpec extends SparkSpec {
       val groups = rows.groupBy(_.node).map { case (n, g) => n -> g.map(_.rep).distinct.sorted }
       val wantLabels = groups.map { case (n, reps) => (n, reps.head) }.toSeq.sorted
       val wantEdges = groups.values.toSeq.flatMap(reps => reps.tail.map(r => (r, reps.head))).sorted
-      val got = ConnectedComponents.contract(rows.toDS().repartition(3)).collect().toSeq
+      val got = contract(rows)
       val (labels, edges) = got.partition(_.label)
       assert(labels.map(c => (c.id, c.m)).sorted === wantLabels, s"label rows, trial $trial")
       assert(edges.map(c => (c.id, c.m)).sorted === wantEdges, s"star edges, trial $trial")
+    }
+  }
+
+  test("LocalUnionFind's last-union memo equals a memo-free union-find") {
+    val rnd = new scala.util.Random(2718)
+    val ids = (-30L to 30L) ++ Seq(Long.MinValue, Long.MinValue + 1, Long.MaxValue - 1, Long.MaxValue)
+    def id(): Long = ids(rnd.nextInt(ids.length))
+    for (trial <- 0 until 20) {
+      // each edge repeats the last edge's endpoints in either column
+      // about half the time, as a clique stream does
+      var last = (id(), id())
+      val edges = Vector.fill(40 + 30 * trial) {
+        def pick(): Long = rnd.nextInt(4) match {
+          case 0 => last._1
+          case 1 => last._2
+          case _ => id()
+        }
+        last = (pick(), pick())
+        last
+      }
+      val uf = new ConnectedComponents.LocalUnionFind(4)
+      edges.foreach { case (a, b) => uf.union(a, b) }
+      assert(uf.iterator.toMap === unionFind(edges), s"trial $trial")
     }
   }
 

@@ -68,6 +68,24 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(gen.nonEmpty)
   }
 
+  test("CliquePairs' reused row survives buffering consumers with whole-stage " +
+       "codegen on and off") {
+    val s = spark; import s.implicits._
+    val df = cliquesDf(Seq(Seq.empty[Long], Seq(42L), Seq(5L, 5L, 5L), Seq(7L, 3L, 7L, 1L),
+      Seq(Long.MaxValue, 0L, Long.MinValue), Seq(9L), (1L to 30L).reverse))
+    val key = "spark.sql.codegen.wholeStage"
+    val before = spark.conf.getOption(key)
+    try for (wholeStage <- Seq("true", "false")) {
+      spark.conf.set(key, wholeStage)
+      val want = EdgeBuilder.cliqueEdges(df).as[(Long, Long)].collect().toSeq.sorted
+      val gen = EdgeBuilder.cliqueEdgesGen(df)
+      assert(gen.as[(Long, Long)].collect().toSeq.sorted === want, s"collect, wholeStage $wholeStage")
+      assert(gen.sort("src", "dst").as[(Long, Long)].collect().toSeq === want,
+        s"sort, wholeStage $wholeStage")
+      assert(want.size === 1 + 3 + 6 + 3 + 1 + 435)
+    } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("smallStar matches the reference comment vector") {
     val s = spark; import s.implicits._
     // reference ConnectedComponent.scala:46-60: (1,4),(6,1),(3,2),(6,5)
@@ -311,7 +329,7 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(jobs === res.iterations, s"$jobs jobs for ${res.iterations} rounds")
   }
 
-  test("runContracted plus a noop sink runs exactly 3 jobs; its scan keeps " +
+  test("runContracted plus a noop sink runs exactly 2 jobs; its scan keeps " +
        "every shuffle partition") {
     val cliques = CliqueGen.cliques(spark, 40, 7L).localCheckpoint()
     val (res, jobs) = countingJobs {
@@ -320,8 +338,16 @@ class ConnectedComponentsSpec extends SparkSpec {
       r
     }
     assert(res.path === "contracted" && res.converged && res.iterations === 0)
-    // the contraction scan's map stage and its checkpoint, then the sink
-    assert(jobs === 3, s"$jobs jobs")
+    // the contraction's packing job, then the sink
+    assert(jobs === 2, s"$jobs jobs")
+    val nodes = CliqueGen.groundTruth(spark, 40, 7L).count()
+    assert(res.contraction === Some((nodes, 0L)))
+    // its exchange and sort plan without AQE, which would add a
+    // map-stage job
+    val sorted = ConnectedComponents.sortedByNode(spark,
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.catalyst.InternalRow])
+    assert(sorted.collect { case a: AdaptiveSparkPlanExec => a }.isEmpty, sorted)
+    assert(sorted.collect { case e: ShuffleExchangeExec => e }.size === 1, sorted)
     // the only checkpoint under the labels is the contraction scan's
     // (the rep graph was empty, so no inner solve ran); AQE must not
     // have coalesced it to fewer tasks
@@ -343,6 +369,36 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(jobs === 3, s"$jobs jobs")
     assert(res.assignments.as[(Long, Long)].collect().toSet ===
       ((0L to 199L).map((_, 0L)) ++ Seq((500L, 500L), (501L, 500L))).toSet)
+  }
+
+  test("freeing packed stores logs no lineage warning: a 9-round run and a " +
+       "k > 0 runContracted") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    val lines = new LinkedBlockingQueue[String]()
+    val appender = new AbstractAppender("cc-free-log", null, null, true, Array.empty) {
+      override def append(e: LogEvent): Unit = lines.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val root = ctx.getConfiguration.getRootLogger
+    root.addAppender(appender, null, null)
+    ctx.updateLoggers()
+    val path = (0L until 199L).map(i => (i, i + 1))
+    try {
+      assert(ConnectedComponents.run(edgesDf(path)).iterations === 9)
+      val con = ConnectedComponents.runContracted(edgesDf(path).repartition(4))
+      assert(con.path.startsWith("contracted+"), con.path)
+      assert(con.contraction.exists { case (labels, k) => labels === 200L && k > 0L },
+        con.contraction)
+    } finally {
+      root.removeAppender("cc-free-log")
+      ctx.updateLoggers()
+      appender.stop()
+    }
+    val warned = lines.toArray.map(_.toString).filter(_.contains("was locally checkpointed"))
+    assert(warned.isEmpty, warned.mkString("\n"))
   }
 
   /** The stores `body` leaves persisted: RDDs absent from
