@@ -2,20 +2,18 @@ package graft.cc
 
 import org.apache.spark.rdd.RDD
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession, graftsql}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeRow
-import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Connected components via the alternating Large-Star / Small-Star
   * fixpoint (Kiveris et al., SoCC 2014), Spark-SQL-native.
   *
-  * Public contract mirrors the reference
-  * (/root/reference/src/main/scala/com/kwartile/lib/cc/ConnectedComponent.scala:266-279):
-  * the result maps every node of the graph to the minimum node id of its
-  * component (the min node maps to itself), `converged` reports whether
+  * Public contract mirrors the reference implementation's
+  * (`com.kwartile.lib.cc.ConnectedComponent.run`): the result maps every
+  * node of the graph to the minimum node id of its component (the min
+  * node maps to itself), `converged` reports whether
   * the fixpoint was reached within `maxIterations`, and `iterations` is
   * the number of large+small rounds executed.
   *
@@ -29,8 +27,8 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * neighbour has a larger neighbour, so it is a centre. The stars
   * preserve connectivity, so that round's output, `(n, centre)` for
   * every node, is the exact labelling, and `converged` is true only
-  * then. The reference (:247-249) stopped when both change counts
-  * repeated the previous round's or were both zero: a heuristic that
+  * then. The reference stopped when both change counts repeated the
+  * previous round's or were both zero: a heuristic that
   * spends one more round confirming a labelling that is already final
   * (and could in principle stop early on a coincidental repeat). So
   * `iterations`, `rounds` and `nonStar` end at the first star-forest
@@ -53,8 +51,8 @@ object ConnectedComponents {
     * `contracted+driver` or `contracted+fixpoint` for [[runContracted]]. `rounds` holds each fixpoint round's (large,
     * small) change counts and `nonStar` each round's count of
     * large-star groups that are neither a leaf nor a centre, in order.
-    * [[run]] reads all three off the round's own plan, so reporting
-    * them runs no job. Both are empty when no star round ran.
+    * [[run]] sums all three in the round's own job, so reporting them
+    * runs no job. Both are empty when no star round ran.
     * `contraction` is [[runContracted]]'s (label rows, rep-graph edges),
     * the counts its packing job returns; `None` on the other paths.
     */
@@ -63,30 +61,19 @@ object ConnectedComponents {
                             nonStar: Seq[Long] = Nil,
                             contraction: Option[(Long, Long)] = None)
 
-  /** [[run]]'s round, planned once: [[StarOps.round]] over a
-    * `LogicalRDD` leaf of `input`'s schema. The returned function
-    * prepares that plan, without AQE, over one round's input rows.
-    */
-  private[cc] def plannedRound(input: DataFrame): RDD[InternalRow] => SparkPlan = {
-    val spark = input.sparkSession
-    val template = StarOps.round(spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-      input.schema)).queryExecution.sparkPlan
-    rows => graftsql.prepareOver(spark, template, rows)
-  }
-
   /** @param edges DataFrame with integral columns `src`, `dst` (any
     *              orientation, duplicates/self-loops fine)
     *
-    * The round (large star, then small star) is planned once per call
-    * ([[plannedRound]]). Each round swaps the plan's leaf for the last
-    * round's checkpoint (round 1 reads the cast input) and runs as ONE
-    * job of three stages: the plan's output packed into a local
-    * checkpoint of long arrays ([[PackedPairs]], 16 B per pair), after
-    * which both stars' sums are read off the plan's own `observe`
-    * metrics. The previous round's checkpoint, its input, is then freed
-    * at once, so at most two rounds' pairs are ever stored. With
-    * `reliableCheckpoint` each round copies its packed pairs to the
-    * checkpoint dir (one more job) and frees the local copy.
+    * Each round runs both stars at row level ([[StarOps.star]]) over
+    * the last round's checkpoint (round 1: the cast input), through one
+    * exchange-and-sort plan planned once per call ([[StarOps.sortedBy]]),
+    * and packs the small star's rows into a local checkpoint of long
+    * arrays ([[PackedPairs]], 16 B per pair): ONE job of three stages,
+    * whose scans have filled both stars' counts when it returns. The
+    * previous round's checkpoint, its input, is then freed at once, so
+    * at most two rounds' pairs are ever stored. With `reliableCheckpoint`
+    * each round copies its packed pairs to the checkpoint dir (one more
+    * job) and frees the local copy. A null endpoint is an error.
     *
     * The result reads the last round's checkpoint, and its plan reports
     * the exact pair count, so a small result plans as small.
@@ -101,24 +88,25 @@ object ConnectedComponents {
     val input = edges.select(
       col("src").cast("bigint").as("src"),
       col("dst").cast("bigint").as("dst"))
-    val prepare = plannedRound(input)
+    val sorted = StarOps.sortedBy(spark)
     var rounds = Vector.empty[(Long, Long)]
     var nonStar = Vector.empty[Long]
     // The last round's pairs; never the caller's edges.
     var prev: Option[PackedPairs] = None
     while (!nonStar.lastOption.contains(0L) && rounds.size < maxIterations) {
-      val plan = prepare(prev.fold(input.queryExecution.toRdd)(_.rows()))
-      val next = PackedPairs.store(plan.execute(), reliable = reliableCheckpoint)
+      val (large, largeCounts) =
+        StarOps.star(sorted, prev.fold(input.queryExecution.toRdd)(_.rows()), large = true)
+      val (small, smallCounts) = StarOps.star(sorted, large, large = false)
+      val next = PackedPairs.store(small, reliable = reliableCheckpoint)
       // This round's pairs are stored, so nothing reads the last
       // round's again; free its blocks (and, on the reliable branch,
       // files) now instead of waiting for a driver GC to let the
       // ContextCleaner find them.
       prev.foreach(_.free())
       prev = Some(next)
-      val sums = graftsql.collectedMetrics(plan)
-      val (large, small) = (sums(StarOps.LargeCounts), sums(StarOps.SmallCounts))
-      rounds :+= ((large.getLong(0), small.getLong(0)))
-      nonStar :+= large.getLong(1)
+      val (changes, flagged) = largeCounts.total
+      rounds :+= ((changes, smallCounts.total._1))
+      nonStar :+= flagged
     }
     CCResult(prev.fold(input.toDF("node", "component"))(_.frame(spark, "node", "component")),
       "fixpoint", nonStar.lastOption.contains(0L), rounds.size, rounds, nonStar)
@@ -178,7 +166,8 @@ object ConnectedComponents {
     * ([[PackedPairs]]), whose one job also returns the edge count; the
     * driver path collects its long arrays (16 bytes per edge) and
     * union-finds them: 3 jobs, where a row checkpoint, a `count()` and
-    * a typed `collect()` ran 5. Driver memory
+    * a typed `collect()` ran 5. Packing rejects a null endpoint on both
+    * paths. Driver memory
     * at the default 4M edges: ~64 MB of collected arrays plus the
     * union-find map (~16 bytes per node slot, open addressing); raise
     * the threshold only with a matching driver-memory setting.
@@ -255,8 +244,8 @@ object ConnectedComponents {
     * Phase 2 is one sorted pass ([[ContractScan]]), the paper's
     * streaming reducer as in [[StarOps]]:
     * `repartition(<session shuffle partitions>, node)` and
-    * `sortWithinPartitions(node, rep)`, planned once without AQE
-    * ([[sortedByNode]]), then one scan. A node's first row gives its min
+    * `sortWithinPartitions(node, rep)` prepared without AQE (the stars'
+    * [[StarOps.sortedBy]]), then one scan. A node's first row gives its min
     * rep m and emits its label row `(node, m)`; each other distinct rep
     * r emits the rep-clique star edge `(r, m)`. Both kinds of row land
     * in one packed local checkpoint ([[PackedPairs]]: label pairs and
@@ -340,29 +329,12 @@ object ConnectedComponents {
     }
   }
 
-  /** [[runContracted]]'s phase-2 exchange and sort over its `(node,
-    * rep)` rows: `repartition(<session shuffle partitions>, node)` and
-    * `sortWithinPartitions(node, rep)`, planned over an existing-RDD
-    * leaf and prepared without AQE ([[graftsql.prepareOver]]), as
-    * [[plannedRound]] does for [[run]]. The partition count is fixed,
-    * so AQE would add only a map-stage job and a re-plan.
-    */
-  private[cc] def sortedByNode(spark: SparkSession, reps: RDD[InternalRow]): SparkPlan = {
-    val schema = StructType(Seq(StructField("node", LongType, nullable = false),
-      StructField("rep", LongType, nullable = false)))
-    val template = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-      .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt, col("node"))
-      .sortWithinPartitions("node", "rep")
-      .queryExecution.sparkPlan
-    graftsql.prepareOver(spark, template, reps)
-  }
-
   /** [[runContracted]]'s phase 2 over its `(node, rep)` rows, lazy: the
-    * sorted rows of [[sortedByNode]] through [[ContractScan]].
+    * rows of [[StarOps.sortedBy]] through [[ContractScan]].
     * [[runContracted]] runs it inside its one action, the packing job.
     */
   private[cc] def contract(spark: SparkSession, reps: RDD[InternalRow]): RDD[InternalRow] =
-    sortedByNode(spark, reps).execute().mapPartitions(new ContractScan(_))
+    StarOps.sortedBy(spark)(reps).execute().mapPartitions(new ContractScan(_))
 
   /** Streams [[runContracted]]'s phase 2 over `(node, rep)` rows sorted
     * by (node, rep) within the partition, all rows of a node in one

@@ -43,7 +43,7 @@ private[cc] final class PackedPairs private (chunks: RDD[Array[Long]], val count
     graftsql.ofInternalRows(spark,
       StructType(Seq(StructField(a, LongType, nullable = false),
         StructField(b, LongType, nullable = false))),
-      rows(group), counts(group), 16L * counts(group))
+      rows(group), Some((counts(group), 16L * counts(group))))
 
   /** Every pair of group 0, on the driver: one job. */
   def foreachPair(f: (Long, Long) => Unit): Unit =
@@ -77,11 +77,12 @@ private[cc] object PackedPairs {
   val ChunkPairs: Int = 1 << 20
 
   /** Packs the first two (bigint) fields of `rows` into chunks, each row
-    * in group `group(row)`, and stores them at `MEMORY_AND_DISK_SER`
-    * with a local checkpoint or, when `reliable`, a reliable one. One job
-    * materializes the store and returns each group's pair count; a
-    * reliable checkpoint then copies the blocks to the checkpoint dir
-    * (one more job) and frees them. `rows` is read once, by that job.
+    * in group `group(row)` (a null field is an error), and stores them
+    * at `MEMORY_AND_DISK_SER` with a local checkpoint or, when
+    * `reliable`, a reliable one. One job materializes the store and
+    * returns each group's pair count; a reliable checkpoint then copies
+    * the blocks to the checkpoint dir (one more job) and frees them.
+    * `rows` is read once, by that job.
     */
   def store(rows: RDD[InternalRow], reliable: Boolean = false, groups: Int = 1,
             group: InternalRow => Int = _ => 0): PackedPairs = {
@@ -123,6 +124,8 @@ private[cc] object PackedPairs {
       var n = 0
       while (n < ChunkPairs && rows.hasNext) {
         val r = rows.next()
+        if (r.isNullAt(0) || r.isNullAt(1))
+          throw new IllegalArgumentException("packed pairs: null edge endpoint")
         cols(group(r)).add(r.getLong(0), r.getLong(1))
         n += 1
       }

@@ -27,24 +27,24 @@ object graftsql {
     * `rows` instead, prepared for execution by the non-adaptive rule set
     * (`QueryExecution.prepareExecutedPlan`): the plan runs as planned,
     * with no AQE stage split. Each call copies every node above the
-    * scan, so each prepared plan owns fresh shuffles and fresh
-    * `observe` accumulators.
+    * scan, so each prepared plan owns fresh shuffles.
     */
   def prepareOver(spark: SparkSession, template: execution.SparkPlan,
                   rows: RDD[InternalRow]): execution.SparkPlan =
     execution.QueryExecution.prepareExecutedPlan(spark.asInstanceOf[classic.SparkSession],
       template.transform { case s: execution.RDDScanExec => s.copy(rdd = rows) })
 
-  /** A DataFrame over `rows`, each of `schema`, whose `LogicalRDD` leaf
-    * reports `rowCount` rows of `sizeInBytes` as its statistics, so the
-    * planner sizes joins over it by them (a leaf without statistics
-    * plans as `spark.sql.defaultSizeInBytes`, never as small).
+  /** A DataFrame over `rows`, each of `schema`. Given `stats`, (row
+    * count, size in bytes), its `LogicalRDD` leaf reports them as its
+    * statistics, so the planner sizes joins over it by them (a leaf
+    * without statistics plans as `spark.sql.defaultSizeInBytes`, never
+    * as small).
     */
   def ofInternalRows(spark: SparkSession, schema: types.StructType, rows: RDD[InternalRow],
-                     rowCount: Long, sizeInBytes: Long): DataFrame =
+                     stats: Option[(Long, Long)] = None): DataFrame =
     ofRows(spark, execution.LogicalRDD(catalyst.types.DataTypeUtils.toAttributes(schema), rows)(
       spark.asInstanceOf[classic.SparkSession],
-      Some(catalyst.plans.logical.Statistics(sizeInBytes, Some(rowCount)))))
+      stats.map { case (n, bytes) => catalyst.plans.logical.Statistics(bytes, Some(n)) }))
 
   /** Drops `rdd`'s cached blocks, as `RDD.unpersist(blocking = false)`
     * does but without its warning for a locally checkpointed RDD (whose
@@ -52,12 +52,6 @@ object graftsql {
     * once nothing reads it again.
     */
   def unpersistQuietly(rdd: RDD[_]): Unit = rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
-
-  /** Each named `observe` of `plan` and the metrics its last run
-    * collected (a plan that never ran reads its metrics' empty values).
-    */
-  def collectedMetrics(plan: execution.SparkPlan): Map[String, Row] =
-    plan.collect { case c: execution.CollectMetricsExec => c.name -> c.collectedMetrics }.toMap
 
   /** Decode a `.asc`/`.desc` sort Column into (child column,
     * descending?, nullsLast?); None for a plain non-sort Column. The

@@ -4,13 +4,15 @@ import java.util.concurrent.{CountDownLatch, LinkedBlockingQueue, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
 import graft.SparkSpec
+import org.apache.spark.ShuffleDependency
+import org.apache.spark.rdd.RDD
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.aggregate.HashAggregateExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
-import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Golden fixtures from the reference's own docs:
   *   - README worked example (/root/reference/README.md:12-24)
@@ -110,50 +112,33 @@ class ConnectedComponentsSpec extends SparkSpec {
     r.handles.foreach(_.unpersist())
   }
 
-  /** Physical plan of the `localCheckpoint` action `body` runs, as
-    * executed (AQE's final plan), captured by a QueryExecutionListener.
-    */
-  private def checkpointPlan(body: => Unit): SparkPlan = {
-    val plans = new LinkedBlockingQueue[SparkPlan]()
-    val listener = new QueryExecutionListener {
-      def onSuccess(funcName: String, qe: QueryExecution, ns: Long): Unit =
-        if (funcName == "localCheckpoint") plans.add(qe.executedPlan)
-      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      body
-      Option(plans.poll(60, TimeUnit.SECONDS))
-        .getOrElse(fail("no localCheckpoint action was reported"))
-    } finally spark.listenerManager.unregister(listener)
-  }
+  /** The shuffles `rdd`'s lineage depends on. */
+  private def shuffles(rdd: RDD[_]): Int = rdd.dependencies.map {
+    case d: ShuffleDependency[_, _, _] => 1 + shuffles(d.rdd)
+    case d => shuffles(d.rdd)
+  }.sum
 
   test("star rounds carry NO materialized adjacency: no collect_set / " +
        "ObjectHashAggregate anywhere in either star's plan (r10 verdict #1)") {
     // the O(component)-state hazard: a converged giant component's
     // entire membership in one aggregation buffer. Each star must be one
-    // exchange, a sort and a streaming scan: no aggregate at all
-    val edges = edgesDf(Seq((1L, 4L), (6L, 1L), (3L, 2L), (6L, 5L)))
-    val helper = new AdaptiveSparkPlanHelper {}
-    for ((stars, round) <- Seq[(Int, () => Unit)](
-           1 -> (() => StarOps.smallStar(edges)),
-           2 -> (() => StarOps.smallStar(StarOps.largeStarLazy(edges).pairs)))) {
-      val plan = checkpointPlan(round())
-      val text = plan.toString
-      assert(!text.contains("collect_set"), text)
-      assert(!text.contains("ObjectHashAggregate"), text)
-      assert(helper.collect(plan) { case a: HashAggregateExec => a }.isEmpty, text)
-      assert(helper.collect(plan) { case e: ShuffleExchangeExec => e }.size === stars, text)
-    }
-    // run's rounds execute the planned round, not smallStar's action:
-    // the same two stars, prepared without AQE
-    val plan = ConnectedComponents.plannedRound(edges)(edges.queryExecution.toRdd)
+    // exchange, a sort and a streaming scan: no aggregate at all. Every
+    // star (both of run's and both Dataset-level ones) plans only
+    // sortedBy's exchange and sort, prepared without AQE
+    val sorted = StarOps.sortedBy(spark)
+    val plan = sorted(spark.sparkContext.emptyRDD[InternalRow])
     val text = plan.toString
     assert(!text.contains("collect_set"), text)
     assert(!text.contains("ObjectHashAggregate"), text)
     assert(plan.collect { case a: HashAggregateExec => a }.isEmpty, text)
-    assert(plan.collect { case e: ShuffleExchangeExec => e }.size === 2, text)
+    assert(plan.collect { case e: ShuffleExchangeExec => e }.size === 1, text)
     assert(plan.collect { case a: AdaptiveSparkPlanExec => a }.isEmpty, text)
+    // one shuffle per star: a lone small star, and a round's two stars
+    val edges = edgesDf(Seq((1L, 4L), (6L, 1L), (3L, 2L), (6L, 5L))).queryExecution.toRdd
+    val (small, _) = StarOps.star(sorted, edges, large = false)
+    assert(shuffles(small) === 1)
+    val (large, _) = StarOps.star(sorted, edges, large = true)
+    assert(shuffles(StarOps.star(sorted, large, large = false)._1) === 2)
   }
 
   test("a large-star change count read before any action over its pairs " +
@@ -161,6 +146,40 @@ class ConnectedComponentsSpec extends SparkSpec {
     val ls = StarOps.largeStarLazy(edgesDf(Seq((1L, 2L), (2L, 3L))))
     val err = intercept[IllegalStateException](ls.changeCount())
     assert(err.getMessage.contains("before any action"))
+  }
+
+  test("star counts are exact: two actions over one large star's pairs, then " +
+       "the small star, count as one run") {
+    // two components that need more than one round, with a self-loop and
+    // a duplicate, so every count is > 0
+    val g = edgesDf((0L until 12L).map(i => (i, i + 1)) ++
+      Seq((20L, 24L), (24L, 21L), (21L, 23L), (23L, 22L), (22L, 22L), (20L, 24L)))
+    val once = StarOps.largeStarLazy(g)
+    val onceSmall = StarOps.smallStar(once.pairs)
+    val want = (once.changeCount(), once.nonStar(), onceSmall.changeCount)
+    assert(want._1 > 0 && want._2 > 0 && want._3 > 0, want)
+    val twice = StarOps.largeStarLazy(g)
+    assert(twice.pairs.count() === twice.pairs.collect().length.toLong)
+    val twiceSmall = StarOps.smallStar(twice.pairs)
+    assert((twice.changeCount(), twice.nonStar(), twiceSmall.changeCount) === want)
+  }
+
+  test("a null edge endpoint is rejected by run, runAuto on both paths, " +
+       "runContracted and the chained stars") {
+    val s = spark; import s.implicits._
+    val edges = Seq[(java.lang.Long, java.lang.Long)]((1L, 2L), (2L, null), (3L, 4L))
+      .toDF("src", "dst")
+    def rejected(solve: => Any): Unit = {
+      val e = intercept[Exception](solve)
+      val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      assert(causes.exists(c => c.isInstanceOf[IllegalArgumentException] &&
+        c.getMessage.contains("null edge endpoint")), e)
+    }
+    rejected(ConnectedComponents.run(edges))
+    rejected(ConnectedComponents.runAuto(edges))
+    rejected(ConnectedComponents.runAuto(edges, smallGraphThreshold = 0L))
+    rejected(ConnectedComponents.runContracted(edges))
+    rejected(StarOps.smallStar(StarOps.largeStarLazy(edges).pairs))
   }
 
   test("README example: full CC run (labels = component min, incl. self-pair)") {
@@ -344,8 +363,7 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(res.contraction === Some((nodes, 0L)))
     // its exchange and sort plan without AQE, which would add a
     // map-stage job
-    val sorted = ConnectedComponents.sortedByNode(spark,
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.catalyst.InternalRow])
+    val sorted = StarOps.sortedBy(spark)(spark.sparkContext.emptyRDD[InternalRow])
     assert(sorted.collect { case a: AdaptiveSparkPlanExec => a }.isEmpty, sorted)
     assert(sorted.collect { case e: ShuffleExchangeExec => e }.size === 1, sorted)
     // the only checkpoint under the labels is the contraction scan's
